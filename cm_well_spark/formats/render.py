@@ -466,16 +466,6 @@ def _xml_escape_str(s: str) -> str:
     return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;").replace('"', "&quot;")
 
 
-def atom_feed_open(
-    search_url: str, total: int, offset: int, length: int, extra_params: str = ""
-) -> str:
-    """The feed envelope with pagination links — prepend to the rendered
-    entry lines, close with ATOM_CLOSE."""
-    return ATOM_OPEN + "".join(
-        atom_pagination_links(search_url, total, offset, length, extra_params)
-    )
-
-
 FORMATTERS = {
     "json": to_json_rows,
     "jsonl": to_jsonl,

@@ -52,25 +52,11 @@ from cm_well_spark.model.lakehouse import (
     merge_predicate_stats,
     triples_of,
 )
+from cm_well_spark.plans import keyset
+from cm_well_spark.plans.keyset import restrict
 
 _INF_DELTA = "infotons_delta"
 _TRI_DELTA = "triples_delta"
-
-# above this many distinct paths the isin literal stops being a sane
-# pushdown predicate — and a forced broadcast of the affected-path set
-# stops being safe (a backfill batch touching millions of paths would
-# OOM the executors exactly like an unbounded broadcast dim). Both the
-# write-side isin route and the read-side reconcile broadcasts use the
-# same counted gate; above it we hand AQE a plain join.
-_ISIN_PUSHDOWN_CAP = 100_000
-
-
-def _gated_broadcast(affected: DataFrame, n_affected: int) -> DataFrame:
-    """Broadcast the affected-path set only when it is provably bounded;
-    otherwise return it un-hinted and let AQE pick the join strategy
-    (sort-merge / shuffled-hash for a backfill-sized set)."""
-    return F.broadcast(affected) if n_affected <= _ISIN_PUSHDOWN_CAP else affected
-
 
 def _delta_batches(out: str, name: str) -> list[str]:
     d = os.path.join(out, name)
@@ -85,37 +71,30 @@ def _read_base_infotons(spark: SparkSession, out: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out, "infotons"))
 
 
-def reconciled_infotons(spark: SparkSession, out: str) -> DataFrame:
-    """Merge-on-read doc table: base + all delta batches, `current`
-    recomputed per path for delta-affected paths only (window over the
-    affected slice; broadcast anti-join passes the untouched bulk
-    through with zero shuffle)."""
+def _reconciled(spark: SparkSession, out: str) -> tuple[DataFrame, DataFrame | None]:
+    """(merge-on-read doc table, delta-affected path frame or None)."""
     base = _read_base_infotons(spark, out)
     batches = _delta_batches(out, _INF_DELTA)
     if not batches:
-        return base
+        return base, None
     deltas = spark.read.parquet(*batches).select(*base.columns)
-    affected = deltas.select(F.col("path").alias("__ap")).distinct()
-    # counted gate: the count is an O(delta) action; a normal-cadence
-    # batch broadcasts, a millions-of-paths backfill falls through to AQE
-    n_affected = affected.count()
-    untouched = base.alias("__b").join(
-        _gated_broadcast(affected.alias("__a"), n_affected),
-        F.col("__b.path") == F.col("__a.__ap"),
-        "left_anti",
-    )
-    touched = (
-        base.alias("__b2")
-        .join(
-            _gated_broadcast(affected.alias("__a2"), n_affected),
-            F.col("__b2.path") == F.col("__a2.__ap"),
-            "left_semi",
-        )
-        .unionByName(deltas)
-    )
+    affected = deltas.select("path").distinct()
+    # semi first: its counted bound also brings the key-range envelope;
+    # every later restriction by `affected` reuses the one checkpoint
+    touched = restrict(base, "path", affected).unionByName(deltas)
+    untouched = restrict(base, "path", affected, anti=True)
     w = Window.partitionBy("path").orderBy(F.desc("index_time"))
     touched = touched.withColumn("current", F.row_number().over(w) == 1)
-    return untouched.unionByName(touched)
+    return untouched.unionByName(touched), affected
+
+
+def reconciled_infotons(spark: SparkSession, out: str) -> DataFrame:
+    """Merge-on-read doc table: base + all delta batches, `current`
+    recomputed per path for delta-affected paths only (window over the
+    affected slice; the untouched bulk passes through an anti
+    restriction — a broadcast anti-join, zero shuffle, for a bounded
+    affected set)."""
+    return _reconciled(spark, out)[0]
 
 
 def reconciled_triples(spark: SparkSession, out: str) -> DataFrame:
@@ -124,23 +103,11 @@ def reconciled_triples(spark: SparkSession, out: str) -> DataFrame:
     (index_time/current changed, so their EAV rows are re-exploded from
     the reconciled doc slice — batch-sized work)."""
     base = spark.read.parquet(os.path.join(out, "triples"))
-    batches = _delta_batches(out, _INF_DELTA)
-    if not batches:
+    inf, affected = _reconciled(spark, out)
+    if affected is None:
         return base
-    deltas = spark.read.parquet(*batches)
-    affected = deltas.select(F.col("path").alias("__ap")).distinct()
-    n_affected = affected.count()
-    untouched = base.alias("__t").join(
-        _gated_broadcast(affected.alias("__a"), n_affected),
-        F.col("__t.s") == F.col("__a.__ap"),
-        "left_anti",
-    )
-    inf = reconciled_infotons(spark, out)
-    touched_docs = inf.alias("__i").join(
-        _gated_broadcast(affected.alias("__a2"), n_affected),
-        F.col("__i.path") == F.col("__a2.__ap"),
-        "left_semi",
-    )
+    touched_docs = restrict(inf, "path", affected)
+    untouched = restrict(base, "s", affected, anti=True)
     return untouched.unionByName(triples_of(touched_docs).select(*base.columns))
 
 
@@ -172,11 +139,11 @@ def write_batch(spark: SparkSession, out: str, commands: DataFrame) -> int:
       - the index_time watermark comes from `_WATERMARK.json` (written
         here and by compact), not a max() scan of 8.9M+ rows — the
         aggregate runs once to seed a store that predates the file;
-      - the affected-path set (batch-sized by definition) collects to
-        the driver and pushes into the base read as an `isin` literal,
-        so the parquet scan FILE-SKIPS on path min-max ranges (exactly
-        what compaction's clustering buys) instead of scanning the
-        store to feed a semi-join;
+      - merge_versions restricts the base read once to the batch's
+        path set (merge.command_paths, a bounded collect), so the
+        parquet scan FILE-SKIPS on path min-max ranges (exactly what
+        compaction's clustering buys) instead of scanning the store to
+        feed a semi-join;
       - only merge_versions' affected-path output is decorated
         (decorate_versions — the same writer semantics as
         apply_commands) and appended; no untouched row is ever read,
@@ -188,20 +155,7 @@ def write_batch(spark: SparkSession, out: str, commands: DataFrame) -> int:
     base_max = _read_watermark(out)
     if base_max is None:
         base_max = inf.agg(F.max("index_time").alias("m")).first()["m"] or 0
-    batch_paths = [r["p"] for r in commands.select(F.col("path").alias("p")).distinct().collect()]
-    base = inf
-    if batch_paths and len(batch_paths) <= _ISIN_PUSHDOWN_CAP:
-        # The between() envelope is the sargable half: parquet pushes
-        # min/max range filters at ANY batch size, while an IN list
-        # beyond spark.sql.parquet.pushdown.inFilterThreshold (~10)
-        # silently stops pushing — measured 45s vs 5s per batch on the
-        # compacted sf1 store. Envelope prunes row groups; the exact
-        # isin then filters the residue rows.
-        base = inf.where(
-            F.col("path").between(min(batch_paths), max(batch_paths))
-            & F.col("path").isin(batch_paths)
-        )
-    versions = merge_versions(base, commands)
+    versions = merge_versions(inf, commands)
     new_rows = decorate_versions(versions, base_max + 1)
     # writer's best-known `current`: the last version per path IN THIS
     # BATCH (an O(batch) window). Read-side reconciliation recomputes it
@@ -457,20 +411,6 @@ def _intervals(entries: list[tuple[str, str, str]], affected: set[str], next_bid
     return rows, next_bid, file_bid
 
 
-def _assign_buckets(df: DataFrame, key: str, interval_rows, spark: SparkSession) -> DataFrame:
-    """Tag each row with its interval bucket id via a broadcast range
-    join (BroadcastNestedLoopJoin, bounded: |rewritten slice| x
-    |intervals|, and the interval relation is file-count sized — the
-    bounded-dim broadcast the plan audit whitelists)."""
-    iv = spark.createDataFrame(
-        [(b, s, e) for b, s, e in interval_rows], "__bid INT, __lo STRING, __hi STRING"
-    )
-    cond = (F.col(key) >= F.col("__lo")) & (
-        F.col("__hi").isNull() | (F.col(key) < F.col("__hi"))
-    )
-    return df.join(F.broadcast(iv), cond).drop("__lo", "__hi")
-
-
 def _write_buckets(
     df: DataFrame, part_col: str | None, tmp: str, target_rows_per_file: int, sort_keys: list[str]
 ) -> None:
@@ -713,7 +653,7 @@ def compact_incremental(
     disjoint-range invariant this surgery preserves only holds on a
     compaction-produced layout, and every file must carry footer stats),
     per-subdir ranges actually disjoint, the affected path / (p, o) sets
-    bounded by _ISIN_PUSHDOWN_CAP, and the affected file fraction under
+    bounded by keyset.BROADCAST_MAX, and the affected file fraction under
     _INCR_MAX_AFFECTED_FRACTION.
 
     Disjointness is preserved by construction: the key space of each
@@ -744,8 +684,8 @@ def compact_incremental(
     # delta watermark NOW: deltas is lazy, and its files are gone by the
     # bookkeeping step at the end
     delta_max = deltas.agg(F.max("index_time").alias("m")).first()["m"]
-    path_rows = deltas.select("path").distinct().limit(_ISIN_PUSHDOWN_CAP + 1).collect()
-    if len(path_rows) > _ISIN_PUSHDOWN_CAP:
+    path_rows = deltas.select("path").distinct().limit(keyset.BROADCAST_MAX + 1).collect()
+    if len(path_rows) > keyset.BROADCAST_MAX:
         return None
     aff_paths = sorted(r["path"] for r in path_rows)
     # kinds that only exist in the deltas need open intervals of their own
@@ -821,9 +761,7 @@ def _surgical_fold(
 
     inf_dir = os.path.join(out, "infotons")
     tri_dir = os.path.join(out, "triples")
-    aff_paths_df = F.broadcast(
-        spark.createDataFrame([(p,) for p in aff_paths], "__ap STRING")
-    )
+    aff_paths_df = spark.createDataFrame([(p,) for p in aff_paths], "__ap STRING")
 
     # ---- infotons: footer-stat overlap on the leading sort key --------
     inf_ranges = _file_col_ranges(inf_dir, "path")
@@ -872,8 +810,7 @@ def _surgical_fold(
         )
         hit_files |= {
             _rel_under(r["__f"], tri_dir)
-            for r in scan.withColumn("__f", F.input_file_name())
-            .join(aff_paths_df, F.col("s") == F.col("__ap"), "left_semi")
+            for r in restrict(scan.withColumn("__f", F.input_file_name()), "s", aff_paths)
             .select("__f")
             .distinct()
             .collect()
@@ -891,14 +828,12 @@ def _surgical_fold(
         else spark.createDataFrame([], spark.read.parquet(inf_dir).schema)
     )
     rewritten_inf = rewrite_inf(base_slice, aff_paths_df)
-    touched_docs = rewritten_inf.join(
-        aff_paths_df, F.col("path") == F.col("__ap"), "left_semi"
-    )
+    touched_docs = restrict(rewritten_inf, "path", aff_paths)
     new_tri = triples_of(touched_docs).select(*tri_base.columns)
     po_rows = (
-        new_tri.select("p", "o").distinct().limit(_ISIN_PUSHDOWN_CAP + 1).collect()
+        new_tri.select("p", "o").distinct().limit(keyset.BROADCAST_MAX + 1).collect()
     )
-    if len(po_rows) > _ISIN_PUSHDOWN_CAP:
+    if len(po_rows) > keyset.BROADCAST_MAX:
         return None
     new_po: dict[str, list[str]] = {}
     for r in po_rows:
@@ -975,7 +910,7 @@ def _surgical_fold(
     # computed NOW, while the old files are still readable
     per_p_removed = {
         r["p"]: r["n"]
-        for r in tri_slice.join(aff_paths_df, F.col("s") == F.col("__ap"), "left_semi")
+        for r in restrict(tri_slice, "s", aff_paths)
         .groupBy("p")
         .agg(F.count("*").alias("n"))
         .collect()
@@ -984,9 +919,7 @@ def _surgical_fold(
         r["p"]: r["n"]
         for r in new_tri.groupBy("p").agg(F.count("*").alias("n")).collect()
     }
-    rewritten_tri = tri_slice.join(
-        aff_paths_df, F.col("s") == F.col("__ap"), "left_anti"
-    ).unionByName(new_tri)
+    rewritten_tri = restrict(tri_slice, "s", aff_paths, anti=True).unionByName(new_tri)
     iv_rows_tri: list[tuple[str, int, str, str | None]] = []
     for sub, entries in tri_ranges.items():
         rows, bid, _fb = _intervals(entries, tri_affected[sub], bid)
@@ -1100,8 +1033,8 @@ def repair_paths(
         )
     if not paths:
         return {"mode": "repair", "repaired_paths": 0}
-    if len(paths) > _ISIN_PUSHDOWN_CAP:
-        raise ValueError(f"path set exceeds the {_ISIN_PUSHDOWN_CAP}-path surgery cap")
+    if len(paths) > keyset.BROADCAST_MAX:
+        raise ValueError(f"path set exceeds the {keyset.BROADCAST_MAX}-path surgery cap")
     aff_paths = sorted(set(paths))
 
     def rewrite(base_slice, aff_paths_df):

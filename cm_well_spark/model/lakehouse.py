@@ -28,7 +28,10 @@ from pyspark.sql import functions as F
 
 from cm_well_spark.model.builder import build_infotons
 
-DEFAULT_ROOT = os.environ.get("CMW_LAKEHOUSE", "/root/repo/.lakehouse")
+#: the checkout holding the package; default home of the store and of
+#: registry checkpoint dirs
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+DEFAULT_ROOT = os.environ.get("CMW_LAKEHOUSE", os.path.join(REPO_ROOT, ".lakehouse"))
 
 
 def _fingerprint(sf_dir: str) -> str:

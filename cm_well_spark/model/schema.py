@@ -92,17 +92,3 @@ def parent_of(path: str) -> str:
         return "$root"
     cut = path.rstrip("/").rsplit("/", 1)[0]
     return cut if cut else "/"
-
-
-def parent_hierarchy_of(path: str) -> list[str]:
-    """All ancestor prefixes, for recursive-descendants filtering — the
-    Spark analog of ES's `parent_hierarchy` path-hierarchy analyzer
-    (indices_template_new.json settings block)."""
-    out = []
-    p = path
-    while p != "/" and p:
-        p = parent_of(p)
-        if p == "$root":
-            break
-        out.append(p)
-    return out

@@ -230,14 +230,6 @@ def stream(infotons: DataFrame, path: str | None = None, qp: str | None = None, 
     )
 
 
-@dataclass(frozen=True)
-class IteratorState:
-    offset: int
-    path: str | None = None
-    qp: str | None = None
-    descendants: bool = False
-
-
 def create_iterator(path: str | None = None, qp: str | None = None, descendants: bool = False) -> str:
     return encode_token(ConsumeState(0, qp, None, None, path, descendants, False))
 

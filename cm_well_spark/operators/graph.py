@@ -53,12 +53,14 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cm_well_spark.plans.bounds import export_path_bound
 from cm_well_spark.plans.iterative import (
     RELIABLE_CHECKPOINTS,
     iter_checkpoint,
     iter_checkpoint_count,
     iter_checkpoint_lazy,
 )
+from cm_well_spark.plans.keyset import restrict
 
 
 def _static_relation(df: DataFrame, reliable: bool | None = None) -> DataFrame:
@@ -86,16 +88,6 @@ def _reliable_on(reliable: bool | None) -> bool:
 # The TPC-H-shaped reference fields of the test model (builder.py:12-19).
 # Callers on other corpora pass their own list; None = joker (every
 # reference-valued triple, the traversal `_edges` heuristic).
-# sampling frontiers at or under this size push into the scan as an
-# isin predicate (row-group skipping); larger ones semi-join. Bounded
-# driver memory: 10k short path strings.
-FRONTIER_ISIN_MAX = 10_000
-
-#: BFS frontier/visited relations carry an explicit broadcast hint below
-#: this row count (checkpointed LogicalRDDs have no stats, so AQE alone
-#: shuffles the data-scale edge side); above it, plain keyed joins.
-FRONTIER_BROADCAST_MAX = 2_000_000
-
 DEFAULT_LINK_FIELDS = (
     "ofOrder",
     "ofPart",
@@ -282,22 +274,15 @@ def sample_neighborhood(
     scan to the frontier's incident edges first and dedups only that
     bounded subset — at corpus scale a whole-graph edge distinct is a
     full shuffle spent on edges the sample never looks at. And because
-    the frontier is bounded by construction, each hop materializes it,
-    counts it, and when small pushes its paths INTO the scan as an
-    `isin` predicate (parquet row-group min/max skipping — the
-    traversal.py counted-checkpoint discipline) instead of semi-joining
-    against the full scan; larger frontiers fall back to the semi-join
-    and AQE plans it."""
+    the frontier is bounded by construction, each hop restricts the scan
+    to it through plans/keyset (one counted checkpoint that also yields
+    the key range, so the scan gets a sargable envelope and a broadcast
+    semi-join)."""
     edges = reference_edges(triples, fields, dedup=False)
-    frontier = seeds.select(F.col(seeds.columns[0]).alias("src")).distinct()
+    frontier = seeds.select(seeds.columns[0])
     hops: list[DataFrame] = []
     for h, fanout in enumerate(fanouts, start=1):
-        frontier, n_frontier = iter_checkpoint_count(frontier, reliable)
-        if n_frontier <= FRONTIER_ISIN_MAX:
-            paths = [r["src"] for r in frontier.collect()]
-            incident = edges.where(F.col("src").isin(paths))
-        else:
-            incident = edges.join(frontier, "src", "left_semi")
+        incident = restrict(edges, "src", frontier)
         ranked = (
             incident.distinct()
             .withColumn(
@@ -318,7 +303,7 @@ def sample_neighborhood(
         # re-deriving the edges-scan lineage
         ranked = iter_checkpoint_lazy(ranked, reliable)
         hops.append(ranked)
-        frontier = ranked.select(F.col("dst").alias("src")).distinct()
+        frontier = ranked.select("dst")
     out = hops[0]
     for nxt in hops[1:]:
         out = out.unionByName(nxt)
@@ -663,14 +648,12 @@ def bfs_distances(
     memory, half the materialization). Each hop is then one (or, for
     undirected walks, two same-job) equi-join(s) of the materialized
     projection against the frontier plus one left-anti join against the
-    visited set. Both small relations carry COUNTED broadcast hints
-    (their counts are already actions each round — checkpointed
-    LogicalRDDs have no stats, so without the hint Spark shuffles the
-    full edge projection per hop; the counted-gate discipline from
-    compaction/_gated_broadcast applies: hint only below the cap,
-    fall back to a plain keyed join above it). Measured at sf1 (3-hop
-    walk, 39M-row symmetric projection, quiet box): ~28s this shape
-    (6s materialize + ~7s/hop map-side join); the rejected variants —
+    visited set. Both small relations go through plans/keyset with
+    their round counts as proofs (the counts are already actions each
+    round — checkpointed LogicalRDDs have no stats, so without a
+    broadcast Spark shuffles the full edge projection per hop). Measured
+    at sf1 (3-hop walk, 39M-row symmetric projection, quiet box): ~28s
+    this shape (6s materialize + ~7s/hop map-side join); the rejected variants —
     un-hinted joins shuffle the full projection per hop (~200s), and
     pushing the frontier in as an isin literal evaluates a
     thousands-wide predicate over every scanned row (~90s; scattered
@@ -699,35 +682,22 @@ def bfs_distances(
         .select("path", F.lit(0).cast("long").alias("distance")),
         reliable,
     )
-    frontier = visited.select("path")
+    frontier = export_path_bound(visited.select("path"), n_frontier)
     n_visited = n_frontier
     for d in range(1, max_depth + 1):
-        f = frontier.select(F.col("path").alias("src"))
-        if n_frontier <= FRONTIER_BROADCAST_MAX:
-            f = F.broadcast(f)
-        v = visited.select("path")
-        if n_visited <= FRONTIER_BROADCAST_MAX:
-            v = F.broadcast(v)
-        hop = edges.join(f, "src").select(F.col("dst").alias("path"))
+        hop = restrict(edges, "src", frontier).select(F.col("dst").alias("path"))
         if not directed:
             hop = hop.unionAll(
-                edges.join(f, edges["dst"] == f["src"]).select(
-                    edges["src"].alias("path")
-                )
+                restrict(edges, "dst", frontier).select(F.col("src").alias("path"))
             )
-        if n_visited <= FRONTIER_BROADCAST_MAX:
-            # anti BEFORE distinct (r12, guide §2.3): with a broadcast
-            # visited set the anti join is map-side, so already-visited
-            # candidates — the bulk of later hops' matches — drop before
-            # the distinct's exchange instead of shuffling through it.
-            # Filter and distinct commute, so rows are identical
-            # (signature-pinned; sf1 A/B best 12.5 vs 13.2 s, 3/4 rounds
-            # better). An unbroadcastable visited set keeps distinct
-            # first: there the anti join shuffles too, and deduping
-            # before that shuffle is what bounds its bytes.
-            nxt = hop.join(v, "path", "left_anti").distinct()
-        else:
-            nxt = hop.distinct().join(v, "path", "left_anti")
+        # anti BEFORE distinct (r12, guide §2.3): with a broadcast visited
+        # set the anti join is map-side, so already-visited candidates —
+        # the bulk of later hops' matches — drop before the distinct's
+        # exchange instead of shuffling through it. Filter and distinct
+        # commute, so rows are identical (signature-pinned; sf1 A/B best
+        # 12.5 vs 13.2 s, 3/4 rounds better).
+        seen = export_path_bound(visited.select("path"), n_visited)
+        nxt = restrict(hop, "path", seen, anti=True).distinct()
         nxt = nxt.select("path", F.lit(d).cast("long").alias("distance"))
         nxt, n_frontier = iter_checkpoint_count(nxt, reliable)
         if n_frontier == 0:
@@ -736,7 +706,7 @@ def bfs_distances(
         # count job (or the caller's action on the last round)
         visited = iter_checkpoint_lazy(visited.unionByName(nxt), reliable)
         n_visited += n_frontier
-        frontier = nxt.select("path")
+        frontier = export_path_bound(nxt.select("path"), n_frontier)
     if not _reliable_on(reliable):
         # every hop ran during construction, so the edge cache is spent:
         # the returned relation reads hop-round blocks only. Freeing it
@@ -917,13 +887,11 @@ def personalized_pagerank(
     FRONTIER-DRIVEN plan (r12, guide §1.2/§2.4): PPR's support is the
     set reachable from the seeds, so every round only ever reads rows
     whose src has nonzero rank — the frontier (reached ∪ seeds; the
-    teleport term re-injects seed mass every round). Each round filters
-    the RAW pruned edge scan down to the frontier BEFORE the distinct
-    (literal isin pushdown under FRONTIER_ISIN_MAX for row-group
-    skipping, the sample_neighborhood discipline; counted-broadcast
-    semi-join above it, plain keyed semi-join past
-    FRONTIER_BROADCAST_MAX), so per-round work scales with the reach,
-    not the corpus: out-degrees, contribution join and sum all run on
+    teleport term re-injects seed mass every round). Each round restricts
+    the RAW pruned edge scan to the frontier BEFORE the distinct
+    (plans/keyset: round 0 by the seed list, later rounds by the
+    frontier frame and one counted checkpoint each), so per-round work
+    scales with the reach, not the corpus: out-degrees, contribution join and sum all run on
     the frontier-filtered relation. Nothing is persisted — the
     whole-graph edge/odeg materialization the old shape paid (and had
     to persist+unpersist around) is gone; measured at sf0.1 (2-seed
@@ -945,31 +913,25 @@ def personalized_pagerank(
     if not seeds:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     seed_list = sorted(set(seeds))
-    is_seed = F.col("path").isin(seed_list)
+    # seed membership is a joined flag, not an IN literal: the seed set
+    # may be any size
+    seed_marks = triples.sparkSession.createDataFrame(
+        [(s, True) for s in seed_list], "path string, __seed boolean"
+    )
     # teleport mass is SPLIT across the seed set ((1-d)/|S| each, initial
     # mass 1/|S| each) so total rank mass stays 1 regardless of seed-set
     # size and scores are comparable across seed sets (ADVICE r9: the
     # unnormalized per-seed (1-d) convention made mass scale with |S|)
     share = 1.0 / len(seed_list)
-    reset = F.when(is_seed, F.lit((1.0 - damping) * share)).otherwise(F.lit(0.0))
+    reset = F.when(F.col("__seed"), F.lit((1.0 - damping) * share)).otherwise(F.lit(0.0))
     rank_expr = reset + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
     pairs = reference_edges(triples, fields, dedup=False)
-    frontier_lits: list[str] | None = list(seed_list)
-    frontier_df: DataFrame | None = None
-    n_frontier = len(seed_list)
-    contribs: DataFrame | None = None
+    frontier: list[str] | DataFrame = seed_list
     for i in range(iterations):
-        if frontier_lits is not None:
-            fe = pairs.where(F.col("src").isin(frontier_lits))
-        else:
-            f = frontier_df
-            if n_frontier <= FRONTIER_BROADCAST_MAX:
-                f = F.broadcast(f)
-            fe = pairs.join(f, "src", "left_semi")
         # distinct AFTER the frontier filter: filter and distinct commute
         # on (src, dst), so this is the same per-src edge multiset (one
         # row each) the whole-graph distinct produced — at frontier cost
-        fe = fe.distinct()
+        fe = restrict(pairs, "src", frontier).distinct()
         odeg = fe.groupBy("src").agg(F.count("*").alias("odeg"))
         if i == 0:
             cranks = odeg.select("src", (F.lit(share) / F.col("odeg")).alias("c"))
@@ -977,54 +939,36 @@ def personalized_pagerank(
             cranks = (
                 odeg.withColumnRenamed("src", "path")
                 .join(contribs, "path", "left")
+                .join(seed_marks, "path", "left")
                 .select(
                     F.col("path").alias("src"),
                     (rank_expr / F.col("odeg")).alias("c"),
                 )
                 .where(F.col("c") != 0.0)
             )
-        contribs = (
+        # lazy: the next round's frontier count (or, after the last
+        # round, the caller's action) materializes the blocks once, and
+        # every later reader hits them; the checkpoint also bounds plan
+        # depth, so no %8 depth guard is needed here
+        contribs = iter_checkpoint_lazy(
             fe.join(cranks, "src")
             .groupBy(F.col("dst").alias("path"))
-            .agg(F.sum("c").alias("contrib"))
+            .agg(F.sum("c").alias("contrib")),
+            reliable,
         )
-        if (i + 1) < iterations:
-            # the round's reach count rides its own materialization job
-            # (iter_checkpoint_count); the checkpoint also bounds plan
-            # depth, so no %8 depth guard is needed here
-            contribs, n_reached = iter_checkpoint_count(contribs, reliable)
-            n_frontier = n_reached + len(seed_list)
-            if n_frontier <= FRONTIER_ISIN_MAX:
-                # bounded driver collect (counted FIRST — the
-                # sample_neighborhood isin discipline): literal frontier
-                # pushes into the scan as an In predicate
-                reached = [r["path"] for r in contribs.select("path").collect()]
-                frontier_lits = sorted(set(reached) | set(seed_list))
-                n_frontier = len(frontier_lits)
-            else:
-                frontier_lits = None
-                seed_df = pairs.sparkSession.createDataFrame(
-                    [(s,) for s in seed_list], "src string"
-                )
-                frontier_df = (
-                    contribs.select(F.col("path").alias("src"))
-                    .unionByName(seed_df)
-                    .distinct()
-                )
+        frontier = contribs.select("path").unionByName(seed_marks.select("path"))
     # support = contribution receivers ∪ seeds present in the graph
     # (a seed with no in-edges keeps its teleport mass: rank = reset).
-    # Seed-membership probes are literal isin pushdowns — tiny scans.
     seeds_in_graph = (
-        pairs.where(F.col("src").isin(seed_list)).select(F.col("src").alias("path"))
-        .unionAll(
-            pairs.where(F.col("dst").isin(seed_list)).select(F.col("dst").alias("path"))
-        )
+        restrict(pairs, "src", seed_list).select(F.col("src").alias("path"))
+        .unionAll(restrict(pairs, "dst", seed_list).select(F.col("dst").alias("path")))
         .distinct()
     )
-    part1 = contribs.select("path", rank_expr.alias("rank"))
+    part1 = contribs.join(seed_marks, "path", "left").select("path", rank_expr.alias("rank"))
     part2 = (
         seeds_in_graph.join(contribs, "path", "left_anti")
         .withColumn("contrib", F.lit(None).cast("double"))
+        .withColumn("__seed", F.lit(True))
         .select("path", rank_expr.alias("rank"))
     )
     return part1.unionByName(part2).where(F.col("rank") > 0)

@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cm_well_spark.model.schema import FIELD_VALUE_TYPE
+from cm_well_spark.plans import keyset
+from cm_well_spark.plans.keyset import restrict
 
 # ---------------------------------------------------------------------------
 # pure merge logic (python dicts: fields = {name: [fv dict]})
@@ -238,74 +240,41 @@ def _merge_group(base_pdf: pd.DataFrame, cmd_pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-# Cap for routing the write plan through literal isin predicates. r12
-# (ADVICE r11 item 5): the apply_commands plan embeds the list at THREE
-# sites, and the py4j + analyzer cost of the In expressions grows
-# superlinearly — measured at sf0.1 (3 reps, build = plan construction,
-# exec = .count of the rewritten 986k-row table):
-#   batch      isin build / exec      join build / exec
-#   4          0.62 / 0.99            0.51 / 0.71
-#   100        0.51 / 1.46            0.43 / 1.96
-#   500        3.17 / 5.70            1.34 / 6.38
-#   1,000      1.25 / 6.08            0.39 / 6.36
-#   10,000     9.9-28.8 / ~40         0.5 / ~40
-#   95,000     101-120 / 66-81        0.5-0.6 / 45-102
-# The isin route's storage-pruning edge only survives below a few
-# hundred scattered paths; past ~500 the exec advantage is gone and the
-# driver cost explodes. 256 keeps the measured-win region; bigger
-# batches fall back to the broadcast semi/anti joins (AQE-sized, no
-# driver literals). model/compaction keeps its own 100k gate: its isin
-# is one site behind a sargable between() envelope, a different curve.
-_ISIN_PUSHDOWN_CAP = 256
+def command_paths(commands: DataFrame) -> list[str] | DataFrame:
+    """The batch's distinct command paths: a driver list when there are
+    at most keyset.BROADCAST_MAX of them (one limit-capped job), else the
+    path frame itself — the key set every affected-path restriction of
+    the write plan goes through (plans/keyset.restrict).
 
-
-def _bounded_command_paths(commands: DataFrame) -> list[str] | None:
-    """Distinct command paths as driver literals when bounded by the cap
-    (one narrow limit-capped job over the command batch); None above it.
-
-    A literal path set turns every affected-path join in the write plan
-    into an isin predicate that reaches the STORAGE layer — parquet
-    row-group min/max or in-memory batch pruning on the path-sorted store
-    — instead of a runtime semi/anti join that must deserialize the wide
-    fields column of every row before filtering (measured 4x on the
-    current-flip plan at sf0.1: the cogroup base side scanned all 891k
-    cached rows' maps to keep 4 paths)."""
-    # distinct-then-limit measured FASTER than the exchange-free plain
-    # limit (A/B min-of-4: build 0.90 s vs 1.46 s): collect on a bare
-    # limit goes through executeTake's incremental partition escalation —
-    # several serial mini-jobs — while the distinct's single shuffle is
-    # one round trip. Keep the distinct.
-    rows = commands.select("path").distinct().limit(_ISIN_PUSHDOWN_CAP + 1).collect()
-    if len(rows) > _ISIN_PUSHDOWN_CAP:
-        return None
+    A literal path set turns those restrictions into predicates that
+    reach the STORAGE layer — parquet row-group min/max or in-memory
+    batch pruning on the path-sorted store — instead of runtime joins
+    that deserialize the wide fields column of every row (measured 4x on
+    the current-flip plan at sf0.1: the cogroup base side scanned all
+    891k cached rows' maps to keep 4 paths). Distinct-then-limit
+    measured faster than a plain limit (A/B min-of-4: build 0.90 s vs
+    1.46 s): collect on a bare limit escalates through several serial
+    executeTake mini-jobs, the distinct's single shuffle is one."""
+    rows = commands.select("path").distinct().limit(keyset.BROADCAST_MAX + 1).collect()
+    if len(rows) > keyset.BROADCAST_MAX:
+        return commands.select("path")
     return [r["path"] for r in rows]
 
 
 def merge_versions(
     infotons: DataFrame,
     commands: DataFrame,
-    affected_paths: list[str] | None = None,
+    paths: list[str] | DataFrame | None = None,
 ) -> DataFrame:
     """Fold commands into new version rows (one per command), distributed
-    per-path via cogrouped applyInPandas. Only affected paths are read.
-    `affected_paths` (optional, from _bounded_command_paths) routes the
-    base read through an isin literal instead of a runtime semi join."""
-    if affected_paths is not None:
-        base = infotons.where(
-            F.col("current")
-            & (F.col("path").isin(affected_paths) if affected_paths else F.lit(False))
-        ).select("path", "kind", "fields", "protocol")
-    else:
-        # alias both sides: commands may derive from this very table (e.g.
-        # recursive delete), which otherwise trips the ambiguous-self-join
-        # check
-        affected = commands.select(F.col("path").alias("__ap")).distinct().alias("__aff")
-        base = (
-            infotons.alias("__base")
-            .where(F.col("current"))
-            .join(F.broadcast(affected), F.col("__base.path") == F.col("__aff.__ap"), "left_semi")
-            .select("path", "kind", "fields", "protocol")
-        )
+    per-path via cogrouped applyInPandas. Only the current versions of
+    the affected paths are read: `paths` (from command_paths, computed
+    here when omitted) restricts the base."""
+    if paths is None:
+        paths = command_paths(commands)
+    base = restrict(infotons.where(F.col("current")), "path", paths).select(
+        "path", "kind", "fields", "protocol"
+    )
     return (
         base.groupBy("path")
         .cogroup(commands.groupBy("path"))
@@ -366,8 +335,8 @@ def apply_commands(infotons: DataFrame, commands: DataFrame, index_time_base: in
 
     index_time: writer-assigned, monotonically after the table's max
     (the reference assigns indexTime at index time, SURVEY §3.4)."""
-    cmd_paths = _bounded_command_paths(commands)
-    versions = merge_versions(infotons, commands, affected_paths=cmd_paths)
+    paths = command_paths(commands)
+    versions = merge_versions(infotons, commands, paths)
     if index_time_base is None:
         # The table max rides the plan as a broadcast 1-row cross join
         # instead of a serial .first() probe job at CONSTRUCTION (r11,
@@ -399,23 +368,10 @@ def apply_commands(infotons: DataFrame, commands: DataFrame, index_time_base: in
     # now routes through the current-flip window instead of the untouched
     # branch; the window recomputes the identical flag (one current =
     # latest index_time), so the output is row-identical.
-    # Only affected paths pay the current-flip window; the untouched bulk of
-    # the table passes through untouched. With a bounded command batch the
-    # split is two isin predicates that prune at the storage layer (the
-    # null-keep arm makes ~isin exactly anti-join-equivalent); an unbounded
-    # batch falls back to broadcast anti/semi joins.
-    if cmd_paths is not None:
-        hit = F.col("path").isin(cmd_paths) if cmd_paths else F.lit(False)
-        untouched = infotons.where(~hit | F.col("path").isNull())
-        touched_old = infotons.where(hit)
-    else:
-        affected = commands.select(F.col("path").alias("__ap")).distinct()
-        untouched = infotons.alias("__t").join(
-            F.broadcast(affected.alias("__a1")), F.col("__t.path") == F.col("__a1.__ap"), "left_anti"
-        )
-        touched_old = infotons.alias("__t2").join(
-            F.broadcast(affected.alias("__a2")), F.col("__t2.path") == F.col("__a2.__ap"), "left_semi"
-        )
+    # Only affected paths pay the current-flip window; the untouched bulk
+    # of the table passes through untouched.
+    untouched = restrict(infotons, "path", paths, anti=True)
+    touched_old = restrict(infotons, "path", paths)
     touched = touched_old.unionByName(new_rows.select(*infotons.columns))
     w = Window.partitionBy("path").orderBy(F.desc("index_time"))
     # current marks the latest version per path — tombstones included; the

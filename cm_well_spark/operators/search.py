@@ -25,9 +25,10 @@ from pyspark.sql import functions as F
 
 from cm_well_spark.parsers.qp import FieldFilter, parse_qp
 from cm_well_spark.parsers.sort import DEFAULT_SORT, SortKey, parse_sort_by
-from cm_well_spark.plans.bounds import export_path_bound
+from cm_well_spark.plans.bounds import export_path_bound, proven_path_bound
 from cm_well_spark.plans.compile import SYSTEM_COLUMNS, compile_filter
-from cm_well_spark.plans.iterative import iter_checkpoint, iter_checkpoint_count
+from cm_well_spark.plans.iterative import iter_checkpoint
+from cm_well_spark.plans.keyset import restrict
 
 MAX_OFFSET = 1_000
 MAX_LENGTH = 10_000
@@ -143,27 +144,18 @@ def search(
 
             paths, residual, bound = index_search_paths(triples, ff, stats)
             if paths is not None:
-                # Broadcast the candidate set when provably bounded: AQE
-                # would convert this SMJ->BHJ only AFTER the doc side has
-                # already shuffled its wide fields-map rows (measured 10+s
-                # at sf1 for 8.9M docs vs ~2s broadcast). The cheapest
-                # proof is predicate_stats (r11): candidates are a subset
-                # of each filtered predicate's subjects, so a stats-derived
-                # upper bound under the cap licenses the broadcast hint
-                # with ZERO extra jobs. Only when stats can't prove it do
-                # we fall back to the r6 counted-checkpoint proof (one
-                # materialization + one narrow count) — same contract as
-                # traversal.py's frontier broadcasts.
-                from cm_well_spark.operators.traversal import BROADCAST_PATHS_MAX
-
-                if bound is not None and bound <= BROADCAST_PATHS_MAX:
-                    df = df.join(F.broadcast(paths), "path", "left_semi")
-                    proven_bound = bound
-                else:
-                    paths, n_paths = iter_checkpoint_count(paths)
-                    bounded = n_paths <= BROADCAST_PATHS_MAX
-                    df = df.join(F.broadcast(paths) if bounded else paths, "path", "left_semi")
-                    proven_bound = n_paths
+                # The candidate set's bound is predicate_stats' proof when
+                # there is one (r11): candidates are a subset of each
+                # filtered predicate's subjects, so no extra job. Without
+                # it restrict pays one counted checkpoint and exports the
+                # count on `paths`. Either way a bounded set broadcasts:
+                # AQE would convert the SMJ only AFTER the doc side has
+                # shuffled its wide fields-map rows (measured 10+s at sf1
+                # for 8.9M docs vs ~2s broadcast).
+                if bound is not None:
+                    export_path_bound(paths, bound)
+                df = restrict(df, "path", paths)
+                proven_bound = proven_path_bound(paths)
                 if residual is not None:
                     df = df.where(residual)
             else:
@@ -339,10 +331,10 @@ def read_uuid(infotons: DataFrame, uuid: str) -> DataFrame:
 
 
 def batch_get(infotons: DataFrame, paths_df: DataFrame) -> DataFrame:
-    """S3 `_out`: bag of infotons for a set of paths; broadcast the (small)
-    key set so the big table is never shuffled (CRUDServiceFS.scala:237)."""
-    keys = paths_df.select(F.col(paths_df.columns[0]).alias("path")).distinct()
-    return infotons.where(F.col("current")).join(F.broadcast(keys), "path", "left_semi")
+    """S3 `_out`: bag of infotons for a set of paths (the first column of
+    `paths_df`); a bounded key set broadcasts, so the big table is never
+    shuffled (CRUDServiceFS.scala:237)."""
+    return restrict(infotons.where(F.col("current")), "path", paths_df)
 
 
 def irretrievable_paths(infotons: DataFrame, paths_df: DataFrame) -> DataFrame:

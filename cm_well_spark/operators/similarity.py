@@ -223,7 +223,9 @@ def lsh_topk_batch(
                 F.raise_error(
                     F.concat(
                         F.lit("lsh_topk_batch: vector width "),
-                        F.size(col).cast("string"),
+                        # a NULL vector has no width; say so instead
+                        # of nulling the whole message
+                        F.coalesce(F.size(col).cast("string"), F.lit("null")),
                         F.lit(f" != dim={dim}"),
                     )
                 )

@@ -15,10 +15,9 @@ Cormode & Hadjieleftheriou 2008 survey):
           c = max(8, ceil(2/phi)) — if f_b(x) <= N_b/c in every batch
           then f(x) <= N/c < phi*N, so every true heavy hitter is
           nominated either way.
-  pass 2  exact recount of the candidate set only (isin pushdown when
-          the set is small, gated semi-join otherwise — the
-          compaction.py counted-gate discipline), thresholded against
-          the total count inside the same plan.
+  pass 2  exact recount of the candidate set only (plans/keyset
+          restrict: a literal list or a counted broadcast semi-join),
+          thresholded against the total count inside the same plan.
 
 Why this matters at 100 TB: the naive `groupBy(key).count()` shuffles
 every distinct key (billions of n-grams); here the only full-corpus
@@ -39,15 +38,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from cm_well_spark.plans.iterative import iter_checkpoint, iter_checkpoint_count
 
-#: above this many candidates the isin literal / forced broadcast stops
-#: being sane; fall back to a plain semi-join and let AQE decide.
-_CANDIDATE_CAP = 100_000
-
-#: isin literals beyond this go through the semi-join instead (same
-#: rationale as compaction._ISIN_PUSHDOWN_CAP, scaled to value lists).
-_ISIN_MAX = 10_000
+from cm_well_spark.plans.keyset import restrict
 
 
 def heavy_hitters(
@@ -73,7 +65,7 @@ def heavy_hitters(
         # false positives, NEVER misses an item above the support — the
         # recount kills the false positives.
         row = stream.stat.freqItems([key_col], support=phi / 2.0).first()
-        vals = [v for v in row[f"{key_col}_freqItems"] if v is not None]
+        candidates = [v for v in row[f"{key_col}_freqItems"] if v is not None]
     else:
         # phi/2 below freqItems' 1e-4 support floor (phi < 2e-4):
         # per-Arrow-batch summaries with capacity c — same guarantee,
@@ -88,29 +80,9 @@ def heavy_hitters(
                 thr = len(pdf) / cap
                 yield pd.DataFrame({key_col: vc.index[vc.to_numpy() > thr]})
 
-        candidates, n_cand = iter_checkpoint_count(
-            stream.mapInPandas(batch_frequent, schema=f"{key_col} string").distinct()
-        )
-        if n_cand > _ISIN_MAX:
-            recount_src = stream.join(candidates, key_col, "left_semi")
-            counts = recount_src.groupBy(key_col).agg(F.count(F.lit(1)).alias("cnt"))
-            total = stream.agg(F.count(F.lit(1)).alias("__n"))
-            return (
-                counts.crossJoin(F.broadcast(total))
-                .where(
-                    F.col("cnt")
-                    >= F.greatest(F.lit(1), F.ceil(F.lit(phi) * F.col("__n")).cast("long"))
-                )
-                .select(key_col, "cnt")
-            )
-        vals = [r[0] for r in candidates.collect()]
+        candidates = stream.mapInPandas(batch_frequent, schema=f"{key_col} string").distinct()
 
-    if len(vals) > _ISIN_MAX:
-        cand_df = items.sparkSession.createDataFrame([(v,) for v in vals], f"{key_col} string")
-        recount_src = stream.join(F.broadcast(cand_df), key_col, "left_semi")
-    else:
-        recount_src = stream.where(F.col(key_col).isin(vals))
-
+    recount_src = restrict(stream, key_col, candidates)
     counts = recount_src.groupBy(key_col).agg(F.count(F.lit(1)).alias("cnt"))
     total = stream.agg(F.count(F.lit(1)).alias("__n"))
     return (

@@ -19,7 +19,7 @@ field values and infoton paths.
 
 Scale shape: every hop reads EDGES from the predicate-partitioned
 `triples` table — a narrow, partition-pruned scan (bound field names
-prune to their `p` partitions) with the bounded frontier broadcast —
+prune to their `p` partitions) restricted to the frontier (plans/keyset) —
 never a scan of the wide doc-table field maps. Per-level `[qp]` filters
 hydrate only the candidate target paths. The traversal bookkeeping is
 path sets; full infoton rows are fetched ONCE at the end via a semi join.
@@ -42,22 +42,12 @@ from cm_well_spark.parsers.expansion import (
     parse_xg,
     parse_yg,
 )
-from cm_well_spark.plans.bounds import proven_path_bound
+from cm_well_spark.plans.bounds import export_path_bound, proven_path_bound
 from cm_well_spark.plans.compile import compile_filter
-from cm_well_spark.plans.iterative import (
-    iter_checkpoint,
-    iter_checkpoint_count,
-    iter_checkpoint_lazy,
-)
+from cm_well_spark.plans.iterative import iter_checkpoint_count, iter_checkpoint_lazy
+from cm_well_spark.plans.keyset import restrict
 
 XG_LIMIT = 10_000  # webservice.xg.limit (application.conf:71)
-
-# broadcast-hint ceiling for PATH SETS (short strings, ~64B/row): 1M rows
-# ≈ the session's 64MB autoBroadcastJoinThreshold. Below it a counted set
-# broadcasts (hash-map semi join, no shuffle of the wide doc table);
-# above it the hint is withheld and AQE plans the join — the 100 TB
-# posture where a frontier can be billions of paths.
-BROADCAST_PATHS_MAX = 1_000_000
 
 
 def _target_filter(selectors: tuple[FilteredField, ...]) -> Column | None:
@@ -82,19 +72,11 @@ def _edges(triples: DataFrame, selectors, reverse: bool) -> DataFrame:
     return t.select(F.col("s").alias("src"), F.col("o").alias("dst"))
 
 
-def _filtered_paths(
-    infotons: DataFrame, paths: DataFrame, selectors, bounded: bool = False
-) -> DataFrame:
+def _filtered_paths(infotons: DataFrame, paths: DataFrame, selectors) -> DataFrame:
     """Apply the per-level [qp] filter by hydrating ONLY the candidate
-    paths (semi join), returning the surviving path set. The broadcast
-    hint is applied only when the caller PROVED the candidate set small
-    (counted after materialization); otherwise AQE's runtime size check
-    picks the strategy — a blind hint here is a broadcast-OOM at 100 TB
-    (VERDICT r1 finding 4), a blind shuffle is a full exchange of the
-    wide doc table."""
+    paths (keyset.restrict), returning the surviving path set."""
     tf = _target_filter(selectors)
-    live = infotons.where(F.col("current"))
-    hydrated = live.join(F.broadcast(paths) if bounded else paths, "path", "left_semi")
+    hydrated = restrict(infotons.where(F.col("current")), "path", paths)
     if tf is not None:
         hydrated = hydrated.where(tf)
     return hydrated.select("path")
@@ -116,42 +98,41 @@ def _stats_dst_bound(selectors, reverse: bool, stats: dict | None) -> int | None
         return 0  # field never seen in the store: hop lands nowhere
 
 
+def _bounded(df: DataFrame, bound: int | None) -> DataFrame:
+    """Checkpoint a path set and carry its bound for keyset.restrict: the
+    stats proof when there is one (lazy, no job), else the counted
+    checkpoint (one job)."""
+    if bound is None:
+        df, bound = iter_checkpoint_count(df)
+    else:
+        df = iter_checkpoint_lazy(df)
+    return export_path_bound(df, bound)
+
+
 def _hop(
     infotons: DataFrame,
     triples: DataFrame,
-    frontier_paths: DataFrame,
+    frontier: DataFrame,
     selectors,
     reverse: bool,
-    bounded: bool = False,
     stats: dict | None = None,
 ) -> DataFrame:
-    """One edge hop. `bounded=True` means the caller PROVED the frontier is
-    ≤ BROADCAST_PATHS_MAX paths (counted on an eagerly-checkpointed
-    frontier) — only then is a static broadcast hint safe at 100 TB;
-    otherwise AQE decides.
-    The hop TARGETS' boundedness is proven the cheapest way available:
-    from predicate_stats when the fields are named (no extra job at all),
-    else by materializing + counting the target set — never assumed."""
-    edges = _edges(triples, selectors, reverse)
-    src = frontier_paths.select(F.col("path").alias("src")).distinct()
-    if bounded:
-        src = F.broadcast(src)
-    dsts = edges.join(src, "src", "left_semi").select(F.col("dst").alias("path")).distinct()
+    """One edge hop from a bound-carrying frontier. The hop TARGETS'
+    bound is the predicate_stats proof when the fields are named (no
+    extra job at all), else keyset.restrict counts them — never assumed."""
+    edges = restrict(_edges(triples, selectors, reverse), "src", frontier)
+    dsts = edges.select(F.col("dst").alias("path")).distinct()
     stat_bound = _stats_dst_bound(selectors, reverse, stats)
     if stat_bound is not None:
-        dst_bounded = stat_bound <= BROADCAST_PATHS_MAX
-    else:
-        dsts, n_dsts = iter_checkpoint_count(dsts)
-        dst_bounded = n_dsts <= BROADCAST_PATHS_MAX
+        export_path_bound(dsts, stat_bound)
     # ghost skip (J7): only paths that exist as current infotons survive,
     # and the per-level filter applies to the hydrated targets
-    return _filtered_paths(infotons, dsts, selectors, bounded=dst_bounded)
+    return _filtered_paths(infotons, dsts, selectors)
 
 
 def _hydrate(infotons: DataFrame, paths: DataFrame, limit: int) -> DataFrame:
-    return infotons.where(F.col("current")).join(
-        F.broadcast(paths.distinct().limit(limit)), "path", "left_semi"
-    )
+    keys = export_path_bound(paths.distinct().limit(limit), limit)
+    return restrict(infotons.where(F.col("current")), "path", keys)
 
 
 def expand_out(
@@ -169,46 +150,20 @@ def expand_out(
 
     t = triples if triples is not None else triples_of(infotons)
     levels = parse_xg(xg) if isinstance(xg, str) else xg
-    # iterative expansion: materialize the (bounded, <=10k-path) frontier
-    # each level — without this the accumulated plan re-evaluates the
-    # whole chain 2^levels times (measured 10x wall on a 2-level xg)
-    # the frontier count proves boundedness for the broadcast-hint
-    # decision (VERDICT r1 finding 4) and rides the checkpoint's own
-    # materialization job (r11, iter_checkpoint_count)
-    # seed-bound elision (r11): search() exports its proven row bound
-    # (index-route stats proof or the paging limit; plans/bounds.py
-    # carrier, hardened r12 — type-checked, never column-shadowed), so
-    # bounded seed sets skip the eager materialize+count job entirely —
-    # the lazy checkpoint's blocks ride the first consuming action. The
-    # bound is strategy-only (broadcast licensing), never a row source.
-    seed_bound = proven_path_bound(seeds)
-    if seed_bound is not None and seed_bound <= BROADCAST_PATHS_MAX:
-        acc, n_frontier = iter_checkpoint_lazy(seeds.select("path")), seed_bound
-    else:
-        acc, n_frontier = iter_checkpoint_count(seeds.select("path"))
-    frontier = acc
+    # iterative expansion: checkpoint the frontier each level — without
+    # this the accumulated plan re-evaluates the whole chain 2^levels
+    # times (measured 10x wall on a 2-level xg). Seed-bound elision (r11):
+    # search() exports its proven row bound (plans/bounds.py), so bounded
+    # seed sets skip the counted checkpoint; the lazy checkpoint's blocks
+    # ride the first consuming action. Per level, the new frontier is a
+    # subset of the hop's targets, so a predicate-stats bound on the hop
+    # proves the next level's key set with zero extra jobs; unproven hops
+    # pay the counted checkpoint.
+    acc = frontier = _bounded(seeds.select("path"), proven_path_bound(seeds))
     for level in levels:
-        bounded = n_frontier <= BROADCAST_PATHS_MAX
-        targets = _hop(infotons, t, frontier, level.fields, reverse=False, bounded=bounded, stats=stats)
+        targets = _hop(infotons, t, frontier, level.fields, reverse=False, stats=stats)
         new = targets.join(acc, "path", "left_anti")
-        # stats-proof elision of the per-level count job (r11, the same
-        # discipline as search's path-set proof): the new frontier is a
-        # subset of the hop's targets, so a predicate-stats bound on the
-        # hop licenses the NEXT level's broadcast decision with zero extra
-        # jobs. The lazy checkpoint still truncates lineage (no 2^levels
-        # re-evaluation); its blocks materialize inside the next level's
-        # hop or the final hydrate action. Unproven hops keep the
-        # counted-checkpoint fallback.
-        # (A literal-frontier route — collect each level and push src IN
-        # (...) into the next scan, sample_neighborhood-style — was built
-        # and REJECTED here: A/B at sf0.1 measured 3.24 s vs 1.71 s and
-        # the same job count; under AQE each level's collect still runs
-        # the same stage jobs the checkpoint would, plus py4j transfer.)
-        hop_bound = _stats_dst_bound(level.fields, False, stats)
-        if hop_bound is not None and hop_bound <= BROADCAST_PATHS_MAX:
-            frontier, n_frontier = iter_checkpoint_lazy(new), hop_bound
-        else:
-            frontier, n_frontier = iter_checkpoint_count(new)
+        frontier = _bounded(new, _stats_dst_bound(level.fields, False, stats))
         # acc itself is NOT re-checkpointed: it stays a flat union of
         # already-checkpointed frontiers, so its lineage is one node per
         # level (not exponential) and we skip a full materialization per
@@ -228,30 +183,16 @@ def expand_paths(
     """J2 yg: walk each `|`-alternative segment chain from the seeds and
     keep the WHOLE discovered path (seeds + every intermediate + final)."""
     pe = parse_yg(yg) if isinstance(yg, str) else yg
-    # seed-bound elision — same contract as expand_out
-    seed_bound = proven_path_bound(seeds)
-    if seed_bound is not None and seed_bound <= BROADCAST_PATHS_MAX:
-        seed_paths, n_seed = iter_checkpoint_lazy(seeds.select("path")), seed_bound
-    else:
-        seed_paths, n_seed = iter_checkpoint_count(seeds.select("path"))
-    acc = seed_paths
+    # seed-bound elision and per-hop stats proofs — same contract as
+    # expand_out
+    acc = seed_paths = _bounded(seeds.select("path"), proven_path_bound(seeds))
     for path in pe.paths:
         # each |-alternative restarts from the seeds
-        frontier, n_frontier = seed_paths, n_seed
+        frontier = seed_paths
         for seg in path.segments:
-            bounded = n_frontier <= BROADCAST_PATHS_MAX
             reverse = isinstance(seg, ExpandUp)
-            hopped = _hop(
-                infotons, triples, frontier, seg.fields,
-                reverse=reverse, bounded=bounded, stats=stats,
-            )
-            # stats-proof count elision, same contract as expand_out: the
-            # hop result ⊆ the hop's stats-bounded target set
-            hop_bound = _stats_dst_bound(seg.fields, reverse, stats)
-            if hop_bound is not None and hop_bound <= BROADCAST_PATHS_MAX:
-                frontier, n_frontier = iter_checkpoint_lazy(hopped), hop_bound
-            else:
-                frontier, n_frontier = iter_checkpoint_count(hopped)
+            hopped = _hop(infotons, triples, frontier, seg.fields, reverse=reverse, stats=stats)
+            frontier = _bounded(hopped, _stats_dst_bound(seg.fields, reverse, stats))
             # flat union of checkpointed frontiers — no per-segment
             # re-materialization of the accumulator (see expand_out)
             acc = acc.unionByName(frontier)
@@ -304,14 +245,12 @@ def gqp_filter(
     if not survivor_sets:
         return results
     survivors = reduce(lambda a, b: a.unionByName(b), survivor_sets).distinct()
-    # counted-broadcast the mask (same contract as search's candidate
-    # hydration): an SMJ here would exchange the WIDE result rows before
-    # AQE sees the survivor count; the survivor set is a narrow distinct
-    # path frame, cheap to checkpoint + count. Stats-proof elision (r11):
-    # each alternative's survivors are SOURCES of its first segment's
-    # edges, so the summed per-alternative source bound (dsubj forward /
-    # dobj reverse) licenses the broadcast with zero extra jobs; only
-    # unproven chains pay the counted checkpoint.
+    # stats-proof elision (r11): each alternative's survivors are SOURCES
+    # of its first segment's edges, so the summed per-alternative source
+    # bound (dsubj forward / dobj reverse) proves the mask's key set with
+    # zero extra jobs; only unproven chains pay restrict's counted
+    # checkpoint. Either way the WIDE result rows never shuffle for a
+    # small mask.
     bound: int | None = 0
     for path in pe.paths:
         if not path.segments:
@@ -322,9 +261,6 @@ def gqp_filter(
             bound = None
             break
         bound += b
-    if bound is not None and bound <= BROADCAST_PATHS_MAX:
-        return results.join(F.broadcast(survivors), "path", "left_semi")
-    survivors, n_survivors = iter_checkpoint_count(survivors)
-    if n_survivors <= BROADCAST_PATHS_MAX:
-        survivors = F.broadcast(survivors)
-    return results.join(survivors, "path", "left_semi")
+    if bound is not None:
+        export_path_bound(survivors, bound)
+    return restrict(results, "path", survivors)

@@ -2,8 +2,9 @@
 
 search() can PROVE an upper bound on its result's row count (index-route
 predicate-stats algebra, or an explicit paging limit). Downstream
-strategy decisions — traversal seed broadcasts, frontier isin pushdowns
-— can reuse that proof instead of paying a checkpoint+count job.
+route decisions — plans/keyset.restrict on a key frame — reuse that
+proof instead of paying a checkpoint+count job; restrict also exports
+the count it pays, so a frame is counted at most once.
 
 The carrier is an instance attribute on the DataFrame object. That is
 deliberately fail-safe but fragile: ANY transformation returns a new
@@ -15,8 +16,8 @@ path). These helpers make the protocol explicit and crash-proof:
   `_cmw_path_bound` must not resolve to a Column (which would make
   `bound <= cap` raise inside the consumer, ADVICE r11);
 - the reader type-checks, so nothing but an int ever escapes;
-- the bound is STRATEGY-ONLY: consumers may pick broadcast/isin routes
-  with it, but must never derive rows from it.
+- the bound is STRATEGY-ONLY: consumers may pick a join route with it,
+  but must never derive rows from it.
 
 Pinned by tests/test_r12_optimizations.py: the registry's xg/yg seed
 searches export a bound and their traversals skip the seed count job;

@@ -195,22 +195,3 @@ def index_search_paths(
     if residual:
         res_col = compile_filter(MultiFieldFilter(MUST, tuple(residual)))
     return path_set.withColumnRenamed("s", "path"), res_col, bound
-
-
-def index_search(
-    infotons: DataFrame,
-    triples: DataFrame,
-    ff: FieldFilter,
-    visibility: Column,
-) -> DataFrame:
-    """Candidate set from the index, hydration + residual on the doc
-    table. Falls back to the pure doc-side plan when nothing is
-    set-expressible."""
-    paths, residual, _bound = index_search_paths(triples, ff)
-    df = infotons.where(visibility)
-    if paths is not None:
-        df = df.join(paths, "path", "left_semi")
-        if residual is not None:
-            df = df.where(residual)
-        return df
-    return df.where(residual if residual is not None else compile_filter(ff))

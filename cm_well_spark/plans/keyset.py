@@ -1,0 +1,119 @@
+"""One way to restrict a relation to a set of keys.
+
+Reads and writes keep cutting a relation down to a set of infoton paths:
+xg/yg/gqp hop frontiers, search candidate hydration, `_out` batch gets,
+the merge writer's affected paths, merge-on-read reconciliation, graph
+frontiers and sketch recounts. `restrict` picks the physical route for
+every one of them, from one cap table, in two steps.
+
+Bound. A driver list is bounded by its length. A key frame is bounded by
+its plans/bounds.py proof or, without one, by one counted checkpoint:
+the keys are lazily checkpointed and a single aggregate job returns
+their count and their key range. The count is exported on the caller's
+frame as its proof, and the checkpoint, count and range stay on it, so
+every later restriction by the same frame pays no second job and its
+plan shares one broadcast exchange with the first.
+
+Route.
+  - A list of at most LITERAL_MAX keys becomes `between(min, max) &
+    isin(...)`. The envelope is sargable at any size: parquet pushes a
+    min/max range filter however long the IN list, and an IN list past
+    spark.sql.parquet.pushdown.inFilterThreshold silently stops pushing
+    (measured 45 s vs 5 s per write batch on the compacted sf1 store).
+    The IN list then filters the residue rows.
+  - A key set bounded by BROADCAST_MAX becomes a broadcast semi/anti
+    join, with the same envelope whenever the range is known.
+  - Anything else is a plain join, and AQE picks the strategy: a blind
+    broadcast of a backfill-sized key set would exhaust executor memory.
+
+A frame is never collected just to get literals. Traversal built that
+route (collect each level's frontier, push `src IN (...)` into the next
+scan) and rejected it: A/B at sf0.1 measured 3.24 s vs 1.71 s with the
+same job count, because under AQE each level's collect still runs the
+stage jobs the checkpoint would, plus the py4j transfer.
+
+LITERAL_MAX comes from the merge writer's measured curve. The
+apply_commands plan embeds the list at three sites, and the py4j +
+analyzer cost of the In expressions grows superlinearly. At sf0.1, 3
+reps, build = plan construction, exec = .count of the rewritten
+986k-row table:
+
+    batch      isin build / exec      join build / exec
+    4          0.62 / 0.99            0.51 / 0.71
+    100        0.51 / 1.46            0.43 / 1.96
+    500        3.17 / 5.70            1.34 / 6.38
+    1,000      1.25 / 6.08            0.39 / 6.36
+    10,000     9.9-28.8 / ~40         0.5 / ~40
+    95,000     101-120 / 66-81        0.5-0.6 / 45-102
+
+The literal route's storage-pruning edge (parquet row-group min/max and
+in-memory batch pruning on the path-sorted store, instead of a runtime
+join that deserializes the wide fields map of every row) survives only
+below a few hundred scattered keys; past ~500 the exec advantage is gone
+and the driver cost explodes.
+
+BROADCAST_MAX is the session's 64 MB autoBroadcastJoinThreshold at about
+64 B per path.
+"""
+
+from __future__ import annotations
+
+from collections.abc import Iterable
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from cm_well_spark.plans.bounds import export_path_bound, proven_path_bound
+from cm_well_spark.plans.iterative import iter_checkpoint_lazy
+
+LITERAL_MAX = 256
+BROADCAST_MAX = 1_000_000
+
+_KEY = "__keyset_key"
+#: instance attribute a counted key frame carries: (checkpointed keys,
+#: count, range), so every later restriction by that frame reuses them
+_COUNTED_ATTR = "_cmw_keyset_counted"
+
+
+def _key_frame(keys: DataFrame) -> tuple[DataFrame, int, tuple | None]:
+    """(one-column key frame, bound, key range or None) for `keys`."""
+    counted = keys.__dict__.get(_COUNTED_ATTR)
+    if counted is not None:
+        return counted
+    frame = keys.select(F.col(keys.columns[0]).alias(_KEY))
+    bound = proven_path_bound(keys)
+    if bound is not None:
+        return frame, bound, None
+    frame = iter_checkpoint_lazy(frame)
+    bound, lo, hi = frame.agg(F.count(F.lit(1)), F.min(_KEY), F.max(_KEY)).first()
+    export_path_bound(keys, bound)
+    counted = keys.__dict__[_COUNTED_ATTR] = (frame, bound, None if lo is None else (lo, hi))
+    return counted
+
+
+def restrict(
+    df: DataFrame, col: str, keys: Iterable | DataFrame, *, anti: bool = False
+) -> DataFrame:
+    """Rows of `df` whose `col` is in `keys` (or, with `anti`, is not —
+    a NULL `col` never matches, exactly like a left anti join). `keys` is
+    a driver collection or a one-column key frame; see the module
+    docstring for the route."""
+    if isinstance(keys, DataFrame):
+        frame, bound, envelope = _key_frame(keys)
+    else:
+        literals = sorted({k for k in keys if k is not None})
+        if not literals:
+            return df if anti else df.where(F.lit(False))
+        envelope = (literals[0], literals[-1])
+        if len(literals) <= LITERAL_MAX:
+            hit = F.col(col).between(*envelope) & F.col(col).isin(literals)
+            return df.where(~F.coalesce(hit, F.lit(False))) if anti else df.where(hit)
+        bound = len(literals)
+        schema = T.StructType([T.StructField(_KEY, df.schema[col].dataType)])
+        frame = df.sparkSession.createDataFrame([(k,) for k in literals], schema)
+    if bound <= BROADCAST_MAX:
+        frame = F.broadcast(frame)
+    if envelope is not None and not anti:
+        df = df.where(F.col(col).between(*envelope))
+    return df.join(frame, F.col(col) == F.col(_KEY), "left_anti" if anti else "left_semi")

@@ -5,6 +5,7 @@ Registry tranche split out of the former single-module registry
 `cm_well_spark.registry._core`.
 """
 
+from cm_well_spark.model.lakehouse import REPO_ROOT
 from cm_well_spark.registry._core import *  # noqa: F401,F403
 
 @register(
@@ -119,7 +120,9 @@ def materialized_view_sparql(spark, sf_dir):
 
     inf = _inf(spark, sf_dir)
     tri = _tri(spark, sf_dir)
-    dd = f"/root/repo/.checkpoints/registry_mv_{os.path.basename(os.path.normpath(sf_dir))}"
+    dd = os.path.join(
+        REPO_ROOT, ".checkpoints", f"registry_mv_{os.path.basename(os.path.normpath(sf_dir))}"
+    )
     shutil.rmtree(dd, ignore_errors=True)
     proc = SparqlTriggeredProcessor(
         spark, tri, "CONSTRUCT { ?n <locatedIn> ?r } WHERE { ?n <ofRegion> ?r }", dd

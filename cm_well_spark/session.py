@@ -11,9 +11,33 @@ import os
 
 from pyspark.sql import SparkSession
 
+_HEAP_CAP = 24 << 30
+
+
+def host_memory() -> int:
+    """Bytes this process may use: MemTotal, or the cgroup limit when one
+    is set below it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            total = min(total, int(raw))
+    return total
+
+
+def driver_memory() -> str:
+    """spark.driver.memory (and the -Xms floor): CMW_DRIVER_MEM when set,
+    else half the host's memory, capped at 24g."""
+    return os.environ.get("CMW_DRIVER_MEM") or f"{min(host_memory() // 2, _HEAP_CAP) >> 20}m"
+
 
 def get_spark(app_name: str = "cm_well_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+    heap = driver_memory()
     shuffle = shuffle_partitions or int(os.environ.get("CMW_SHUFFLE_PARTITIONS", cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -24,7 +48,7 @@ def get_spark(app_name: str = "cm_well_spark", shuffle_partitions: int | None = 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("CMW_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", heap)
         # pin the heap floor to the ceiling, and keep the heap RIGHT-SIZED
         # (r11): this VM faults anonymous memory at only ~120 MB/s
         # (measured: -XX:+AlwaysPreTouch of 48 GB = 391 s), so every NEW
@@ -32,23 +56,17 @@ def get_spark(app_name: str = "cm_well_spark", shuffle_partitions: int | None = 
         # 65-96% sys time and a 4-9x wall blowup on repeated sf1
         # iterative queries (pagerank 219-314 s vs 22-38 s once the heap
         # stopped wandering). -Xms pins the floor so G1 never uncommits
-        # and re-faults, and 24g (plenty for every measured op, including
-        # the sf1 clustering compact) bounds the one-time fault tax to
-        # ~3 min amortized over a session's first heavy queries. The
-        # bench's min-of-N sampling absorbs that warm-up by design.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "CMW_DRIVER_XOPTS", f"-Xms{os.environ.get('CMW_DRIVER_MEM', '24g')}"
-            ),
-        )
+        # and re-faults; the heap is half the host's memory, at most 24g
+        # (plenty for every measured op, including the sf1 clustering
+        # compact), so the JVM can always commit it.
+        .config("spark.driver.extraJavaOptions", os.environ.get("CMW_DRIVER_XOPTS", f"-Xms{heap}"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # test tables store TIMESTAMP(NANOS); read as long, loaders convert
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # batch point-lookups (write_batch's affected-path isin, _out
-        # batch gets) carry 100s-1000s of values; the default threshold
-        # (10) silently drops the parquet row-group pushdown for them.
+        # literal key lists (plans/keyset, up to LITERAL_MAX = 256
+        # values) exceed the default threshold (10), which silently
+        # drops the parquet row-group pushdown for them.
         # Evaluating a few hundred min/max containment checks per row
         # group is nanoseconds against the MBs of decode it skips.
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")

@@ -238,11 +238,12 @@ def test_load_infotons_is_merge_on_read_aware(spark, store):
 
 
 def test_reconcile_broadcast_gate_over_cap(spark, store, tmp_path, monkeypatch):
-    """r8 (verdict fix): above _ISIN_PUSHDOWN_CAP the reconcile must NOT
+    """r8 (verdict fix): above keyset.BROADCAST_MAX the reconcile must NOT
     force-broadcast the affected-path set (a backfill batch touching
     millions of paths would OOM); it hands AQE a plain join instead —
     and the merge-on-read answer is identical either way."""
     from cm_well_spark.model import compaction
+    from cm_well_spark.plans import keyset
 
     # private copy: earlier tests may have compacted the shared store
     mine = str(tmp_path / "gate_store")
@@ -263,7 +264,7 @@ def test_reconcile_broadcast_gate_over_cap(spark, store, tmp_path, monkeypatch):
     hinted = compaction.reconciled_infotons(spark, mine)
     assert "strategy=broadcast" in hinted._jdf.queryExecution().analyzed().toString()
 
-    monkeypatch.setattr(compaction, "_ISIN_PUSHDOWN_CAP", 0)
+    monkeypatch.setattr(keyset, "BROADCAST_MAX", 0)
     plain = compaction.reconciled_infotons(spark, mine)
     assert "strategy=broadcast" not in plain._jdf.queryExecution().analyzed().toString()
     plain_tri = compaction.reconciled_triples(spark, mine)

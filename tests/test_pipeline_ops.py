@@ -597,6 +597,17 @@ def test_lsh_topk_batch_fallback_guard(embs, spark):
     assert out[0]["vec_id"] == q["vec_id"] or any(r["vec_id"] == q["vec_id"] for r in out)
 
 
+def test_lsh_topk_batch_null_vector_names_its_width(embs, spark):
+    """A NULL query vector under a caller-passed dim fails with a readable
+    message ("vector width null"), not a NULL one."""
+    from cm_well_spark.operators.similarity import lsh_topk_batch
+
+    dim = len(embs.first()["embedding"])
+    queries = spark.createDataFrame([(1, None)], "query_id long, embedding array<double>")
+    with pytest.raises(Exception, match=f"vector width null != dim={dim}"):
+        lsh_topk_batch(embs, queries, k=3, n_planes=4, dim=dim).collect()
+
+
 def test_chunk_documents_disjoint_and_overlap(spark):
     from cm_well_spark.operators.text import chunk_documents
 

@@ -3,9 +3,10 @@ round). Each pins a cache-hygiene or plan-shape promise the round's
 changes make, independent of the oracle matrix.
 
   pagerank / personalized_pagerank leave NO CacheManager entry behind:
-  their lazily-persisted round relations (edges+odeg, nodes) are freed
-  after the final iteration state is materialized inside the operator
-  (the _static_relation contract — VERDICT r11 item 1).
+  neither persists a round relation any more (pagerank carries rank and
+  out-degree on sources; personalized pagerank restricts each round to
+  its frontier), so a leaked entry would be a regression
+  (VERDICT r11 item 1).
 """
 
 from __future__ import annotations
@@ -14,10 +15,9 @@ from pyspark.sql import functions as F
 
 
 def _rebuild_round_relations(triples):
-    """The exact plans the pagerank family persists (r12: the raw edge
-    relation and the out-degree relation — plain pagerank persists
-    nothing, personalized persists both and must free them).
-    CacheManager matches on analyzed-plan sameResult, so a fresh
+    """The plans the pagerank family once persisted (the raw edge
+    relation and the out-degree relation; neither operator persists them
+    now). CacheManager matches on analyzed-plan sameResult, so a fresh
     identical plan finds any leaked entry."""
     from cm_well_spark.operators.graph import DEFAULT_LINK_FIELDS, reference_edges
 

@@ -13,7 +13,7 @@ from cm_well_spark.streaming.subscribe import (
     subscribe,
 )
 
-TMP = "/root/repo/.checkpoints/test_streaming"
+TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".checkpoints", "test_streaming")
 
 
 @pytest.fixture(autouse=True)

@@ -79,6 +79,6 @@ def generate(src_dir: str, out_dir: str, replicas: int = 10) -> None:
 
 if __name__ == "__main__":
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.sfgen/sf1"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".sfgen", "sf1")
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     generate(src, out, reps)
