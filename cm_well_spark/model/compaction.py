@@ -139,6 +139,8 @@ def write_batch(spark: SparkSession, out: str, commands: DataFrame) -> int:
       - the index_time watermark comes from `_WATERMARK.json` (written
         here and by compact), not a max() scan of 8.9M+ rows — the
         aggregate runs once to seed a store that predates the file;
+      - the new watermark is the delta's max index_time read from its
+        parquet footers (_written_max_index_time), not a scan of it;
       - merge_versions restricts the base read once to the batch's
         path set (merge.command_paths, a bounded collect), so the
         parquet scan FILE-SKIPS on path min-max ranges (exactly what
@@ -166,11 +168,19 @@ def write_batch(spark: SparkSession, out: str, commands: DataFrame) -> int:
     n = len(_delta_batches(out, _INF_DELTA))
     target = os.path.join(out, _INF_DELTA, f"batch={n}")
     new_rows.write.mode("overwrite").parquet(target)
-    written_max = (
-        spark.read.parquet(target).agg(F.max("index_time").alias("m")).first()["m"]
-    )
-    _write_watermark(out, written_max if written_max is not None else base_max)
+    _write_watermark(out, _written_max_index_time(spark, target, base_max))
     return n
+
+
+def _written_max_index_time(spark: SparkSession, target: str, default: int) -> int:
+    """Max index_time of a freshly written delta from its parquet footers
+    (no data read, no job); the aggregate runs only when some file has
+    no statistics. `default` for a delta with no rows."""
+    files = _file_col_ranges(target, "index_time")[""]
+    if any(hi is None for _f, _lo, hi in files):
+        m = spark.read.parquet(target).agg(F.max("index_time").alias("m")).first()["m"]
+        return default if m is None else m
+    return max((hi for _f, _lo, hi in files), default=default)
 
 
 def compact(

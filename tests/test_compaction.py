@@ -112,6 +112,25 @@ def test_reconciled_triples_flip_current(spark, batched):
     assert tri.where((F.col("s") == "/tpch/region/2") & F.col("current") & (F.col("kind") != "DeletedInfoton")).count() == 0
 
 
+def test_write_batch_watermark_from_footers(spark, batched, tmp_path):
+    """write_batch's new watermark is its delta's max index_time, read
+    from the parquet footers; a delta with no rows has no statistics and
+    falls back to the aggregate, which keeps the old watermark."""
+    from cm_well_spark.model.compaction import (
+        _INF_DELTA,
+        _delta_batches,
+        _read_watermark,
+        _written_max_index_time,
+    )
+
+    store, _ = batched
+    last = _delta_batches(store, _INF_DELTA)[-1]
+    assert _read_watermark(store) == spark.read.parquet(last).agg(F.max("index_time")).first()[0]
+    empty = str(tmp_path / "empty")
+    spark.read.parquet(last).where(F.lit(False)).write.parquet(empty)
+    assert _written_max_index_time(spark, empty, 7) == 7
+
+
 def test_compact_folds_and_preserves_results(spark, batched):
     """Compaction parity + layout: same reconciled answers, deltas gone,
     bounded file count, disjoint per-file path ranges (the min-max

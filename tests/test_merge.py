@@ -1,6 +1,7 @@
 """Merge-writer tests — the FX6 behaviors (Merger.scala:55-239) plus
 hypothesis property tests for the pure fold."""
 
+import re
 from datetime import datetime, timezone
 
 import pytest
@@ -199,6 +200,138 @@ def test_merge_versions_spark(infotons, commands_df):
     assert r2[1]["kind"] == "ObjectInfoton"
     r99 = by_path["/tpch/region/99"][0]
     assert dict(r99["fields"])["name"][0]["value"] == "NEWREGION"
+
+
+def _canon(fields) -> tuple:
+    """Order-free content of a fields map (driver dicts or collected Rows)."""
+    out = []
+    for k, vs in (fields or {}).items():
+        vals = [v.asDict() if hasattr(v, "asDict") else v for v in vs]
+        out.append((k, tuple(sorted(((v["value"], v["quad"], v["lang"], v["vtype"]) for v in vals), key=repr))))
+    return tuple(sorted(out))
+
+
+def _at(s):
+    return datetime(2024, 1, 1, 0, 0, s, tzinfo=timezone.utc)
+
+
+# path -> ordered (op, fields, delete_fields, protocol); 1-5 commands each
+_BOUNDARY_BATCH = {
+    # field union, then an update that wipes and replaces the field
+    "/tpch/region/0": [
+        ("write", {"extra": [fv("e1", quad="/g/a")]}, None, "https"),
+        ("write", {"extra": [fv("e2")]}, None, "http"),
+        ("update", {"extra": [fv("e3")]}, {"extra": []}, None),
+    ],
+    # quad-precise, untagged-only, '*'-field quad and field-wipe deletes
+    "/tpch/region/1": [
+        ("write", {"x": [fv("1", quad="/g/a"), fv("1"), fv("2", quad="/g/b")]}, None, "https"),
+        ("delete_attributes", None, {"x": [fv("1", quad="/g/a")]}, "https"),
+        ("delete_attributes", None, {"x": [fv("1")]}, "https"),
+        ("delete_attributes", None, {"*": [fv(None, quad="/g/b")]}, "https"),
+        ("delete_attributes", None, {"name": []}, "https"),
+    ],
+    # tombstone, then resurrect
+    "/tpch/region/2": [
+        ("delete_path", None, None, "https"),
+        ("write", {"name": [fv("REBORN")]}, None, "https"),
+    ],
+    # the base already holds this value: a null update, no version
+    "/tpch/region/3": [("write", {"name": [fv("EUROPE")]}, None, "https")],
+    # any-quad value delete, tombstone, delete-on-delete
+    "/tpch/region/4": [
+        ("delete_attributes", None, {"name": [fv("MIDDLE EAST", quad="*")]}, "https"),
+        ("delete_path", None, None, "https"),
+        ("delete_attributes", None, {"regionkey": []}, "https"),
+    ],
+    # an update, then a write of what it left: the second is a null update
+    "/tpch/nation/8": [
+        ("update", {"name": [fv("N8")]}, {"name": []}, "https"),
+        ("write", {"name": [fv("N8")]}, None, "https"),
+    ],
+    # paths with no base row
+    "/new/a": [
+        ("write", {"f": [fv("1")]}, None, "https"),
+        ("update", {"f": [fv("2")]}, {"f": [fv("1")]}, "https"),
+        ("delete_path", None, None, "https"),
+        ("write", {"f": [fv("3")]}, None, None),
+    ],
+    "/new/b": [("update", {"g": [fv("x", quad="/g/a")]}, {"g": []}, "https")],
+    "/new/c": [("delete_attributes", None, {"h": []}, "https")],
+    "/new/d": [
+        ("write", {"f": [fv("1")]}, None, "https"),
+        ("write", {"f": [fv("1")]}, None, "https"),
+    ],
+}
+
+
+def _driver_fold(base: dict) -> list[tuple]:
+    """The batch folded on the driver, one command at a time."""
+    out = []
+    for path, cmds in _BOUNDARY_BATCH.items():
+        state, protocol, prev = ("missing", {}), "https", None
+        if path in base:
+            kind, fields, protocol = base[path]
+            state, prev = (kind, fields), (kind, _canon(fields))
+        for seq, (op, f, d, proto) in enumerate(cmds, 1):
+            state = apply_command(state, {"op": op, "fields": f or {}, "delete_fields": d or {}})
+            sig = (state[0], _canon(state[1]))
+            if sig == prev:
+                continue
+            prev = sig
+            uuid = content_uuid(path, _at(seq), state[1])
+            out.append((path, seq, uuid, state[0], proto or protocol, sig[1]))
+    return sorted(out)
+
+
+def test_merge_versions_path_spans_arrow_batches(spark, infotons):
+    """With two records per Arrow batch, most paths' rows (current
+    version + 1-5 commands) span batch boundaries; the fold must carry
+    each path's state across them."""
+    rows = [
+        (path, seq, op, f, d, _at(seq), proto)
+        for path, cmds in _BOUNDARY_BATCH.items()
+        for seq, (op, f, d, proto) in enumerate(cmds, 1)
+    ]
+    cmds = spark.createDataFrame(rows, COMMAND_SCHEMA)
+    base = {
+        r["path"]: (r["kind"], {k: [v.asDict() for v in vs] for k, vs in r["fields"].items()}, r["protocol"])
+        for r in infotons.where("current")
+        .where(infotons.path.isin(list(_BOUNDARY_BATCH)))
+        .select("path", "kind", "fields", "protocol")
+        .collect()
+    }
+    assert len(base) == 6  # five regions and one nation; /new/* have none
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = merge_versions(infotons, cmds).collect()
+    finally:
+        spark.conf.set(key, old)
+    got = sorted((r["path"], r["seq"], r["uuid"], r["kind"], r["protocol"], _canon(r["fields"])) for r in got)
+    want = _driver_fold(base)
+    assert got == want
+    # the batch exercises both null-update skips and a delete-on-delete
+    assert ("/tpch/region/3", 1) not in {(p, s) for p, s, *_ in want}
+    assert [s for p, s, *_ in want if p == "/new/d"] == [1]
+
+
+# Spark's Python operators, as node names at the head of a plan line
+_PY_NODE = re.compile(
+    r"^[\s:+-]*(?:FlatMap(?:Co)?GroupsIn(?:Pandas|Arrow)|(?:Python)?MapIn(?:Pandas|Arrow)"
+    r"|ArrowEvalPython|BatchEvalPython)\b",
+    re.M,
+)
+
+
+def test_merge_plans_have_one_python_map(infotons, commands_df):
+    """One Arrow map operator per write plan: no cogroup, and the fold is
+    not re-planned per consumer (the current-flip once held it 3 times)."""
+    for df in (merge_versions(infotons, commands_df), apply_commands(infotons, commands_df)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInPandas" not in plan
+        assert len(_PY_NODE.findall(plan)) == 1, plan
 
 
 def test_apply_commands_versioning(infotons, commands_df):

@@ -10,6 +10,11 @@ executed-plan string for the shapes that do not survive 100x scale:
   RoundRobinPartitioning    a blind repartition — legitimate only as the
                             spread_for_cpu local-scan widener (whitelist)
 
+Each entry also reports, without gating, `n_exchanges` and
+`python_nodes`: how many of Spark's Python operators the plan runs
+(grouped, cogrouped and map-in-Arrow/pandas nodes, ArrowEvalPython and
+BatchEvalPython) — each one a round trip across the Arrow boundary.
+
 Emits one JSON object to stdout and exits non-zero if any non-whitelisted
 flag fires — the automated form of the per-round plan audit. Run:
 
@@ -19,9 +24,17 @@ flag fires — the automated form of the per-round plan audit. Run:
 from __future__ import annotations
 
 import json
+import re
 import sys
 
 FLAGS = ("CartesianProduct", "BroadcastNestedLoopJoin")
+
+# Python operators, matched as node names at the head of a plan line
+PYTHON_NODE = re.compile(
+    r"^[\s:+-]*(?:FlatMap(?:Co)?GroupsIn(?:Pandas|Arrow)|(?:Python)?MapIn(?:Pandas|Arrow)"
+    r"|ArrowEvalPython|BatchEvalPython)\b",
+    re.M,
+)
 
 # entries whose nested-loop join is a bounded-by-contract broadcast (a
 # one-row total or a contractually small dimension) — each with the
@@ -77,6 +90,7 @@ def main() -> None:
         entry = {
             "flags": hits,
             "n_exchanges": plan.count("Exchange"),
+            "python_nodes": len(PYTHON_NODE.findall(plan)),
             "whole_stage_codegen": "WholeStageCodegen" in plan,
         }
         if hits:
