@@ -31,12 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cm_well_spark.operators.graph import connected_components
 from cm_well_spark.operators.text import normalize_text, spread_for_cpu
-from cm_well_spark.plans.iterative import (
-    iter_checkpoint,
-    iter_checkpoint_count,
-    iter_checkpoint_lazy,
-)
+from cm_well_spark.plans.iterative import iter_checkpoint_count, iter_checkpoint_lazy
 
 # ---------------------------------------------------------------------------
 # exact
@@ -353,63 +350,29 @@ def duplicate_clusters(
     nodes: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 15,
 ) -> DataFrame:
     """Connected components over a near-dup pair list -> (doc_id, cluster),
     cluster = min doc id reachable (singletons label themselves). This is
     the step that turns pairwise near-dup evidence into dedup groups a
     keep-one-representative policy can act on.
 
-    Min-label propagation: each round, every node takes the minimum of its
-    own label and its neighbors' labels — one edge/label equi-join plus one
-    groupBy-min per round, both plain shuffles Catalyst plans freely; no
-    driver-side state or adjacency materialization. Rounds needed = label
-    propagation distance; threshold-join components are near-cliques, so
-    2-3 rounds in practice (long chains would want the large-star/small-star
-    doubling variant — same join-shape per round, O(log d) rounds).
-    `iter_checkpoint` truncates the growing lineage each round so the plan
-    stays constant-size; convergence is detected with a limit(1) probe of
-    changed labels (cheap: stops the scan at the first hit)."""
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        # checkpoint once: the pair list often carries an expensive lineage
-        # (e.g. a jaccard shingle join) that every propagation round would
-        # otherwise recompute from scratch; lazy — round 1's eager label
-        # job materializes the blocks (r11)
-        .transform(iter_checkpoint_lazy)
+    The components come from graph.connected_components (star
+    contraction, O(log^2 n) rounds whatever the chain length) over the
+    pair edges, plus one left join that labels every row of `nodes` —
+    the same shape as fuzzy.fuzzy_clusters and
+    similarity.semantic_knn_clusters. Every pair id counts as a graph
+    node, including ids not in `nodes`: such an id still links the
+    nodes it pairs with, but gets no output row of its own."""
+    comps = connected_components(
+        pairs.select(
+            F.col("id_a").cast("long").alias("src"), F.col("id_b").cast("long").alias("dst")
+        )
     )
-    labels = nodes.select(
-        F.col(id_col).cast("long").alias("id"), F.col(id_col).cast("long").alias("cluster")
-    ).transform(iter_checkpoint)
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(
-                labels.select(F.col("id").alias("src"), F.col("cluster").alias("lsrc")), "src"
-            )
-            .groupBy("dst")
-            .agg(F.min("lsrc").alias("lmin"))
-            .select(F.col("dst").alias("id"), "lmin")
-        )
-        # stays EAGER (r11 note): the convergence probe below is a
-        # limit(1) early-stop scan — under a lazy checkpoint it would
-        # materialize only the partitions it touches, so later rounds
-        # would recompute unmaterialized partitions through a growing
-        # lineage. The eager job is the price of the early-stop probe.
-        new_labels = labels.join(neigh, "id", "left").select(
-            "id", F.least(F.col("cluster"), F.coalesce("lmin", F.col("cluster"))).alias("cluster")
-        ).transform(iter_checkpoint)
-        changed = (
-            labels.select("id", F.col("cluster").alias("old"))
-            .join(new_labels, "id")
-            .where(F.col("old") != F.col("cluster"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(F.col("id").alias(id_col), "cluster")
+    return (
+        nodes.select(F.col(id_col).cast("long").alias(id_col))
+        .join(comps.withColumnRenamed("node", id_col), id_col, "left")
+        .select(id_col, F.coalesce("component", F.col(id_col)).alias("cluster"))
+    )
 
 
 def duplicated_spans(

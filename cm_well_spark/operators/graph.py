@@ -55,35 +55,11 @@ from pyspark.sql import functions as F
 
 from cm_well_spark.plans.bounds import export_path_bound
 from cm_well_spark.plans.iterative import (
-    RELIABLE_CHECKPOINTS,
     iter_checkpoint,
     iter_checkpoint_count,
     iter_checkpoint_lazy,
 )
 from cm_well_spark.plans.keyset import restrict
-
-
-def _static_relation(df: DataFrame, reliable: bool | None = None) -> DataFrame:
-    """Materialize a relation that a CONSTRUCTION-TIME loop re-reads every
-    round: durable checkpoint when reliable, else a lazy columnar persist
-    — no up-front serial job (round 1 computes the blocks inside its own
-    action) and later rounds scan the in-memory columnar relation with
-    codegen instead of row-walking checkpoint blocks (r11, guide §5
-    caching-vs-recompute; bfs_distances at sf1: 20.4 s -> 12.1 s).
-
-    ONLY for relations the operator itself materializes AND unpersists
-    before returning: a persist lives in the CacheManager until explicit
-    unpersist (checkpoint blocks free via ContextCleaner when the result
-    is dropped), so caller-action-consumed relations would leak for the
-    whole session — measured as storage-eviction churn across a 56-query
-    bench session, and flat-to-worse per-query at sf1 for the triangle
-    family / k_core, which therefore KEEP eager checkpoints."""
-    return iter_checkpoint(df, reliable) if _reliable_on(reliable) else df.persist()
-
-
-def _reliable_on(reliable: bool | None) -> bool:
-    """Resolve a per-call reliable flag against the fleet-wide default."""
-    return RELIABLE_CHECKPOINTS if reliable is None else bool(reliable)
 
 # The TPC-H-shaped reference fields of the test model (builder.py:12-19).
 # Callers on other corpora pass their own list; None = joker (every
@@ -105,9 +81,9 @@ def reference_edges(
 
     Bound field names prune the triples scan to their `p` partitions;
     `fields=None` falls back to the joker heuristic (every current
-    string-typed value shaped like an absolute path) — the same edge
-    definition traversal.py's `_edges` walks, so whole-graph signals and
-    per-seed traversals agree on what an edge is.
+    string-typed value shaped like an absolute path). traversal.py's
+    `_edges` walks these same edges, so whole-graph signals and per-seed
+    traversals agree on what an edge is.
 
     `dedup=False` skips the corpus-wide distinct (a full edge shuffle):
     callers that prune to a small working set first — the sampling loop's
@@ -146,7 +122,6 @@ def pagerank(
     fields: Sequence[str] | None = None,
     iterations: int = 3,
     damping: float = 0.85,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the link graph -> (path, rank).
 
@@ -162,14 +137,11 @@ def pagerank(
     out-degree-decorated edge relation (keyed by src) and one
     groupBy(dst).sum — partial aggregation combines map-side, the
     shuffle carries (node, contribution) only. Edge/node relations stay
-    lazy in the default mode (r12 — see the in-body comment); the plan
-    is depth-bounded by a lazy checkpoint every 8th round. At 1000
-    executors this is the textbook Pregel-free
-    PageRank: iterations x (1 shuffle join + 1 shuffle agg), no
-    driver-side state beyond the loop counter. `reliable=True` (or
-    CMW_RELIABLE_CHECKPOINTS=1) writes the iteration state to the
-    durable checkpoint dir so an executor loss on a real cluster
-    recovers instead of killing the run (plans/iterative.py)."""
+    lazy (r12 — see the in-body comment); the plan is depth-bounded by
+    a lazy checkpoint every 8th round, which CMW_RELIABLE_CHECKPOINTS=1
+    makes durable (plans/iterative.py). At 1000 executors this is the
+    textbook Pregel-free PageRank: iterations x (1 shuffle join + 1
+    shuffle agg), no driver-side state beyond the loop counter."""
     if iterations < 1:
         raise ValueError("pagerank needs at least 1 iteration")
     edges = reference_edges(triples, fields)
@@ -179,7 +151,7 @@ def pagerank(
         .union(edges.select(F.col("dst").alias("path")))
         .distinct()
     )
-    # Edge/node relations stay LAZY in the default mode (r12): the r11
+    # Edge/node relations stay LAZY (r12): the r11
     # persist won its A/B only through cross-invocation cache reuse —
     # the session-lifetime CacheManager residue VERDICT r11 item 1
     # flags (the operator cannot unpersist a relation the caller's
@@ -196,11 +168,7 @@ def pagerank(
     # persisted, so there is nothing to leak.
     # Ranks are NOT checkpointed per round — measured 3.5x slower (r6);
     # every 8th round a lazy checkpoint bounds plan depth for callers
-    # who iterate further. `reliable=True` keeps the eager durable
-    # checkpoints: executor-loss recovery of the iteration state.
-    if _reliable_on(reliable):
-        edges = iter_checkpoint(edges, reliable)
-        out_deg = iter_checkpoint(out_deg, reliable)
+    # who iterate further.
     # Iteration algebra (r12, guide §1.2/§2.3): the loop carries
     # c_i(src) = rank_i(src)/odeg(src) on the SOURCE node set instead of
     # rank_i on every node —
@@ -239,7 +207,7 @@ def pagerank(
             )
             if (i + 1) % 8 == 0:
                 # lazy: plan-depth bounding without a mid-loop job
-                cranks = iter_checkpoint_lazy(cranks, reliable)
+                cranks = iter_checkpoint_lazy(cranks)
     return nodes.join(contribs, "path", "left").select(
         "path", rank_expr.alias("rank")
     )
@@ -251,7 +219,6 @@ def sample_neighborhood(
     fanouts: Sequence[int] = (2, 2),
     fields: Sequence[str] | None = None,
     salt: str = "gnn",
-    reliable: bool | None = None,
 ) -> DataFrame:
     """GraphSAGE-style bounded-fanout neighborhood sampling -> sampled
     edge list (hop, src, dst), hop starting at 1.
@@ -301,7 +268,7 @@ def sample_neighborhood(
         # next hop's frontier-count job (or the caller's action for the
         # last hop), then the output union reads blocks, never
         # re-deriving the edges-scan lineage
-        ranked = iter_checkpoint_lazy(ranked, reliable)
+        ranked = iter_checkpoint_lazy(ranked)
         hops.append(ranked)
         frontier = ranked.select("dst")
     out = hops[0]
@@ -317,7 +284,7 @@ def triangle_count(
     return triangle_count_edges(reference_edges(triples, fields))
 
 
-def triangle_count_edges(e: DataFrame, reliable: bool | None = None) -> DataFrame:
+def triangle_count_edges(e: DataFrame) -> DataFrame:
     """Total undirected triangle count of an edge list (src, dst) -> one
     row (n_triangles). The classic graph-health / community-density
     signal (global clustering numerator).
@@ -333,6 +300,13 @@ def triangle_count_edges(e: DataFrame, reliable: bool | None = None) -> DataFram
     anywhere. The oracle counts the same triangles with the plain
     a<b<c self-join (orientation-free — same set, skew-safe only at
     oracle scale)."""
+    return _triangles(e)[1].agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+
+
+def _triangles(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Compact-forward triangle enumeration (plan in triangle_count_edges)
+    -> (deg(n, d), tris(u, v, w)): every undirected triangle once, at its
+    lowest-(degree, id) apex u."""
     und = (
         e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .where(F.col("a") != F.col("b"))
@@ -359,27 +333,25 @@ def triangle_count_edges(e: DataFrame, reliable: bool | None = None) -> DataFram
             F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
             F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
             F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddst"),
-        ),
-        reliable,
+        )
     )
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     lower = (F.col("o1.ddst") < F.col("o2.ddst")) | (
         (F.col("o1.ddst") == F.col("o2.ddst")) & (F.col("o1.dst") < F.col("o2.dst"))
     )
     wedges = o1.join(o2, (F.col("o1.src") == F.col("o2.src")) & lower).select(
-        F.col("o1.dst").alias("v"), F.col("o2.dst").alias("w")
+        F.col("o1.src").alias("u"), F.col("o1.dst").alias("v"), F.col("o2.dst").alias("w")
     )
-    closed = wedges.join(
+    tris = wedges.join(
         oriented.select(F.col("src").alias("v"), F.col("dst").alias("w")), ["v", "w"]
     )
-    return closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+    return deg, tris
 
 
 def label_propagation(
     triples: DataFrame,
     fields: Sequence[str] | None = None,
     iterations: int = 3,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.
     2007, made deterministic) -> (node, label) after a FIXED number of
@@ -393,8 +365,7 @@ def label_propagation(
     Per round: one equi-join of the label relation against the
     symmetric edge list and two keyed aggregations whose shuffles carry
     (node, label[, cnt]) only — the same Pregel-free shape as pagerank,
-    with the same iter_checkpoint depth-bounding (reliable=True for
-    durable iteration state on a real cluster)."""
+    with the same iter_checkpoint depth-bounding."""
     if iterations < 1:
         raise ValueError("label_propagation needs at least 1 iteration")
     e = reference_edges(triples, fields)
@@ -407,7 +378,7 @@ def label_propagation(
     # (joker edges, 3 iterations) measured ckpt 6.4 s vs lazy persist
     # 10.0 s — with only one distinct + three join reads the columnar
     # cache never amortizes its build cost here (r11)
-    sym = iter_checkpoint(sym, reliable)
+    sym = iter_checkpoint(sym)
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -423,7 +394,7 @@ def label_propagation(
         )
         if (i + 1) % 8 == 0 and (i + 1) < iterations:
             # lazy: plan-depth bounding without a mid-loop job
-            labels = iter_checkpoint_lazy(labels, reliable)
+            labels = iter_checkpoint_lazy(labels)
     return labels
 
 
@@ -493,9 +464,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    e: DataFrame, max_rounds: int = 50, reliable: bool | None = None
-) -> DataFrame:
+def connected_components(e: DataFrame, max_rounds: int = 50) -> DataFrame:
     """Connected components of an edge list -> (node, component), where
     the component id is the LEXICOGRAPHIC MIN node id of the component —
     a canonical, engine-independent labeling (any correct CC algorithm
@@ -503,10 +472,10 @@ def connected_components(
     oracle — a pure-Python union-find twin — check this without
     replaying the iteration).
 
-    This is THE corpus-scale dedup primitive: minhash/simhash candidate
-    pairs become edges, components become duplicate clusters (the same
-    role dedup.py:cluster_components plays for doc pairs — this is the
-    whole-graph generalization over arbitrary node ids).
+    This is THE corpus-scale dedup primitive: near-dup candidate pairs
+    become edges, components become duplicate clusters
+    (dedup.duplicate_clusters, fuzzy.fuzzy_clusters and
+    similarity.semantic_knn_clusters all label through it).
 
     Algorithm: the TWO-PHASE alternating star contraction of Kiveris et
     al. 2014 ("Connected Components in MapReduce and Beyond", large-star
@@ -544,10 +513,10 @@ def connected_components(
     # unionAll halves and preserves the orientation invariant, so the
     # per-round re-orientation/symmetrization distincts are gone
     # (r12, guide §2.4: two fewer full-edge shuffles per round).
-    edges = iter_checkpoint_lazy(_orient(e), reliable)
+    edges = iter_checkpoint_lazy(_orient(e))
     sig = None
     for _ in range(max_rounds):
-        edges = iter_checkpoint_lazy(_small_star(_large_star(edges)), reliable)
+        edges = iter_checkpoint_lazy(_small_star(_large_star(edges)))
         row = edges.agg(
             F.count(F.lit(1)).alias("n"),
             # bit_xor, not sum: ANSI mode makes a long-sum of random
@@ -566,9 +535,7 @@ def connected_components(
     raise RuntimeError(f"connected_components did not converge in {max_rounds} rounds")
 
 
-def k_core(
-    e: DataFrame, k: int = 2, max_rounds: int = 100, reliable: bool | None = None
-) -> DataFrame:
+def k_core(e: DataFrame, k: int = 2, max_rounds: int = 100) -> DataFrame:
     """The k-core of an edge list -> (node, degree): the (unique) maximal
     subgraph in which every node has >= k neighbors, with each
     survivor's within-core degree. The classic density filter (Seidman
@@ -594,11 +561,11 @@ def k_core(
     # ~5.3 vs ~5.5 s — and checkpoint blocks free via ContextCleaner
     # when the result is dropped, while CacheManager entries leak
     # until unpersist)
-    sym = iter_checkpoint(_symmetric(e), reliable)
+    sym = iter_checkpoint(_symmetric(e))
     deg = sym.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
     # one job per round: the convergence count rides the round's own
     # block materialization (r11, iter_checkpoint_count)
-    survivors, n = iter_checkpoint_count(deg.where(F.col("degree") >= k), reliable)
+    survivors, n = iter_checkpoint_count(deg.where(F.col("degree") >= k))
     for _ in range(max_rounds):
         alive = survivors.select("node")
         kept = sym.join(
@@ -607,8 +574,7 @@ def k_core(
         survivors, m = iter_checkpoint_count(
             kept.groupBy(F.col("src").alias("node"))
             .agg(F.count(F.lit(1)).alias("degree"))
-            .where(F.col("degree") >= k),
-            reliable,
+            .where(F.col("degree") >= k)
         )
         if m == n:
             return survivors
@@ -621,7 +587,6 @@ def bfs_distances(
     seeds: DataFrame,
     max_depth: int = 3,
     directed: bool = False,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Multi-source BFS -> (path, distance): the minimum hop count from
     any seed to every node reachable within `max_depth` hops (seeds
@@ -674,13 +639,13 @@ def bfs_distances(
     # 14.9 vs 21.9 s, signature-identical; the VERDICT-suggested
     # repartition(src)+sort persist measured WORSE (14.0 s best,
     # 49 s first call — the sort shuffle dwarfs what SMJ reuse saves)
-    # and was REJECTED. `reliable=True` keeps the durable checkpoint.
-    edges = _static_relation(e.select("src", "dst"), reliable)
+    # and was REJECTED. The persist keeps its lineage, so it recovers
+    # from executor loss in either checkpoint tier.
+    edges = e.select("src", "dst").persist()
     visited, n_frontier = iter_checkpoint_count(
         seeds.select(F.col(seeds.columns[0]).alias("path"))
         .distinct()
-        .select("path", F.lit(0).cast("long").alias("distance")),
-        reliable,
+        .select("path", F.lit(0).cast("long").alias("distance"))
     )
     frontier = export_path_bound(visited.select("path"), n_frontier)
     n_visited = n_frontier
@@ -699,20 +664,19 @@ def bfs_distances(
         seen = export_path_bound(visited.select("path"), n_visited)
         nxt = restrict(hop, "path", seen, anti=True).distinct()
         nxt = nxt.select("path", F.lit(d).cast("long").alias("distance"))
-        nxt, n_frontier = iter_checkpoint_count(nxt, reliable)
+        nxt, n_frontier = iter_checkpoint_count(nxt)
         if n_frontier == 0:
             break
         # lazy: the union's blocks materialize inside the next round's
         # count job (or the caller's action on the last round)
-        visited = iter_checkpoint_lazy(visited.unionByName(nxt), reliable)
+        visited = iter_checkpoint_lazy(visited.unionByName(nxt))
         n_visited += n_frontier
         frontier = export_path_bound(nxt.select("path"), n_frontier)
-    if not _reliable_on(reliable):
-        # every hop ran during construction, so the edge cache is spent:
-        # the returned relation reads hop-round blocks only. Freeing it
-        # here keeps the CacheManager clean for the rest of the session
-        # (worst case a re-executed plan recomputes the projection).
-        edges.unpersist()
+    # every hop ran during construction, so the edge cache is spent:
+    # the returned relation reads hop-round blocks only. Freeing it
+    # here keeps the CacheManager clean for the rest of the session
+    # (worst case a re-executed plan recomputes the projection).
+    edges.unpersist()
     return visited
 
 
@@ -803,7 +767,6 @@ def shortest_paths_weighted(
     seeds: DataFrame,
     rounds: int = 4,
     directed: bool = False,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Bounded Bellman-Ford -> (path, distance): the minimum edge-weight
     sum from any seed to every node reachable within `rounds` hops —
@@ -841,14 +804,13 @@ def shortest_paths_weighted(
     # convergence action — with lazy checkpoints the whole fixed-round
     # relaxation runs as ONE job at the caller's action (the per-round
     # LogicalRDD truncation still bounds analyzer depth, and the edge
-    # projection's blocks are computed once inside that job);
-    # reliable=True keeps the per-round durable materialization
-    edges = iter_checkpoint_lazy(edges.where(F.col("weight") >= 0), reliable)
+    # projection's blocks are computed once inside that job); the
+    # reliable tier keeps the per-round durable materialization
+    edges = iter_checkpoint_lazy(edges.where(F.col("weight") >= 0))
     dist = iter_checkpoint_lazy(
         seeds.select(F.col(seeds.columns[0]).alias("path"))
         .distinct()
-        .select("path", F.lit(0.0).alias("distance")),
-        reliable,
+        .select("path", F.lit(0.0).alias("distance"))
     )
     for _ in range(rounds):
         relaxed = (
@@ -861,7 +823,7 @@ def shortest_paths_weighted(
             .groupBy("path")
             .agg(F.min("distance").alias("distance"))
         )
-        dist = iter_checkpoint_lazy(relaxed, reliable)
+        dist = iter_checkpoint_lazy(relaxed)
     return dist.select("path", F.round("distance", 6).alias("distance"))
 
 
@@ -871,7 +833,6 @@ def personalized_pagerank(
     fields: Sequence[str] | None = None,
     iterations: int = 3,
     damping: float = 0.85,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Personalized PageRank -> (path, rank): the teleport distribution
     concentrates on `seeds` instead of spreading uniformly —
@@ -953,8 +914,7 @@ def personalized_pagerank(
         contribs = iter_checkpoint_lazy(
             fe.join(cranks, "src")
             .groupBy(F.col("dst").alias("path"))
-            .agg(F.sum("c").alias("contrib")),
-            reliable,
+            .agg(F.sum("c").alias("contrib"))
         )
         frontier = contribs.select("path").unionByName(seed_marks.select("path"))
     # support = contribution receivers ∪ seeds present in the graph
@@ -974,7 +934,7 @@ def personalized_pagerank(
     return part1.unionByName(part2).where(F.col("rank") > 0)
 
 
-def clustering_coefficient(e: DataFrame, reliable: bool | None = None) -> DataFrame:
+def clustering_coefficient(e: DataFrame) -> DataFrame:
     """Local clustering coefficient -> (path, degree, n_triangles,
     clustering = 2T / d(d-1)): how close each node's neighborhood is to
     a clique (Watts & Strogatz 1998) — the per-node community-density
@@ -982,48 +942,14 @@ def clustering_coefficient(e: DataFrame, reliable: bool | None = None) -> DataFr
     link-farm/spam-cluster signal (artificially interlinked sites sit
     near 1.0).
 
-    Same compact-forward enumeration as triangle_count_edges (wedges at
+    The same _triangles enumeration as triangle_count_edges (wedges at
     the lowest-degree apex, oriented relation checkpointed once, three
     equi-joins) — but each closed triangle keeps its THREE corners and
     explodes to one row per corner before a keyed count, so per-node
     totals cost one extra |triangles|x3 union, not a second
     enumeration. Degree-1 nodes have an undefined neighborhood pair
     count: clustering reports 0.0 there by convention."""
-    und = (
-        e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionAll(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    withd = und.join(
-        deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a"
-    ).join(deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b")
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = iter_checkpoint(
-        withd.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-            F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddst"),
-        ),
-        reliable,
-    )
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    lower = (F.col("o1.ddst") < F.col("o2.ddst")) | (
-        (F.col("o1.ddst") == F.col("o2.ddst")) & (F.col("o1.dst") < F.col("o2.dst"))
-    )
-    wedges = o1.join(o2, (F.col("o1.src") == F.col("o2.src")) & lower).select(
-        F.col("o1.src").alias("u"), F.col("o1.dst").alias("v"), F.col("o2.dst").alias("w")
-    )
-    tris = wedges.join(
-        oriented.select(F.col("src").alias("v"), F.col("dst").alias("w")), ["v", "w"]
-    )
+    deg, tris = _triangles(e)
     corners = (
         tris.select(F.col("u").alias("n"))
         .unionAll(tris.select(F.col("v").alias("n")))

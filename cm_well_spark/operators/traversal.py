@@ -32,6 +32,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cm_well_spark.operators.graph import reference_edges
 from cm_well_spark.parsers.expansion import (
     ExpandIn,
     ExpandUp,
@@ -58,18 +59,16 @@ def _target_filter(selectors: tuple[FilteredField, ...]) -> Column | None:
 
 
 def _edges(triples: DataFrame, selectors, reverse: bool) -> DataFrame:
-    """(src, dst) edge pairs through the selected fields. Bound field
-    names prune the triples scan to their `p` partitions; the joker
-    reads all reference-valued rows."""
-    named = [s.field for s in selectors if s.field is not None]
-    joker = any(s.field is None for s in selectors)
-    t = triples.where(F.col("current"))
-    if named and not joker:
-        t = t.where(F.col("p").isin(named))
-    t = t.where((F.col("vtype") == "s") & F.col("o").startswith("/"))
+    """(src, dst) edge pairs through the selected fields — graph's
+    reference_edges, undeduplicated. Bound field names prune the triples
+    scan to their `p` partitions; the joker reads all reference-valued
+    rows."""
+    fields = [s.field for s in selectors]
+    named = None if None in fields else fields
+    pairs = reference_edges(triples, named or None, dedup=False)
     if reverse:
-        return t.select(F.col("o").alias("src"), F.col("s").alias("dst"))
-    return t.select(F.col("s").alias("src"), F.col("o").alias("dst"))
+        return pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return pairs
 
 
 def _filtered_paths(infotons: DataFrame, paths: DataFrame, selectors) -> DataFrame:

@@ -9,11 +9,14 @@ PageRank or 15-round closure dies instead of recovering. `checkpoint()`
 (reliable) writes the blocks to the configured checkpoint directory
 (HDFS/object store on a cluster), so recovery re-reads durable files.
 
-Callers pass `reliable=True` per call, or set it fleet-wide via the
-CMW_RELIABLE_CHECKPOINTS env var (how you'd flip it for a 1000-executor
-deployment without threading a flag through every operator). The plans
-are identical either way — only the storage tier of the materialized
-iteration state changes.
+The tier is a deployment setting, not a per-call option: the
+CMW_RELIABLE_CHECKPOINTS env var sets `RELIABLE_CHECKPOINTS` fleet-wide
+(how you'd flip it for a 1000-executor deployment without threading a
+flag through every operator), and the helpers below read it at call
+time. Only these helpers cut lineage; a persisted or lazy frame keeps
+its lineage and so recovers from executor loss in either tier. The
+plans are identical either way — only the storage tier of the
+materialized iteration state changes.
 """
 
 from __future__ import annotations
@@ -30,23 +33,21 @@ RELIABLE_CHECKPOINTS = os.environ.get("CMW_RELIABLE_CHECKPOINTS", "").lower() in
 )
 
 
-def iter_checkpoint(df: DataFrame, reliable: bool | None = None) -> DataFrame:
-    """Materialize one round of iteration state. `reliable=None` defers
-    to the fleet-wide default (CMW_RELIABLE_CHECKPOINTS)."""
-    if reliable is None:
-        reliable = RELIABLE_CHECKPOINTS
-    if not reliable:
+def iter_checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize one round of iteration state, durably when
+    RELIABLE_CHECKPOINTS is set."""
+    if not RELIABLE_CHECKPOINTS:
         return df.localCheckpoint(eager=True)
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
         raise RuntimeError(
-            "reliable=True needs a durable checkpoint dir: call "
+            "reliable checkpoints need a durable checkpoint dir: call "
             "spark.sparkContext.setCheckpointDir('hdfs://... or s3://...') first"
         )
     return df.checkpoint(eager=True)
 
 
-def iter_checkpoint_lazy(df: DataFrame, reliable: bool | None = None) -> DataFrame:
+def iter_checkpoint_lazy(df: DataFrame) -> DataFrame:
     """Round state whose block materialization rides the NEXT action
     instead of a dedicated eager job (r11, guide §5: in the convergence
     loops — closure/CC/BFS/k-core/peel — rounds run on near-empty frames
@@ -60,22 +61,18 @@ def iter_checkpoint_lazy(df: DataFrame, reliable: bool | None = None) -> DataFra
     hits blocks exactly like the eager form, so multi-consumer state
     (BFS visited, CC edges at convergence) never recomputes lineage.
 
-    `reliable=True` keeps the eager durable checkpoint: on a cluster the
-    up-front materialization is the executor-loss recovery point."""
-    if reliable is None:
-        reliable = RELIABLE_CHECKPOINTS
-    if not reliable:
+    The reliable tier keeps the eager durable checkpoint: on a cluster
+    the up-front materialization is the executor-loss recovery point."""
+    if not RELIABLE_CHECKPOINTS:
         return df.localCheckpoint(eager=False)
-    return iter_checkpoint(df, True)
+    return iter_checkpoint(df)
 
 
-def iter_checkpoint_count(
-    df: DataFrame, reliable: bool | None = None
-) -> tuple[DataFrame, int]:
+def iter_checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
     """Materialize one round of iteration state AND return its row count
     from the SAME job. The eager-checkpoint-then-count pattern costs two
     scheduler round-trips per round (eager localCheckpoint itself
     materializes via an internal count, so the data is walked twice);
     the lazy form's first action is the count, so one job does both."""
-    out = iter_checkpoint_lazy(df, reliable)
+    out = iter_checkpoint_lazy(df)
     return out, out.count()

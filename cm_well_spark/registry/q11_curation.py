@@ -36,9 +36,10 @@ from cm_well_spark.registry._core import *  # noqa: F401,F403
     """,
 )
 def dedup_cluster_components(spark, sf_dir):
-    """Near-dup pair list -> connected components (min-label propagation,
-    one join + one groupBy-min per round) -> (doc_id, cluster). The dedup
-    step that turns pairwise evidence into keep-one-representative groups.
+    """Near-dup pair list -> connected components (graph.py's star
+    contraction, then a left join that labels singletons) -> (doc_id,
+    cluster). The dedup step that turns pairwise evidence into
+    keep-one-representative groups.
     Oracle = transitive closure via DuckDB recursive CTE."""
     from cm_well_spark.operators.dedup import duplicate_clusters, jaccard_pairs
     from cm_well_spark.sources import tables as tbl

@@ -126,7 +126,7 @@ def test_personalized_pagerank_many_seeds_embed_no_literal_list(triples, monkeyp
 
     with monkeypatch.context() as m:
         # un-truncated plan: every round's scan restriction stays visible
-        m.setattr(graph, "iter_checkpoint_lazy", lambda df, reliable=None: df)
+        m.setattr(graph, "iter_checkpoint_lazy", lambda df: df)
         assert _longest_in_list(ranks()[0]) <= keyset.LITERAL_MAX
         m.setattr(keyset, "LITERAL_MAX", 10 * len(seeds))
         assert _longest_in_list(ranks()[0]) >= len(seeds)  # the probe sees lists

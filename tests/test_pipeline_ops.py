@@ -431,15 +431,17 @@ def test_unigram_cross_entropy_orders_quality(spark):
 # ---- curation: clustering / sampling / decontamination / filtering -------
 
 
-def test_duplicate_clusters_chain(spark):
-    # a 4-node chain (0-1, 1-2, 2-3) + isolated 9: propagation needs
-    # several rounds (worst case for min-label), all land on cluster 0
+@pytest.mark.parametrize("length", [4, 20])
+def test_duplicate_clusters_chain(spark, length):
+    # a chain 0-1-...-(length-1) + isolated 99: a path is the worst case
+    # for label propagation (a round per hop); every chain node lands on
+    # cluster 0, however long the chain
     from cm_well_spark.operators.dedup import duplicate_clusters
 
-    nodes = spark.createDataFrame([(i,) for i in (0, 1, 2, 3, 9)], ["doc_id"])
-    pairs = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["id_a", "id_b"])
+    nodes = spark.createDataFrame([(i,) for i in [*range(length), 99]], ["doc_id"])
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(length - 1)], ["id_a", "id_b"])
     got = {r["doc_id"]: r["cluster"] for r in duplicate_clusters(nodes, pairs).collect()}
-    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 9: 9}
+    assert got == {**{i: 0 for i in range(length)}, 99: 99}
 
 
 def test_duplicate_clusters_two_components(spark):

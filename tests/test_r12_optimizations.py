@@ -147,9 +147,9 @@ def test_traversal_seed_count_elided(spark, sf_dir):
     calls = []
     orig = traversal.iter_checkpoint_count
 
-    def spy(df, reliable=None):
+    def spy(df):
         calls.append(1)
-        return orig(df, reliable)
+        return orig(df)
 
     traversal.iter_checkpoint_count = spy
     try:
