@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from cm_well_spark.plans.iterative import iter_checkpoint, iter_checkpoint_lazy
+from cm_well_spark.plans.keyset import restrict
 
 
 # ---------------------------------------------------------------------------
@@ -23,8 +24,8 @@ def overwrite(infotons: DataFrame, version_rows: DataFrame) -> DataFrame:
     path (InputHandler.scala:131; CRUDServiceFS.putOverwrites:301). The
     only computed bit is the current-flag flip per affected path."""
     affected = version_rows.select("path").distinct()
-    untouched = infotons.join(F.broadcast(affected), "path", "left_anti")
-    touched = infotons.join(F.broadcast(affected), "path", "left_semi").unionByName(
+    untouched = restrict(infotons, "path", affected, anti=True)
+    touched = restrict(infotons, "path", affected).unionByName(
         version_rows.select(*infotons.columns)
     )
     w = Window.partitionBy("path").orderBy(F.desc("index_time"))
@@ -471,11 +472,9 @@ def info_path(spark: SparkSession, sf_dir: str, paths: list[str], root: str | No
 
     out = materialize(spark, sf_dir, root)
     fname = F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1)
-    plist = list(paths)
 
     store = (
-        spark.read.parquet(os.path.join(out, "infotons"))
-        .where(F.col("path").isin(plist))
+        restrict(spark.read.parquet(os.path.join(out, "infotons")), "path", paths)
         .select(
             "path",
             F.lit("store").alias("layer"),
@@ -487,8 +486,7 @@ def info_path(spark: SparkSession, sf_dir: str, paths: list[str], root: str | No
         )
     )
     index = (
-        spark.read.parquet(os.path.join(out, "triples"))
-        .where(F.col("s").isin(plist))
+        restrict(spark.read.parquet(os.path.join(out, "triples")), "s", paths)
         .select(
             F.col("s").alias("path"),
             F.lit("index").alias("layer"),
@@ -505,8 +503,7 @@ def info_path(spark: SparkSession, sf_dir: str, paths: list[str], root: str | No
     delta_dir = os.path.join(out, "infotons_delta")
     if os.path.isdir(delta_dir) and any(b.startswith("batch=") for b in os.listdir(delta_dir)):
         delta = (
-            spark.read.parquet(delta_dir)
-            .where(F.col("path").isin(plist))
+            restrict(spark.read.parquet(delta_dir), "path", paths)
             .select(
                 "path",
                 F.lit("delta").alias("layer"),

@@ -39,6 +39,7 @@ from cm_well_spark.parsers.ap import (
     TermAgg,
     parse_ap,
 )
+from cm_well_spark.plans.keyset import export_path_bound, restrict
 
 
 class AggregationError(ValueError):
@@ -256,8 +257,10 @@ def _term(
     subs = []
     if agg.subs:
         # keep per-bucket membership for children: (key, path)
-        membership = ex.select(_key_col(agg.field).alias("key"), "path").join(
-            F.broadcast(top.select("key")), "key", "left_semi"
+        membership = restrict(
+            ex.select(_key_col(agg.field).alias("key"), "path"),
+            "key",
+            export_path_bound(top.select("key"), agg.size),
         )
         src = df.join(membership, "path").select("key", *df.columns)
         for sub in agg.subs:

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from cm_well_spark.operators.dedup import _shingle_rows
 from cm_well_spark.operators.text import quality_features, quality_score, whitespace_token_count
 from cm_well_spark.plans.iterative import iter_checkpoint, iter_checkpoint_lazy
+from cm_well_spark.plans.keyset import restrict
 
 
 def _rate_hex(rate: float) -> str:
@@ -73,13 +74,14 @@ def contamination_overlap(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, n_hits): distinct word-k-grams each corpus doc shares with
-    the benchmark set. The benchmark shingle set is deduplicated then
-    broadcast (eval suites are ~MBs against a ~100 TB corpus); corpus
+    the benchmark set. The corpus shingles are restricted to the
+    deduplicated benchmark shingle set through keyset.restrict (eval
+    suites are ~MBs against a ~100 TB corpus, so it broadcasts); corpus
     shingles never shuffle."""
     c = _shingle_rows(corpus, text_col, id_col, k)
     b = _shingle_rows(benchmark, text_col, id_col, k).select("sh").distinct()
     return (
-        c.join(F.broadcast(b), "sh")
+        restrict(c, "sh", b)
         .groupBy("id")
         .agg(F.count("*").alias("n_hits"))
         .select(F.col("id").alias(id_col), "n_hits")
@@ -94,12 +96,12 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Corpus minus contaminated docs (>= min_hits shared k-grams): an
-    anti join against the (small) contaminated-id set."""
+    """Corpus minus contaminated docs (>= min_hits shared k-grams): a
+    keyset.restrict anti join against the contaminated-id set."""
     bad = contamination_overlap(corpus, benchmark, k, text_col, id_col).where(
         F.col("n_hits") >= min_hits
     )
-    return corpus.join(F.broadcast(bad.select(id_col)), id_col, "left_anti")
+    return restrict(corpus, id_col, bad.select(id_col), anti=True)
 
 
 def weighted_sample(
@@ -381,12 +383,13 @@ def url_filter(
 ) -> DataFrame:
     """Domain-blocklist filter (the RefinedWeb/CCNet URL-filtering pass):
     drop documents whose host IS a blocked domain or any subdomain of
-    one. The blocklist (10^4-10^6 rows in the published pipelines)
-    broadcasts; matching is suffix-correct without a cross join or a
+    one. The blocklist (10^4-10^6 rows in the published pipelines) is a
+    keyset.restrict key list, so it broadcasts past a few hundred
+    entries; matching is suffix-correct without a cross join or a
     per-entry regex: the host explodes into its dot-suffixes
     (a.b.example.com -> [a.b.example.com, b.example.com, example.com] —
-    bounded by label count, ~5), each equi-joined against the broadcast
-    blocklist. Hit ids come back to the corpus as an anti join keyed on
+    bounded by label count, ~5), each restricted to the blocklist.
+    Hit ids come back to the corpus as an anti join keyed on
     `id_col`; blocklist hits are a small fraction of any real corpus, so
     AQE turns that anti join into a broadcast — the corpus itself never
     shuffles in either stage."""
@@ -397,13 +400,12 @@ def url_filter(
         F.sequence(F.lit(1), n),
         lambda i: F.concat_ws(".", F.slice(labels, i, n - i + 1)),
     )
-    spark = df.sparkSession
-    blocked = F.broadcast(
-        spark.createDataFrame([(d.lower(),) for d in blocked_domains], "dom string")
-    )
     hit_ids = (
-        df.select(F.col(id_col), F.explode(suffixes).alias("dom"))
-        .join(blocked, "dom", "left_semi")
+        restrict(
+            df.select(F.col(id_col), F.explode(suffixes).alias("dom")),
+            "dom",
+            [d.lower() for d in blocked_domains],
+        )
         .select(id_col)
         .distinct()
     )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from cm_well_spark.operators.graph import connected_components
 from cm_well_spark.operators.text import normalize_text, spread_for_cpu
 from cm_well_spark.plans.iterative import iter_checkpoint_count, iter_checkpoint_lazy
+from cm_well_spark.plans.keyset import restrict
 
 # ---------------------------------------------------------------------------
 # exact
@@ -116,7 +117,7 @@ def jaccard_pairs(
             .where(F.col("n") > max_shingle_freq)
             .select("sh")
         )
-        cold = sh.join(F.broadcast(hot), "sh", "left_anti")
+        cold = restrict(sh, "sh", hot, anti=True)
         a, b = cold.alias("a"), cold.alias("b")
         cand = (
             a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
@@ -604,8 +605,8 @@ def incremental_dedup_verdicts(
             .where(F.col("n") > max_shingle_freq)
             .select("sh")
         )
-        sh_seen = sh_seen.join(F.broadcast(hot), "sh", "left_anti")
-        sh_new = sh_new.join(F.broadcast(hot), "sh", "left_anti")
+        sh_seen = restrict(sh_seen, "sh", hot, anti=True)
+        sh_new = restrict(sh_new, "sh", hot, anti=True)
     sz_new = sh_new.groupBy("id").agg(F.count("*").alias("sz_n"))
     sz_seen = sh_seen.groupBy("id").agg(F.count("*").alias("sz_s"))
     inter = (

@@ -34,15 +34,16 @@ from pyspark.sql import functions as F
 
 from cm_well_spark.model.compaction import repair_paths as repair_store_paths  # noqa: F401
 from cm_well_spark.model.lakehouse import triples_of
+from cm_well_spark.plans.keyset import restrict
 
 
 def verify_paths(infotons: DataFrame, triples: DataFrame, paths: list[str]) -> DataFrame:
     """x-verify analog: one row per audited path with the violation
     counts and the overall `consistent` verdict (Operations.scala
-    verify:74-100). Bounded path set -> every comparison is an isin-
-    pruned slice; the triples diff is exceptAll on the full row shape,
-    so value drift counts as both a ghost and a missing row."""
-    slice_ = infotons.where(F.col("path").isin(paths))
+    verify:74-100). Every comparison runs on the audited paths' slice
+    (keyset.restrict); the triples diff is exceptAll on the full row
+    shape, so value drift counts as both a ghost and a missing row."""
+    slice_ = restrict(infotons, "path", paths)
     per = slice_.groupBy("path").agg(
         F.count("*").alias("n_versions"),
         F.sum(F.when(F.col("current"), 1).otherwise(0)).alias("n_current"),
@@ -51,7 +52,7 @@ def verify_paths(infotons: DataFrame, triples: DataFrame, paths: list[str]) -> D
         F.max(F.when(F.col("current"), F.col("index_time"))).alias("__cur_it"),
     )
     expected = triples_of(slice_)
-    actual = triples.where(F.col("s").isin(paths)).select(*expected.columns)
+    actual = restrict(triples, "s", paths).select(*expected.columns)
     missing = (
         expected.exceptAll(actual)
         .groupBy(F.col("s").alias("path"))
@@ -89,20 +90,18 @@ def repair_versions(infotons: DataFrame, paths: list[str] | None = None) -> Data
     tiebreak — the ES-duplicate purge of Operations.scala:172-185) and
     recompute `current` so exactly the latest version per path carries
     it. With `paths` given, rows of other paths pass through untouched."""
-    scoped = F.lit(True) if paths is None else F.col("path").isin(paths)
-    marked = infotons.withColumn("__in", scoped)
+    if paths is not None:
+        return repair_versions(restrict(infotons, "path", paths)).unionByName(
+            restrict(infotons, "path", paths, anti=True)
+        )
     w_dup = Window.partitionBy("path", "uuid").orderBy(F.desc("current"), F.desc("index_time"))
     deduped = (
-        marked.withColumn("__dn", F.row_number().over(w_dup))
-        .where(~F.col("__in") | (F.col("__dn") == 1))
+        infotons.withColumn("__dn", F.row_number().over(w_dup))
+        .where(F.col("__dn") == 1)
         .drop("__dn")
     )
     w_cur = Window.partitionBy("path").orderBy(F.desc("index_time"), F.desc("uuid"))
-    return (
-        deduped.withColumn("__rc", F.row_number().over(w_cur) == 1)
-        .withColumn("current", F.when(F.col("__in"), F.col("__rc")).otherwise(F.col("current")))
-        .drop("__in", "__rc")
-    )
+    return deduped.withColumn("current", F.row_number().over(w_cur) == 1)
 
 
 def repair_derived_triples(
@@ -112,8 +111,6 @@ def repair_derived_triples(
     wholesale by re-derivation from the repaired docs — re-indexing
     missing rows and purging ghosts in one stroke (the purgeNotFound +
     reindex arms of fixWith, Operations.scala:200-240)."""
-    kept = triples.where(~F.col("s").isin(paths))
-    rederived = triples_of(
-        repaired_infotons.where(F.col("path").isin(paths))
-    ).select(*triples.columns)
+    kept = restrict(triples, "s", paths, anti=True)
+    rederived = triples_of(restrict(repaired_infotons, "path", paths)).select(*triples.columns)
     return kept.unionByName(rederived)

@@ -53,13 +53,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cm_well_spark.plans.bounds import export_path_bound
 from cm_well_spark.plans.iterative import (
     iter_checkpoint,
     iter_checkpoint_count,
     iter_checkpoint_lazy,
 )
-from cm_well_spark.plans.keyset import restrict
+from cm_well_spark.plans.keyset import export_path_bound, restrict
 
 # The TPC-H-shaped reference fields of the test model (builder.py:12-19).
 # Callers on other corpora pass their own list; None = joker (every

@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from cm_well_spark.plans.iterative import iter_checkpoint, iter_checkpoint_lazy
+from cm_well_spark.plans.keyset import restrict
 
 _LBL = "__as_"  # label-column prefix: internal, never user-visible
 
@@ -66,7 +67,9 @@ class GraphTraversal:
     set — and `V()` is the whole vertex set, so those frontiers carry no
     static broadcast hint; AQE's runtime size check converts the semi
     join to a broadcast when the actual set is small (VERDICT r1
-    finding 4).
+    finding 4). `bounded` drives only those frontier hints: a named
+    side-effect set is bounded by nothing, so except_/retain restrict
+    by it through keyset.restrict, which counts it once.
 
     The frontier frame is `path` plus one `__as_<name>` column per
     `as_` label seen so far; hops preserve label columns via an inner
@@ -270,30 +273,16 @@ class GraphTraversal:
 
     def except_(self, name: str) -> "GraphTraversal":
         """ExceptFilterPipe over a named set: keep elements NOT in it —
-        one anti join against the (traversal-bounded) set."""
+        one keyset.restrict anti join against the set."""
         if name not in self.side_effects:
             raise ValueError(f"no side-effect set named {name!r}")
-        return self._with(
-            self.frontier.join(
-                F.broadcast(self.side_effects[name].withColumnRenamed("path", "__x")),
-                F.col("path") == F.col("__x"),
-                "left_anti",
-            ),
-            self.bounded,
-        )
+        return self._with(restrict(self.frontier, "path", self.side_effects[name], anti=True), self.bounded)
 
     def retain(self, name: str) -> "GraphTraversal":
         """RetainFilterPipe over a named set: keep ONLY elements in it."""
         if name not in self.side_effects:
             raise ValueError(f"no side-effect set named {name!r}")
-        return self._with(
-            self.frontier.join(
-                F.broadcast(self.side_effects[name].withColumnRenamed("path", "__x")),
-                F.col("path") == F.col("__x"),
-                "left_semi",
-            ),
-            self.bounded,
-        )
+        return self._with(restrict(self.frontier, "path", self.side_effects[name]), self.bounded)
 
     def cap(self, name: str) -> DataFrame:
         """SideEffectCapPipe: emit the named aggregate/store set."""

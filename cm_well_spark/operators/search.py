@@ -25,10 +25,9 @@ from pyspark.sql import functions as F
 
 from cm_well_spark.parsers.qp import FieldFilter, parse_qp
 from cm_well_spark.parsers.sort import DEFAULT_SORT, SortKey, parse_sort_by
-from cm_well_spark.plans.bounds import export_path_bound, proven_path_bound
 from cm_well_spark.plans.compile import SYSTEM_COLUMNS, compile_filter
 from cm_well_spark.plans.iterative import iter_checkpoint
-from cm_well_spark.plans.keyset import restrict
+from cm_well_spark.plans.keyset import export_path_bound, proven_path_bound, restrict
 
 MAX_OFFSET = 1_000
 MAX_LENGTH = 10_000
@@ -174,7 +173,7 @@ def search(
             # export the proven row bound for downstream strategy choices
             # (traversal seed broadcasts — zero extra jobs there); current
             # visibility means <=1 row per candidate path. Strategy only:
-            # consumers must never derive rows from it (plans/bounds.py).
+            # consumers must never derive rows from it (plans/keyset.py).
             export_path_bound(df, proven_bound)
         return df
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from cm_well_spark.plans.iterative import iter_checkpoint, iter_checkpoint_lazy
+from cm_well_spark.plans.keyset import export_path_bound, restrict
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -402,7 +403,7 @@ def ivf_topk(
     )[:n_probe]
     probe = [c[0] for c in scored_cells]
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cand = assigned.where(F.col("cell").isin(probe))
+    cand = restrict(assigned, "cell", probe)
     return (
         cand.select(F.col("id").alias(id_col), F.round(cosine(F.col("v"), q), 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
@@ -713,7 +714,7 @@ def ivfpq_topk(
         c[0]
         for c in sorted(cents, key=lambda c: -sum(a * b for a, b in zip(query_vec, c[1])))[:n_probe]
     ]
-    cand_ids = assigned.where(F.col("cell").isin(probe)).select(F.col("id").alias(id_col))
+    cand_ids = restrict(assigned, "cell", probe).select(F.col("id").alias(id_col))
     cand = df.join(cand_ids, id_col, "left_semi")
     kprime = k if rerank == 0 else rerank * k
     adc = pq_topk(cand, query_vec, k=kprime, m=m, n_codes=n_codes, vec_col=vec_col, id_col=id_col)
@@ -722,7 +723,7 @@ def ivfpq_topk(
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     cast = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     return (
-        df.join(F.broadcast(adc.select(id_col)), id_col, "left_semi")
+        restrict(df, id_col, export_path_bound(adc.select(id_col), kprime))
         .select(F.col(id_col), F.round(cosine(cast, q), 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
@@ -1081,7 +1082,7 @@ def hard_negatives(
                 F.slice(F.reverse(F.array_sort(ranked)), 1, n_probe)["cell"]
             ).alias("cell"),
         ).select("cell").distinct()
-        keep = assign.join(F.broadcast(probe), "cell", "left_semi").select(
+        keep = restrict(assign, "cell", export_path_bound(probe, prune_cells)).select(
             F.col(id_col).alias("neg_id")
         )
         c = c.join(keep, "neg_id", "left_semi")
@@ -1273,7 +1274,7 @@ def binary_rerank_topk(
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     cast = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     return (
-        embs.join(F.broadcast(short.select(id_col)), id_col, "left_semi")
+        restrict(embs, id_col, export_path_bound(short.select(id_col), shortlist))
         .select(F.col(id_col), F.round(cosine(cast, q), 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)

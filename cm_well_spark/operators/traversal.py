@@ -43,10 +43,9 @@ from cm_well_spark.parsers.expansion import (
     parse_xg,
     parse_yg,
 )
-from cm_well_spark.plans.bounds import export_path_bound, proven_path_bound
 from cm_well_spark.plans.compile import compile_filter
 from cm_well_spark.plans.iterative import iter_checkpoint_count, iter_checkpoint_lazy
-from cm_well_spark.plans.keyset import restrict
+from cm_well_spark.plans.keyset import export_path_bound, proven_path_bound, restrict
 
 XG_LIMIT = 10_000  # webservice.xg.limit (application.conf:71)
 
@@ -152,7 +151,7 @@ def expand_out(
     # iterative expansion: checkpoint the frontier each level — without
     # this the accumulated plan re-evaluates the whole chain 2^levels
     # times (measured 10x wall on a 2-level xg). Seed-bound elision (r11):
-    # search() exports its proven row bound (plans/bounds.py), so bounded
+    # search() exports its proven row bound (plans/keyset.py), so bounded
     # seed sets skip the counted checkpoint; the lazy checkpoint's blocks
     # ride the first consuming action. Per level, the new frontier is a
     # subset of the hop's targets, so a predicate-stats bound on the hop

@@ -73,6 +73,9 @@ def iter_checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
     from the SAME job. The eager-checkpoint-then-count pattern costs two
     scheduler round-trips per round (eager localCheckpoint itself
     materializes via an internal count, so the data is walked twice);
-    the lazy form's first action is the count, so one job does both."""
+    the lazy form's first action is the count, so one job does both.
+    The count runs on the checkpointed rows themselves: DataFrame.count()
+    would plan a partial and a final aggregate, which AQE runs as two
+    jobs."""
     out = iter_checkpoint_lazy(df)
-    return out, out.count()
+    return out, out._jdf.queryExecution().toRdd().count()

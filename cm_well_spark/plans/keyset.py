@@ -1,18 +1,22 @@
 """One way to restrict a relation to a set of keys.
 
-Reads and writes keep cutting a relation down to a set of infoton paths:
-xg/yg/gqp hop frontiers, search candidate hydration, `_out` batch gets,
-the merge writer's affected paths, merge-on-read reconciliation, graph
-frontiers and sketch recounts. `restrict` picks the physical route for
-every one of them, from one cap table, in two steps.
+Reads and writes keep cutting a relation down to a set of keys: xg/yg/gqp
+hop frontiers, search candidate hydration, `_out` batch gets, the merge
+writer's affected paths, merge-on-read reconciliation, graph frontiers,
+sketch recounts, `_ow` overwrite, x-verify/x-fix, pull fetches, the
+materialized-view agent's changed and affected subjects, Gremlin
+except/retain sets, decontamination and URL blocklists, hot-shingle
+guards, term sub-aggregation buckets and ANN probe cells and shortlists.
+`restrict` picks the physical route for every one of them, from one cap
+table, in two steps.
 
 Bound. A driver list is bounded by its length. A key frame is bounded by
-its plans/bounds.py proof or, without one, by one counted checkpoint:
-the keys are lazily checkpointed and a single aggregate job returns
-their count and their key range. The count is exported on the caller's
-frame as its proof, and the checkpoint, count and range stay on it, so
-every later restriction by the same frame pays no second job and its
-plan shares one broadcast exchange with the first.
+its proof (export_path_bound, below) or, without one, by one counted
+checkpoint: the keys are lazily checkpointed and a single job saves them
+while it observes their count and their key range. The count is
+exported on the caller's frame as its proof, and the checkpoint, count
+and range stay on it, so every later restriction by the same frame pays
+no second job and its plan shares one broadcast exchange with the first.
 
 Route.
   - A list of at most LITERAL_MAX keys becomes `between(min, max) &
@@ -54,26 +58,73 @@ and the driver cost explodes.
 
 BROADCAST_MAX is the session's 64 MB autoBroadcastJoinThreshold at about
 64 B per path.
+
+What stays hand-routed. `restrict` keeps rows of one relation by key
+membership and carries no column of the key side, so a join stays
+outside it when it is not that: 1-row aggregate crossJoins; joins that
+carry columns from the small side (similarity query batches, curation
+rates and bucket prefixes, temporal sizes, the compaction interval
+joins); SPARQL VALUES inline data (the UNDEF theta semi join's null-safe
+OR-equality is not a key equality) and the graph-name domain;
+query-constant predicate lists (Gremlin labels, graph fields, SPARQL
+IN/FROM); Gremlin's `V(paths)` seed frontiers, whose hint keeps the
+later hops' joins broadcast (without it they plan a sort-merge join);
+and plain unhinted semi joins, which already leave the route to Spark.
+
+Proofs. A producer that can PROVE an upper bound on its row count
+(search()'s index-route predicate-stats algebra or paging limit, a
+traversal's stats-bounded hop, a contract size such as a top-k) exports
+it with export_path_bound, and `restrict` reuses it instead of paying
+the counted checkpoint. The carrier is an instance attribute on the
+DataFrame object, which is fail-safe but fragile: ANY transformation
+returns a new DataFrame and drops it, and consumers then fall back to
+the counted route. So the protocol is explicit:
+
+- the reader looks ONLY in the instance __dict__, never through
+  DataFrame.__getattr__: a dataset with a column literally named
+  `_cmw_path_bound` must not resolve to a Column (which would make
+  `bound <= cap` raise inside the consumer);
+- the reader type-checks, so nothing but an int ever escapes;
+- the bound is STRATEGY-ONLY: consumers may pick a join route with it,
+  but must never derive rows from it.
+
+Pinned by tests/test_r12_optimizations.py: the registry's xg/yg seed
+searches export a bound and their traversals skip the seed count job;
+a refactor that drops the attribute degrades to the counted route with
+identical rows.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cm_well_spark.plans.bounds import export_path_bound, proven_path_bound
 from cm_well_spark.plans.iterative import iter_checkpoint_lazy
 
 LITERAL_MAX = 256
 BROADCAST_MAX = 1_000_000
 
 _KEY = "__keyset_key"
+#: instance attribute a proven key frame carries: its row upper bound
+_BOUND_ATTR = "_cmw_path_bound"
 #: instance attribute a counted key frame carries: (checkpointed keys,
 #: count, range), so every later restriction by that frame reuses them
 _COUNTED_ATTR = "_cmw_keyset_counted"
+
+
+def export_path_bound(df: DataFrame, bound: int) -> DataFrame:
+    """Attach a PROVEN row upper bound to `df` (mutates and returns it)."""
+    df.__dict__[_BOUND_ATTR] = int(bound)
+    return df
+
+
+def proven_path_bound(df: DataFrame) -> int | None:
+    """The proven row bound carried by `df`, or None when absent."""
+    bound = df.__dict__.get(_BOUND_ATTR)
+    return bound if isinstance(bound, int) else None
 
 
 def _key_frame(keys: DataFrame) -> tuple[DataFrame, int, tuple | None]:
@@ -86,7 +137,12 @@ def _key_frame(keys: DataFrame) -> tuple[DataFrame, int, tuple | None]:
     if bound is not None:
         return frame, bound, None
     frame = iter_checkpoint_lazy(frame)
-    bound, lo, hi = frame.agg(F.count(F.lit(1)), F.min(_KEY), F.max(_KEY)).first()
+    # one job saves the checkpoint and observes the count and range; an
+    # aggregate action would cost AQE a second job for its exchange
+    seen = Observation()
+    observed = frame.observe(seen, F.count(F.lit(1)), F.min(_KEY), F.max(_KEY))
+    observed.write.format("noop").mode("overwrite").save()
+    bound, lo, hi = seen.get.values()
     export_path_bound(keys, bound)
     counted = keys.__dict__[_COUNTED_ATTR] = (frame, bound, None if lo is None else (lo, hi))
     return counted

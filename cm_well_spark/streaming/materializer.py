@@ -10,14 +10,14 @@ SPARQL materializer over them, and writes derived infotons back.
 Spark-first shape: ONE streaming query with foreachBatch doing
 SEMI-NAIVE incremental view maintenance:
 
-  micro-batch of changed infotons (tiny, broadcastable)
+  micro-batch of changed infotons (counted, so keyset.restrict routes it)
     -> Δ-solutions: the BGP evaluated once per pattern with THAT pattern's
        frame restricted to triples of changed docs (a changed doc only
        changes triples whose SUBJECT is its path, so this is a sound delta)
     -> affected derived-subject set A = Δ-solution subjects
        ∪ provenance(src ∈ changed) ∪ changed
     -> recompute solutions for A only (the pattern binding the template
-       subject is seeded with A — a broadcast semi join, not a full scan)
+       subject is seeded with A — a semi join, not a full scan)
     -> delete derived rows with subject ∈ A, append the recomputed rows
        (retraction falls out: a subject whose solutions vanished gets
        deletes and no re-inserts).
@@ -54,7 +54,8 @@ from cm_well_spark.operators.sparql.compiler import (
     _pattern_df,
 )
 from cm_well_spark.operators.sparql.parser import Var, parse_sparql
-from cm_well_spark.plans.iterative import iter_checkpoint
+from cm_well_spark.plans.iterative import iter_checkpoint_count
+from cm_well_spark.plans.keyset import export_path_bound, restrict
 
 
 class SparqlTriggeredProcessor:
@@ -90,9 +91,9 @@ class SparqlTriggeredProcessor:
 
     def _bgp(self, scope: DataFrame, seeded_idx: int | None, seed: DataFrame | None) -> DataFrame:
         """Evaluate the (plain) BGP over `scope`; if `seeded_idx` is given,
-        that pattern's frame is built from scope semi-joined to `seed`
-        subjects (broadcast) and joined FIRST, so every later join starts
-        from the small side."""
+        that pattern's frame is built from scope restricted to `seed`
+        subjects (keyset.restrict) and joined FIRST, so every later join
+        starts from the small side."""
         g = self.query.where
         order = sorted(range(len(g.triples)), key=lambda i: _est_cost(g.triples[i], None))
         if seeded_idx is not None:
@@ -101,7 +102,7 @@ class SparqlTriggeredProcessor:
         for i in order:
             src = scope
             if seeded_idx is not None and i == seeded_idx and seed is not None:
-                src = scope.join(F.broadcast(seed.withColumnRenamed("path", "s")), "s", "left_semi")
+                src = restrict(scope, "s", seed)
             frames[i] = _pattern_df(src, g.triples[i], i)[0]
         df = reduce(_join, [frames[i] for i in order])
         for flt in g.filters:
@@ -150,13 +151,13 @@ class SparqlTriggeredProcessor:
     def process_batch(self, batch_df: DataFrame, batch_id: int = 0) -> DataFrame:
         """foreachBatch body: incremental recompute for affected subjects
         (see module docstring); returns the freshly derived rows."""
-        changed = batch_df.select("path").distinct().transform(iter_checkpoint)
+        # the checkpoint's own job counts the key sets; their counts are
+        # exported as bounds, so keyset.restrict adds no job of its own
+        changed = export_path_bound(*iter_checkpoint_count(batch_df.select("path").distinct()))
         batch_triples = triples_of(batch_df).select(*self.base_triples.columns)
         # live scope: changed docs' triples come from the batch; their OLD
-        # rows in base are masked by a broadcast anti join (no global dedup)
-        scope = self.base_triples.join(
-            F.broadcast(changed.withColumnRenamed("path", "s")), "s", "left_anti"
-        ).unionByName(batch_triples)
+        # rows in base are masked by an anti join (no global dedup)
+        scope = restrict(self.base_triples, "s", changed, anti=True).unionByName(batch_triples)
 
         if not (self.incremental and self.subj_var):
             derived = sparql_query(scope, self.construct_sparql, limit_cap=None)
@@ -169,12 +170,9 @@ class SparqlTriggeredProcessor:
         affected = changed.unionByName(new_subjects)
         if live is not None:
             prov = self.spark.read.parquet(os.path.join(live, "provenance"))
-            old_affected = (
-                prov.join(F.broadcast(changed.withColumnRenamed("path", "src")), "src", "left_semi")
-                .select(F.col("s").alias("path"))
-            )
+            old_affected = restrict(prov, "src", changed).select(F.col("s").alias("path"))
             affected = affected.unionByName(old_affected)
-        affected = affected.distinct().transform(iter_checkpoint)
+        affected = export_path_bound(*iter_checkpoint_count(affected.distinct()))
 
         # recompute solutions ONLY for affected subjects: seed the pattern
         # binding the template subject with the affected set
@@ -187,11 +185,7 @@ class SparqlTriggeredProcessor:
             # template subject never appears as a pattern subject: recompute
             # solutions then mask (still no full-base shuffle — the BGP is
             # the query's own cost)
-            sols = self._bgp(scope, None, None).join(
-                F.broadcast(affected.withColumnRenamed("path", self.subj_var)),
-                self.subj_var,
-                "left_semi",
-            )
+            sols = restrict(self._bgp(scope, None, None), self.subj_var, affected)
         else:
             sols = self._bgp(scope, subj_idx, affected)
         fresh = self._template_rows(sols)
@@ -213,11 +207,10 @@ class SparqlTriggeredProcessor:
         if full or live is None:
             out, out_prov = derived, prov
         else:
-            mask = F.broadcast(affected.withColumnRenamed("path", "s"))
             old = self.spark.read.parquet(os.path.join(live, "triples"))
-            out = old.join(mask, "s", "left_anti").unionByName(derived)
+            out = restrict(old, "s", affected, anti=True).unionByName(derived)
             old_prov = self.spark.read.parquet(os.path.join(live, "provenance"))
-            out_prov = old_prov.join(mask, "s", "left_anti").unionByName(prov)
+            out_prov = restrict(old_prov, "s", affected, anti=True).unionByName(prov)
         tables = {"triples": out}
         if out_prov is not None:
             tables["provenance"] = out_prov

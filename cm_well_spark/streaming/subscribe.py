@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cm_well_spark.model.schema import INFOTON_SCHEMA
+from cm_well_spark.plans.keyset import restrict
 
 
 class RuleParseError(ValueError):
@@ -110,7 +111,7 @@ def rule_filter(rule: Rule) -> Column:
             vals = F.col("fields").getItem(fname)
             exists = vals.isNotNull() & (F.size(vals) > 0)
             if values:
-                hit = F.exists(vals, lambda v: v["value"].isin(*values))
+                hit = F.arrays_overlap(F.transform(vals, lambda v: v["value"]), F.array(*map(F.lit, values)))
                 entry_conds.append(exists & F.coalesce(hit, F.lit(False)))
             else:
                 entry_conds.append(exists)
@@ -328,8 +329,7 @@ class SubscriptionManager:
 
 def pull_infotons(infotons: DataFrame, uuids: list[str]) -> DataFrame:
     """The fetch half of handlePull (:272-281 getInfotonsByPathOrUuid):
-    resolve drained uuids back to full infotons for rendering; bounded
-    by the pull queue's bulk size, so the isin literal prunes the scan."""
-    if not uuids:
-        return infotons.limit(0)
-    return infotons.where(F.col("uuid").isin(uuids))
+    resolve drained uuids back to full infotons for rendering, through
+    keyset.restrict: a drain holds at most the queue's bulk size (100 by
+    default), so it stays a literal list that prunes the scan."""
+    return restrict(infotons, "uuid", uuids)

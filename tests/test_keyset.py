@@ -3,15 +3,17 @@ and the write/graph paths that go through it."""
 
 from __future__ import annotations
 
+import ast
 import re
 from datetime import datetime
+from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
 from cm_well_spark.plans import keyset
-from cm_well_spark.plans.bounds import export_path_bound, proven_path_bound
-from cm_well_spark.plans.keyset import restrict
+from cm_well_spark.plans.keyset import export_path_bound, proven_path_bound, restrict
 
 
 def _analyzed(df) -> str:
@@ -69,6 +71,22 @@ def test_frame_counted_once_and_never_collected(spark, table, monkeypatch):
     plain = restrict(table, "path", big, anti=True)
     assert "strategy=broadcast" not in _analyzed(plain)
     assert plain.count() == 40
+
+
+def test_counted_bound_costs_one_job(spark, table):
+    """Counting a key frame is one job: it saves the checkpoint while it
+    observes the count and range, and the restriction runs nothing."""
+    keys = spark.createDataFrame([("/k/005",), ("/k/007",)], "p string")
+    sc = spark.sparkContext
+    sc.setJobGroup("keyset_count_test", "counted key frame")
+    try:
+        semi = restrict(table, "path", keys)
+        jobs = sc.statusTracker().getJobIdsForGroup("keyset_count_test")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1
+    assert proven_path_bound(keys) == 2
+    assert [r["v"] for r in semi.orderBy("v").collect()] == [5, 7]
 
 
 def _batch(spark, paths):
@@ -134,3 +152,185 @@ def test_personalized_pagerank_many_seeds_embed_no_literal_list(triples, monkeyp
     got = ranks()[1]
     monkeypatch.setattr(keyset, "LITERAL_MAX", 10 * len(seeds))
     assert got == ranks()[1] and got
+
+
+def _site_overwrite(env, tmp):
+    from cm_well_spark.operators.admin import overwrite
+
+    rows = env.infotons.where(F.col("path").isin("/tpch/region/0", "/tpch/nation/3")).withColumn(
+        "index_time", F.col("index_time") + 1000
+    )
+    return overwrite(env.infotons, rows.withColumn("uuid", F.concat(F.lit("ow-"), "uuid")))
+
+
+def _site_except_retain(env, tmp):
+    from cm_well_spark.operators.gremlin import g
+
+    t = g(env.infotons, env.triples).V().has("rdfType", "Region").store("regions")
+    nations = t.V().has("rdfType", "Nation")
+    return nations.out("ofRegion").retain("regions").paths().unionByName(nations.except_("regions").paths())
+
+
+def _site_materializer(env, tmp):
+    from cm_well_spark.streaming.materializer import SparqlTriggeredProcessor
+
+    proc = SparqlTriggeredProcessor(
+        env.spark, env.triples, "CONSTRUCT { ?n <locatedIn> ?r } WHERE { ?n <ofRegion> ?r }", str(tmp)
+    )
+    nk = F.element_at(F.col("fields").getItem("nationkey"), 1)["num"]
+    proc.process_batch(env.infotons.where(F.col("path").startswith("/tpch/nation/") & (nk < 10)), 0)
+    fresh = proc.process_batch(env.infotons.where(F.col("path").startswith("/tpch/nation/") & (nk >= 5)), 1)
+    return fresh.unionByName(proc.read_derived())
+
+
+def _docs(spark, texts, base=0):
+    return spark.createDataFrame([(base + i, t) for i, t in enumerate(texts)], "doc_id long, text string")
+
+
+_TEXTS = [
+    "the quick brown fox jumps over the lazy dog today",
+    "the quick brown fox jumps over the lazy cat today",
+    "a totally unrelated document about spark partitions",
+    "the quick brown fox naps under the lazy dog today",
+    "nothing in common here at all whatsoever",
+]
+
+
+def _site_decontaminate(env, tmp):
+    from cm_well_spark.operators.curation import decontaminate
+
+    return decontaminate(_docs(env.spark, _TEXTS), _docs(env.spark, _TEXTS[:1], base=100), k=3)
+
+
+def _site_jaccard_hot(env, tmp):
+    from cm_well_spark.operators.dedup import jaccard_pairs
+
+    return jaccard_pairs(_docs(env.spark, _TEXTS), threshold=0.2, k=2, max_shingle_freq=2)
+
+
+def _site_incremental_hot(env, tmp):
+    from cm_well_spark.operators.dedup import incremental_dedup_verdicts
+
+    seen, new = _docs(env.spark, _TEXTS[:3]), _docs(env.spark, _TEXTS[3:] + _TEXTS[1:2], base=10)
+    return incremental_dedup_verdicts(new, seen, threshold=0.3, k=2, max_shingle_freq=1)
+
+
+_PATHS = ["/tpch/region/0", "/tpch/nation/3", "/tpch/nation/7"]
+
+
+def _site_verify_paths(env, tmp):
+    from cm_well_spark.operators.fix import verify_paths
+
+    return verify_paths(env.infotons, env.triples, _PATHS)
+
+
+def _site_info_path(env, tmp):
+    from cm_well_spark.operators.admin import info_path
+
+    return info_path(env.spark, env.sf_dir, _PATHS)
+
+
+def _site_pull_infotons(env, tmp):
+    from cm_well_spark.streaming.subscribe import pull_infotons
+
+    uuids = [r["uuid"] for r in env.infotons.where(F.col("path").isin(_PATHS)).collect()]
+    return pull_infotons(env.infotons, uuids).select("path", "uuid", "index_time")
+
+
+def _site_url_filter(env, tmp):
+    from cm_well_spark.operators.curation import url_filter
+
+    urls = ["https://a.example.com/x", "http://bad.org", "https://good.net/p", "https://example.com.evil.io"]
+    docs = env.spark.createDataFrame(list(enumerate(urls)), "doc_id long, url string")
+    return url_filter(docs, ["example.com", "bad.org"])
+
+
+# (cap, lowered value, plan text of the route the lowered cap forbids)
+_FRAME = ("BROADCAST_MAX", 0, "strategy=broadcast")
+_LIST = ("LITERAL_MAX", 1, " IN (")
+
+
+@pytest.mark.parametrize(
+    "site, route",
+    [
+        (_site_overwrite, _FRAME),
+        (_site_except_retain, _FRAME),
+        (_site_materializer, _FRAME),
+        (_site_decontaminate, _FRAME),
+        (_site_jaccard_hot, _FRAME),
+        (_site_incremental_hot, _FRAME),
+        (_site_verify_paths, _LIST),
+        (_site_info_path, _LIST),
+        (_site_pull_infotons, _LIST),
+        (_site_url_filter, _LIST),
+    ],
+    ids=lambda v: v.__name__[len("_site_"):] if callable(v) else v[0],
+)
+def test_moved_sites_route_through_restrict(
+    spark, infotons, triples, sf_dir, tmp_path, monkeypatch, site, route
+):
+    """Each moved key-set site takes its route from keyset.restrict: the
+    plan has the route its cap allows (a broadcast for a small key frame,
+    a literal list for a few driver keys), loses it when the cap is
+    lowered, and the rows stay the same."""
+    env = SimpleNamespace(spark=spark, infotons=infotons, triples=triples, sf_dir=sf_dir)
+    cap, lowered, probe = route
+    base = site(env, tmp_path / "base")
+    assert probe in _analyzed(base)
+    expected = _rows(base)
+    assert expected
+    monkeypatch.setattr(keyset, cap, lowered)
+    capped = site(env, tmp_path / "capped")
+    assert probe not in _analyzed(capped)
+    assert _rows(capped) == expected
+
+
+# the one semi join that keeps its own hint: SPARQL `VALUES ... UNDEF`,
+# whose null-safe OR-equality is not a key equality restrict could express
+_HINT_ALLOWED = {("operators/sparql/compiler.py", "F.broadcast(renamed)")}
+
+
+def _hinted_key_joins(tree: ast.AST) -> set[tuple[int, str]]:
+    """(line, right side) of every `.join(right, on, how)` with `how` a
+    semi or anti join and `right` an `F.broadcast(...)` call or a name
+    its function binds to one."""
+
+    def is_hint(node):
+        return isinstance(node, ast.Call) and ast.unparse(node.func) == "F.broadcast"
+
+    found = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        hinted = {
+            t.id
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Assign) and is_hint(n.value)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in ast.walk(fn):
+            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == "join"):
+                continue
+            args = dict(zip(("other", "on", "how"), n.args)) | {k.arg: k.value for k in n.keywords}
+            how, right = args.get("how"), args.get("other")
+            if not (isinstance(how, ast.Constant) and how.value in ("left_semi", "left_anti")):
+                continue
+            if is_hint(right) or (isinstance(right, ast.Name) and right.id in hinted):
+                found.add((n.lineno, ast.unparse(right)))
+    return found
+
+
+def test_no_hand_hinted_key_set_joins():
+    """Outside plans/keyset.py no semi or anti join in the package picks
+    its own broadcast route; restrict picks it from the cap table."""
+    root = Path(keyset.__file__).parents[1]
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "plans/keyset.py":
+            continue
+        for line, right in _hinted_key_joins(ast.parse(path.read_text())):
+            if (rel, right) not in _HINT_ALLOWED:
+                offenders.append(f"{rel}:{line} {right}")
+    assert not offenders, offenders

@@ -112,7 +112,7 @@ def test_path_bound_carrier_contract(spark, sf_dir):
     )
     from cm_well_spark.operators import search as S
     from cm_well_spark.operators.traversal import expand_out
-    from cm_well_spark.plans.bounds import proven_path_bound
+    from cm_well_spark.plans.keyset import proven_path_bound
 
     inf = load_infotons(spark, sf_dir)
     tri = load_triples(spark, sf_dir)

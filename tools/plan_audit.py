@@ -10,10 +10,12 @@ executed-plan string for the shapes that do not survive 100x scale:
   RoundRobinPartitioning    a blind repartition — legitimate only as the
                             spread_for_cpu local-scan widener (whitelist)
 
-Each entry also reports, without gating, `n_exchanges` and
+Each entry also reports, without gating, `n_exchanges`,
 `python_nodes`: how many of Spark's Python operators the plan runs
 (grouped, cogrouped and map-in-Arrow/pandas nodes, ArrowEvalPython and
-BatchEvalPython) — each one a round trip across the Arrow boundary.
+BatchEvalPython) — each one a round trip across the Arrow boundary —
+and `single_partition`: how many times the plan gathers rows into one
+partition (`SinglePartition`, e.g. a global limit or an unkeyed window).
 
 Emits one JSON object to stdout and exits non-zero if any non-whitelisted
 flag fires — the automated form of the per-round plan audit. Run:
@@ -91,6 +93,7 @@ def main() -> None:
             "flags": hits,
             "n_exchanges": plan.count("Exchange"),
             "python_nodes": len(PYTHON_NODE.findall(plan)),
+            "single_partition": plan.count("SinglePartition"),
             "whole_stage_codegen": "WholeStageCodegen" in plan,
         }
         if hits:
