@@ -27,388 +27,251 @@ All system values are DETERMINISTIC functions of the keys so uuids and
 index_time are stable across runs (uuid determinism requirement:
 Infoton.scala:139-168 computes MD5 over path+lastModified+sorted fields;
 we keep the same recipe shape over our canonical serialization).
+
+Each kind is a small table of SQL text — its key, its path and one
+`(field, values)` row per field — applied by one `selectExpr` per kind
+(path, fields, last_modified, index_time); a second `selectExpr` over the
+union of the kinds adds the columns every kind derives alike (uuid,
+parent, parent_hierarchy, constants). The JVM parses each in one call;
+the same projection built from `pyspark.sql.functions` Columns cost about
+2,900 Python -> JVM round trips per kind (26,000 for the store), 8-16 s of
+driver time on a 4-core host before Spark ran a task, against 3-4 s for
+the SQL text.
 """
 
 from __future__ import annotations
 
 import functools
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cm_well_spark.model.fieldvals import single
+from cm_well_spark.model.fieldvals import fv, single
+from cm_well_spark.model.schema import INFOTON_SCHEMA
 from cm_well_spark.sources import tables as tbl
 
-# index_time spacing: deterministic, globally unique, ordered by (kind, key).
 INDEX_TIME_BASE = 1_700_000_000_000
-KIND_ORDER = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-]
-KIND_SLOT = {k: i for i, k in enumerate(KIND_ORDER)}
-
 EPOCH_2020 = 1_577_836_800  # 2020-01-01T00:00:00Z
 
 
-def _system_cols(df: DataFrame, table: str, path_col, key_col) -> DataFrame:
-    """Attach system fields. parent/parent_hierarchy mirror the derived
-    parent (Infoton.scala:40-64) and ES `parent_hierarchy` analyzer."""
-    df = df.withColumn("path", path_col)
-    df = df.withColumn("parent", F.regexp_replace("path", "/[^/]+$", ""))
-    df = df.withColumn("parent", F.when(F.col("parent") == "", "/").otherwise(F.col("parent")))
-    # "/tpch/customer/1" -> ["/", "/tpch", "/tpch/customer"] (every ancestor
-    # prefix; the leading "" split element supplies the "/" separator).
-    df = df.withColumn(
-        "parent_hierarchy",
-        F.concat(
-            F.array(F.lit("/")),
-            # guard: sequence(1, 0) runs DESCENDING in Spark, so a
-            # 2-segment path ("/x") would list ITSELF as an ancestor
-            F.when(
-                F.size(F.split(F.col("path"), "/")) >= 3,
-                F.filter(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(F.split(F.col("path"), "/")) - F.lit(2)),
-                        lambda i: F.concat_ws("/", F.slice(F.split(F.col("path"), "/"), 1, i + 1)),
-                    ),
-                    lambda p: p != "",
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        ),
-    )
-    df = df.withColumn("last_modified", F.timestamp_seconds(F.lit(EPOCH_2020) + key_col.cast("long") % 10_000_000))
-    df = df.withColumn("last_modified_by", F.lit("spark-graft"))
-    df = df.withColumn("dc", F.lit("local"))
-    df = df.withColumn(
-        "index_time",
-        F.lit(INDEX_TIME_BASE) + F.lit(KIND_SLOT[table] * 10_000_000_000) + key_col.cast("long"),
-    )
-    df = df.withColumn("current", F.lit(True))
-    df = df.withColumn("protocol", F.lit("https"))
-    df = df.withColumn("kind", F.lit("ObjectInfoton"))
-    for c, t in [
-        ("mime_type", "string"),
-        ("data", "binary"),
-        ("data_pointer", "string"),
-        ("link_to", "string"),
-        ("link_kind", "int"),
-    ]:
-        df = df.withColumn(c, F.lit(None).cast(t))
-    return df
+class Kind(NamedTuple):
+    key: str  # SQL: the integer key that seeds last_modified and index_time
+    path: str  # SQL: the infoton path
+    fields: list[tuple[str, str]]  # (field, SQL for its value array)
 
 
-def _finish(df: DataFrame, table: str, key_col) -> DataFrame:
-    """Drop empty fields, compute the content-hash uuid, project canon cols."""
-    df = df.withColumn("fields", F.map_filter(F.col("fields"), lambda k, v: v.isNotNull() & (F.size(v) > 0)))
-    # uuid = md5 over path + lastModified + sorted canonical field string —
-    # same *recipe shape* as Infoton.scala:139-168 (content hash identifying a
-    # version); byte layout is our own canonical serialization.
-    canon_fields = F.concat_ws(
-        ";",
-        F.array_sort(
-            F.transform(
-                F.map_entries(F.col("fields")),
-                lambda e: F.concat_ws(
-                    ":",
-                    e["key"],
-                    F.concat_ws("|", F.array_sort(F.transform(e["value"], lambda v: v["value"]))),
-                ),
-            )
-        ),
-    )
-    df = df.withColumn(
-        "uuid",
-        F.md5(F.concat_ws("\n", F.col("path"), F.date_format("last_modified", "yyyy-MM-dd'T'HH:mm:ss'Z'"), canon_fields)),
-    )
-    cols = [
-        "path",
-        "uuid",
-        "kind",
-        "parent",
-        "parent_hierarchy",
-        "last_modified",
-        "last_modified_by",
-        "dc",
-        "index_time",
-        "current",
-        "protocol",
-        "fields",
-        "mime_type",
-        "data",
-        "data_pointer",
-        "link_to",
-        "link_kind",
-    ]
-    return df.select(*cols)
-
-
-def _fields_map(pairs: list[tuple[str, object]]):
-    args = []
-    for name, arr in pairs:
-        args.append(F.lit(name))
-        args.append(arr)
-    return F.map_from_arrays(
-        F.array(*[a for i, a in enumerate(args) if i % 2 == 0]),
-        F.array(*[a for i, a in enumerate(args) if i % 2 == 1]),
-    )
-
-
-def _build(df, table: str, key_col, path_col, field_pairs) -> DataFrame:
-    df = df.withColumn("fields", _fields_map(field_pairs))
-    df = _system_cols(df, table, path_col, key_col)
-    return _finish(df, table, key_col)
-
-
-def region_infotons(df: DataFrame) -> DataFrame:
-    return _build(
-        df,
-        "region",
-        F.col("r_regionkey"),
-        F.concat(F.lit("/tpch/region/"), F.col("r_regionkey")),
+KINDS = {
+    "region": Kind(
+        "r_regionkey",
+        "concat('/tpch/region/', r_regionkey)",
         [
-            ("name", single(F.col("r_name"), "s")),
-            ("regionkey", single(F.col("r_regionkey"), "l")),
-            ("rdfType", single(F.lit("Region"), "s")),
+            ("name", single("r_name", "s")),
+            ("regionkey", single("r_regionkey", "l")),
+            ("rdfType", single("'Region'", "s")),
         ],
-    )
-
-
-def nation_infotons(df: DataFrame) -> DataFrame:
-    return _build(
-        df,
-        "nation",
-        F.col("n_nationkey"),
-        F.concat(F.lit("/tpch/nation/"), F.col("n_nationkey")),
+    ),
+    "nation": Kind(
+        "n_nationkey",
+        "concat('/tpch/nation/', n_nationkey)",
         [
-            ("name", single(F.col("n_name"), "s")),
-            ("nationkey", single(F.col("n_nationkey"), "l")),
-            ("ofRegion", single(F.concat(F.lit("/tpch/region/"), F.col("n_regionkey")), "s")),
-            ("rdfType", single(F.lit("Nation"), "s")),
+            ("name", single("n_name", "s")),
+            ("nationkey", single("n_nationkey", "l")),
+            ("ofRegion", single("concat('/tpch/region/', n_regionkey)", "s")),
+            ("rdfType", single("'Nation'", "s")),
         ],
-    )
-
-
-def customer_infotons(df: DataFrame) -> DataFrame:
-    return _build(
-        df,
-        "customer",
-        F.col("c_custkey"),
-        F.concat(F.lit("/tpch/customer/"), F.col("c_custkey")),
+    ),
+    "customer": Kind(
+        "c_custkey",
+        "concat('/tpch/customer/', c_custkey)",
         [
-            ("name", single(F.col("c_name"), "s")),
-            ("custkey", single(F.col("c_custkey"), "l")),
-            ("acctbal", single(F.col("c_acctbal"), "w")),
-            ("mktsegment", single(F.col("c_mktsegment"), "s")),
-            ("inNation", single(F.concat(F.lit("/tpch/nation/"), F.col("c_nationkey")), "s")),
-            ("rdfType", single(F.lit("Customer"), "s")),
+            ("name", single("c_name", "s")),
+            ("custkey", single("c_custkey", "l")),
+            ("acctbal", single("c_acctbal", "w")),
+            ("mktsegment", single("c_mktsegment", "s")),
+            ("inNation", single("concat('/tpch/nation/', c_nationkey)", "s")),
+            ("rdfType", single("'Customer'", "s")),
         ],
-    )
-
-
-def supplier_infotons(df: DataFrame) -> DataFrame:
-    return _build(
-        df,
-        "supplier",
-        F.col("s_suppkey"),
-        F.concat(F.lit("/tpch/supplier/"), F.col("s_suppkey")),
+    ),
+    "supplier": Kind(
+        "s_suppkey",
+        "concat('/tpch/supplier/', s_suppkey)",
         [
-            ("name", single(F.col("s_name"), "s")),
-            ("suppkey", single(F.col("s_suppkey"), "l")),
-            ("acctbal", single(F.col("s_acctbal"), "w")),
-            ("inNation", single(F.concat(F.lit("/tpch/nation/"), F.col("s_nationkey")), "s")),
-            ("rdfType", single(F.lit("Supplier"), "s")),
+            ("name", single("s_name", "s")),
+            ("suppkey", single("s_suppkey", "l")),
+            ("acctbal", single("s_acctbal", "w")),
+            ("inNation", single("concat('/tpch/nation/', s_nationkey)", "s")),
+            ("rdfType", single("'Supplier'", "s")),
         ],
-    )
-
-
-def part_infotons(df: DataFrame) -> DataFrame:
-    # `words` is deliberately multi-valued (values are SETS, Infoton.scala:77).
-    words = F.array_distinct(F.split(F.col("p_name"), " "))
-    return _build(
-        df,
-        "part",
-        F.col("p_partkey"),
-        F.concat(F.lit("/tpch/part/"), F.col("p_partkey")),
+    ),
+    "part": Kind(
+        "p_partkey",
+        "concat('/tpch/part/', p_partkey)",
         [
-            ("name", single(F.col("p_name"), "s")),
-            ("partkey", single(F.col("p_partkey"), "l")),
-            ("brand", single(F.col("p_brand"), "s")),
-            ("ptype", single(F.col("p_type"), "s")),
-            ("size", single(F.col("p_size"), "i")),
-            ("retailprice", single(F.col("p_retailprice"), "w")),
-            (
-                "words",
-                F.transform(words, lambda w: F.struct(
-                    w.alias("value"),
-                    F.lit("s").alias("vtype"),
-                    F.lit(None).cast("string").alias("lang"),
-                    F.lit(None).cast("string").alias("quad"),
-                    F.lit(None).cast("double").alias("num"),
-                    F.lit(None).cast("timestamp").alias("ts"),
-                    F.lit(None).cast("boolean").alias("bool"),
-                )),
-            ),
-            ("rdfType", single(F.lit("Part"), "s")),
+            ("name", single("p_name", "s")),
+            ("partkey", single("p_partkey", "l")),
+            ("brand", single("p_brand", "s")),
+            ("ptype", single("p_type", "s")),
+            ("size", single("p_size", "i")),
+            ("retailprice", single("p_retailprice", "w")),
+            # deliberately multi-valued (values are SETS, Infoton.scala:77)
+            ("words", f"transform(array_distinct(split(p_name, ' ')), w -> {fv('w', 's')})"),
+            ("rdfType", single("'Part'", "s")),
         ],
-    )
-
-
-def orders_infotons(df: DataFrame) -> DataFrame:
-    return _build(
-        df,
-        "orders",
-        F.col("o_orderkey"),
-        F.concat(F.lit("/tpch/orders/"), F.col("o_orderkey")),
+    ),
+    "orders": Kind(
+        "o_orderkey",
+        "concat('/tpch/orders/', o_orderkey)",
         [
-            ("orderkey", single(F.col("o_orderkey"), "l")),
-            ("orderstatus", single(F.col("o_orderstatus"), "s")),
-            ("totalprice", single(F.col("o_totalprice"), "w")),
-            ("orderdate", single(F.col("o_orderdate"), "d")),
-            ("orderpriority", single(F.col("o_orderpriority"), "s")),
-            ("byCustomer", single(F.concat(F.lit("/tpch/customer/"), F.col("o_custkey")), "s")),
-            ("rdfType", single(F.lit("Order"), "s")),
+            ("orderkey", single("o_orderkey", "l")),
+            ("orderstatus", single("o_orderstatus", "s")),
+            ("totalprice", single("o_totalprice", "w")),
+            ("orderdate", single("o_orderdate", "d")),
+            ("orderpriority", single("o_orderpriority", "s")),
+            ("byCustomer", single("concat('/tpch/customer/', o_custkey)", "s")),
+            ("rdfType", single("'Order'", "s")),
         ],
-    )
-
-
-def lineitem_infotons(df: DataFrame) -> DataFrame:
-    # the synthetic lineitem table does NOT have a unique
-    # (l_orderkey, l_linenumber) key — disambiguate with a deterministic
-    # ordinal (same window is reproducible in the DuckDB oracle), keeping
-    # the path-uniqueness invariant of the infoton model
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("l_orderkey", "l_linenumber").orderBy(
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax", "l_shipdate", "l_partkey", "l_suppkey"
-    )
-    df = df.withColumn("__rn", F.row_number().over(w))
-    key = (F.col("l_orderkey") * 10 + F.col("l_linenumber")) * 8 + (F.col("__rn") - 1)
-    return _build(
-        df,
-        "lineitem",
-        key,
-        F.concat(
-            F.lit("/tpch/lineitem/"),
-            F.col("l_orderkey"),
-            F.lit("-"),
-            F.col("l_linenumber"),
-            F.lit("-"),
-            F.col("__rn"),
-        ),
+    ),
+    # `__rn` is the disambiguation ordinal added by _disambiguate_lineitems
+    "lineitem": Kind(
+        "(l_orderkey * 10 + l_linenumber) * 8 + (__rn - 1)",
+        "concat('/tpch/lineitem/', l_orderkey, '-', l_linenumber, '-', __rn)",
         [
-            ("orderkey", single(F.col("l_orderkey"), "l")),
-            ("linenumber", single(F.col("l_linenumber"), "i")),
-            ("quantity", single(F.col("l_quantity"), "w")),
-            ("extendedprice", single(F.col("l_extendedprice"), "w")),
-            ("discount", single(F.col("l_discount"), "w")),
-            ("tax", single(F.col("l_tax"), "w")),
-            ("returnflag", single(F.col("l_returnflag"), "s")),
-            ("linestatus", single(F.col("l_linestatus"), "s")),
-            ("shipdate", single(F.col("l_shipdate"), "d")),
-            ("ofOrder", single(F.concat(F.lit("/tpch/orders/"), F.col("l_orderkey")), "s")),
-            ("ofPart", single(F.concat(F.lit("/tpch/part/"), F.col("l_partkey")), "s")),
-            ("bySupplier", single(F.concat(F.lit("/tpch/supplier/"), F.col("l_suppkey")), "s")),
-            ("rdfType", single(F.lit("Lineitem"), "s")),
+            ("orderkey", single("l_orderkey", "l")),
+            ("linenumber", single("l_linenumber", "i")),
+            ("quantity", single("l_quantity", "w")),
+            ("extendedprice", single("l_extendedprice", "w")),
+            ("discount", single("l_discount", "w")),
+            ("tax", single("l_tax", "w")),
+            ("returnflag", single("l_returnflag", "s")),
+            ("linestatus", single("l_linestatus", "s")),
+            ("shipdate", single("l_shipdate", "d")),
+            ("ofOrder", single("concat('/tpch/orders/', l_orderkey)", "s")),
+            ("ofPart", single("concat('/tpch/part/', l_partkey)", "s")),
+            ("bySupplier", single("concat('/tpch/supplier/', l_suppkey)", "s")),
+            ("rdfType", single("'Lineitem'", "s")),
         ],
-    )
-
-
-def events_infotons(df: DataFrame) -> DataFrame:
-    return _build(
-        df,
-        "events",
-        F.col("event_id"),
-        F.concat(F.lit("/events/"), F.col("event_id")),
+    ),
+    "events": Kind(
+        "event_id",
+        "concat('/events/', event_id)",
         [
-            ("eventType", single(F.col("event_type"), "s")),
-            ("eventTs", single(F.col("ts"), "d")),
-            ("value", single(F.col("value"), "w")),
-            ("props", single(F.col("props"), "s")),
+            ("eventType", single("event_type", "s")),
+            ("eventTs", single("ts", "d")),
+            ("value", single("value", "w")),
+            ("props", single("props", "s")),
             # ghost reference: /users/* is never written
-            ("byUser", single(F.concat(F.lit("/users/"), F.col("user_id")), "s")),
+            ("byUser", single("concat('/users/', user_id)", "s")),
             # deep same-predicate chains (depth 15 within each 16-block):
             # the fixture for unbounded `p+` closure — a bounded-depth
             # implementation answers these incompletely. NULL at block
-            # heads drops the field via _finish's map_filter.
+            # heads drops the field (the `fields` filter below).
             (
                 "prevEvent",
-                single(
-                    F.when(
-                        F.col("event_id") % 16 != 0,
-                        F.concat(F.lit("/events/"), F.col("event_id") - 1),
-                    ),
-                    "s",
-                ),
+                single("CASE WHEN event_id % 16 != 0 THEN concat('/events/', event_id - 1) END", "s"),
             ),
-            ("rdfType", single(F.lit("Event"), "s")),
+            ("rdfType", single("'Event'", "s")),
         ],
-    )
-
-
-def documents_infotons(df: DataFrame) -> DataFrame:
+    ),
     # `source` carries a quad (named-graph) tag — value-level quad tagging
     # per Infoton.scala:507 / FX4.
-    return _build(
-        df,
-        "documents",
-        F.col("doc_id"),
-        F.concat(F.lit("/docs/"), F.col("doc_id")),
+    "documents": Kind(
+        "doc_id",
+        "concat('/docs/', doc_id)",
         [
-            ("text", single(F.col("text"), "s", lang=F.col("lang"))),
-            ("lang", single(F.col("lang"), "s")),
-            ("source", single(F.col("source"), "s", quad=F.concat(F.lit("/graphs/"), F.col("source")))),
-            ("nchars", single(F.col("n_chars"), "l")),
-            ("rdfType", single(F.lit("Document"), "s")),
+            ("text", single("text", "s", lang="lang")),
+            ("lang", single("lang", "s")),
+            ("source", single("source", "s", quad="concat('/graphs/', source)")),
+            ("nchars", single("n_chars", "l")),
+            ("rdfType", single("'Document'", "s")),
         ],
-    )
-
-
-BUILDERS = {
-    "region": region_infotons,
-    "nation": nation_infotons,
-    "customer": customer_infotons,
-    "supplier": supplier_infotons,
-    "part": part_infotons,
-    "orders": orders_infotons,
-    "lineitem": lineitem_infotons,
-    "events": events_infotons,
-    "documents": documents_infotons,
+    ),
 }
+# index_time spacing: deterministic, globally unique, ordered by (kind, key)
+# in the order of KINDS.
+KIND_SLOT = {k: i for i, k in enumerate(KINDS)}
 
 
-# Builders whose plan starts with its own keyed exchange (lineitem's
-# disambiguation window) — a round-robin repartition in front of those is
-# a wasted full shuffle of the raw rows: the window's hash exchange
-# already spreads the build across the cluster.
-_SELF_SHUFFLING = {"lineitem"}
+def _stage1(name: str) -> list[str]:
+    """path, the fields map without empty fields, and the key-derived
+    system values."""
+    kind = KINDS[name]
+    keys = ", ".join(f"'{f}'" for f, _ in kind.fields)
+    values = ", ".join(v for _, v in kind.fields)
+    return [
+        f"{kind.path} AS path",
+        f"map_filter(map_from_arrays(array({keys}), array({values})), "
+        "(k, v) -> v IS NOT NULL AND size(v) > 0) AS fields",
+        f"timestamp_seconds({EPOCH_2020} + CAST({kind.key} AS BIGINT) % 10000000) AS last_modified",
+        f"{INDEX_TIME_BASE + KIND_SLOT[name] * 10_000_000_000} + CAST({kind.key} AS BIGINT) AS index_time",
+    ]
 
 
-def build_infotons(
-    spark: SparkSession, sf_dir: str, only: list[str] | None = None, shuffle: int | None = None
-) -> DataFrame:
+_PARENT = "regexp_replace(path, '/[^/]+$', '')"
+_SEGMENTS = "split(path, '/')"
+# Stage 2, over the union of every kind's stage 1; an INFOTON_SCHEMA column
+# named in neither is a typed NULL (the FileInfoton and LinkInfoton payload).
+_DERIVED = {
+    # uuid = md5 over path + lastModified + sorted canonical field string —
+    # same *recipe shape* as Infoton.scala:139-168 (content hash identifying
+    # a version); byte layout is our own canonical serialization, shared
+    # with merge.content_uuid.
+    "uuid": (
+        "md5(concat_ws('\\n', path, date_format(last_modified, \"yyyy-MM-dd'T'HH:mm:ss'Z'\"), "
+        "concat_ws(';', array_sort(transform(map_entries(fields), "
+        "e -> concat_ws(':', e.key, concat_ws('|', array_sort(transform(e.value, v -> v.value)))))))))"
+    ),
+    "kind": "'ObjectInfoton'",
+    # derived parent (Infoton.scala:40-64)
+    "parent": f"CASE WHEN {_PARENT} = '' THEN '/' ELSE {_PARENT} END",
+    # ES `parent_hierarchy` analyzer: "/tpch/customer/1" -> ["/", "/tpch",
+    # "/tpch/customer"] (every ancestor prefix; the leading "" split element
+    # supplies the "/" separator). The size guard: sequence(1, 0) runs
+    # DESCENDING, so a 2-segment path ("/x") would list ITSELF as an ancestor.
+    "parent_hierarchy": (
+        f"concat(array('/'), CASE WHEN size({_SEGMENTS}) >= 3 THEN filter(transform("
+        f"sequence(1, size({_SEGMENTS}) - 2), i -> concat_ws('/', slice({_SEGMENTS}, 1, i + 1))), "
+        "p -> p != '') ELSE CAST(array() AS array<string>) END)"
+    ),
+    "last_modified_by": "'spark-graft'",
+    "dc": "'local'",
+    "current": "true",
+    "protocol": "'https'",
+}
+_STAGE1_COLUMNS = {"path", "fields", "last_modified", "index_time"}
+_STAGE2 = [
+    f.name
+    if f.name in _STAGE1_COLUMNS
+    else f"{_DERIVED.get(f.name) or f'CAST(NULL AS {f.dataType.simpleString()})'} AS {f.name}"
+    for f in INFOTON_SCHEMA.fields
+]
+
+
+def _disambiguate_lineitems(df: DataFrame) -> DataFrame:
+    """The synthetic lineitem table does NOT have a unique
+    (l_orderkey, l_linenumber) key — disambiguate with a deterministic
+    ordinal (same window is reproducible in the DuckDB oracle), keeping the
+    path-uniqueness invariant of the infoton model. The window's hash
+    exchange also spreads the build, so lineitem gets no repartition."""
+    w = Window.partitionBy("l_orderkey", "l_linenumber").orderBy(
+        "l_quantity", "l_extendedprice", "l_discount", "l_tax", "l_shipdate", "l_partkey", "l_suppkey"
+    )
+    return df.withColumn("__rn", F.row_number().over(w))
+
+
+def build_infotons(spark: SparkSession, sf_dir: str, only: list[str] | None = None) -> DataFrame:
     """Union of all entity infotons for one scale factor.
 
-    `shuffle`: repartition each RAW table before the fields-map build —
-    the one shuffle of the ingest path, taken while the rows are still
-    narrow columnar data. Downstream never reshuffles the struct-heavy
-    built rows (r6 B8 fix: shuffling the wide fields map cost ~40 s at
-    sf0.1; shuffling raw rows is a fraction of that and the writes keep
-    per-task sort order instead). Defaults to the session's
-    defaultParallelism (scale-adaptive: local[N] builds N-wide, a
-    cluster builds cores-wide) instead of the former hard-coded 32."""
-    names = only or KIND_ORDER
-    width = shuffle or spark.sparkContext.defaultParallelism
+    Each RAW table is repartitioned to the session's defaultParallelism
+    before the fields-map build — the one shuffle of the ingest path,
+    taken while the rows are still narrow columnar data. Downstream never
+    reshuffles the struct-heavy built rows (r6 B8 fix: shuffling the wide
+    fields map cost ~40 s at sf0.1; shuffling raw rows is a fraction of
+    that and the writes keep per-task sort order instead)."""
+    width = spark.sparkContext.defaultParallelism
     parts = []
-    for name in names:
+    for name in only or KINDS:
         raw = tbl.load_table(spark, sf_dir, name)
-        if width and name not in _SELF_SHUFFLING:
-            raw = raw.repartition(width)
-        parts.append(BUILDERS[name](raw))
-    return functools.reduce(lambda a, b: a.unionByName(b), parts)
+        raw = _disambiguate_lineitems(raw) if name == "lineitem" else raw.repartition(width)
+        parts.append(raw.selectExpr(*_stage1(name)))
+    return functools.reduce(DataFrame.union, parts).selectExpr(*_STAGE2)

@@ -1,7 +1,11 @@
-"""Column-level constructors and accessors for the typed field-value struct.
+"""Constructors and accessors for the typed field-value struct.
 
-All JVM-side (pyspark.sql.functions only) — these appear in every hot path,
-so no Python UDFs here.
+All JVM-side (Spark SQL and pyspark.sql.functions only) — these appear in
+every hot path, so no Python UDFs here. The constructors return SQL text
+rather than Columns: the ingest builder puts a few dozen of them into one
+`selectExpr` per kind, which the JVM parses in one call, where each
+`pyspark.sql.functions` call is a round trip of its own. A Column caller
+wraps the text in `F.expr`.
 """
 
 from __future__ import annotations
@@ -9,52 +13,39 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cm_well_spark.model.schema import FIELD_VALUE_TYPE
 
-def fv(col: Column, vtype: str, lang: Column | None = None, quad: Column | None = None) -> Column:
-    """Build one field-value struct from a source column.
+# the typed shadow each value type fills; the others stay NULL
+_SHADOW = {"i": "num", "l": "num", "f": "num", "w": "num", "d": "ts", "b": "bool"}
+
+
+def fv(expr: str, vtype: str, lang: str | None = None, quad: str | None = None) -> str:
+    """SQL for one field-value struct from a source expression.
 
     Keeps the lexical form in `value` and parses typed shadows so range
     predicates are type-correct (reference: `fieldType()` dispatch,
     FTSService.scala:280-300, and the ES dynamic templates that map mangle
     prefixes to typed index fields)."""
-    lang_c = lang if lang is not None else F.lit(None).cast("string")
-    quad_c = quad if quad is not None else F.lit(None).cast("string")
-    if vtype in ("i", "l", "f", "w"):
-        num = col.cast("double")
-        ts = F.lit(None).cast("timestamp")
-        boolean = F.lit(None).cast("boolean")
-        value = col.cast("string")
-    elif vtype == "d":
-        num = F.lit(None).cast("double")
-        ts = col.cast("timestamp")
-        boolean = F.lit(None).cast("boolean")
-        value = F.date_format(col.cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-    elif vtype == "b":
-        num = F.lit(None).cast("double")
-        ts = F.lit(None).cast("timestamp")
-        boolean = col.cast("boolean")
-        value = col.cast("string")
-    else:  # 's' — string / reference / external
-        num = F.lit(None).cast("double")
-        ts = F.lit(None).cast("timestamp")
-        boolean = F.lit(None).cast("boolean")
-        value = col.cast("string")
-    return F.struct(
-        value.alias("value"),
-        F.lit(vtype).alias("vtype"),
-        lang_c.alias("lang"),
-        quad_c.alias("quad"),
-        num.alias("num"),
-        ts.alias("ts"),
-        boolean.alias("bool"),
+    vals = {"value": f"CAST({expr} AS STRING)", "vtype": f"'{vtype}'", "lang": lang, "quad": quad}
+    shadow = _SHADOW.get(vtype)
+    if shadow:
+        vals[shadow] = f"CAST({expr} AS {FIELD_VALUE_TYPE[shadow].dataType.simpleString()})"
+    if vtype == "d":
+        vals["value"] = f"date_format({vals['ts']}, \"yyyy-MM-dd'T'HH:mm:ss.SSS'Z'\")"
+    return "named_struct({})".format(
+        ", ".join(
+            f"'{f.name}', {vals.get(f.name) or f'CAST(NULL AS {f.dataType.simpleString()})'}"
+            for f in FIELD_VALUE_TYPE.fields
+        )
     )
 
 
-def single(col: Column, vtype: str, lang: Column | None = None, quad: Column | None = None) -> Column:
-    """A single-valued field: array of one value struct (values are SETS in
-    the model — Infoton.scala:77 — so even scalars are arrays)."""
-    return F.when(col.isNotNull(), F.array(fv(col, vtype, lang, quad))).otherwise(
-        F.lit(None).cast(f"array<struct<value:string,vtype:string,lang:string,quad:string,num:double,ts:timestamp,bool:boolean>>")
+def single(expr: str, vtype: str, lang: str | None = None, quad: str | None = None) -> str:
+    """SQL for a single-valued field: array of one value struct (values are
+    SETS in the model — Infoton.scala:77 — so even scalars are arrays)."""
+    return (
+        f"CASE WHEN {expr} IS NOT NULL THEN array({fv(expr, vtype, lang, quad)}) "
+        f"ELSE CAST(NULL AS array<{FIELD_VALUE_TYPE.simpleString()}>) END"
     )
 
 

@@ -286,6 +286,11 @@ def materialize(spark: SparkSession, sf_dir: str, root: str | None = None, force
     # ingest path. (repartitionByRange measured 8x slower — sampling +
     # skewed ranges; repartitioning the BUILT rows measured ~40 s of
     # pure exchange on the triples side alone.)
+    #
+    # Driver side, the build is SQL text: one `selectExpr` per kind and
+    # one over their union (about 350-550 py4j calls for the whole store);
+    # the same projection built from Column calls took about 26,000 and
+    # 8-16 s of a cold 4-core driver before the write's first task started.
     inf = build_infotons(spark, sf_dir)
     (
         inf.sortWithinPartitions("path")

@@ -468,7 +468,7 @@ def search_quad_alias(spark, sf_dir):
         .withColumn(
             "fields",
             F.create_map(
-                F.lit("graphAlias"), fv.single(F.lit("seven"), "s", quad=F.lit("/graphs/src7"))
+                F.lit("graphAlias"), F.expr(fv.single("'seven'", "s", quad="'/graphs/src7'"))
             ),
         )
     )

@@ -61,6 +61,13 @@ def get_spark(app_name: str = "cm_well_spark", shuffle_partitions: int | None = 
         # compact), so the JVM can always commit it.
         .config("spark.driver.extraJavaOptions", os.environ.get("CMW_DRIVER_XOPTS", f"-Xms{heap}"))
         .config("spark.ui.enabled", "false")
+        # PySpark's per-call call-site capture (on by default in 4.x):
+        # before every pyspark.sql.functions call it reads a conf, walks
+        # the Python stack and sets and clears the origin on the JVM —
+        # extra py4j round trips on every call of a query's driver-side
+        # build. Off, Spark errors keep their error class and message but
+        # lose the Python file:line in their DataFrame context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # test tables store TIMESTAMP(NANOS); read as long, loaders convert
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,4 +1,16 @@
+import hashlib
+import os
+
+import pytest
 from pyspark.sql import functions as F
+
+# Order-insensitive hash of every row build_infotons makes: md5 over the
+# sorted md5s of each row's to_json. Recorded from the Column-built
+# builder, so the SQL-text builder is held to the same rows, uuid included.
+BUILT_ROWS_MD5 = {
+    "sf0.001": "cdbcd2f00a81f38f27ffe2a96739fd93",
+    "sf0.01": "a7ceda693270194ce3ba0aa3b54ccc43",
+}
 
 
 def test_builder_counts(infotons, spark, sf_dir):
@@ -48,3 +60,42 @@ def test_triples_view(triples):
     rows = t.collect()
     assert len(rows) == 1
     assert rows[0]["o"].startswith("/tpch/region/")
+
+
+def test_built_schema_is_infoton_schema(spark, sf_dir):
+    from cm_well_spark.model.builder import build_infotons
+    from cm_well_spark.model.schema import INFOTON_SCHEMA
+
+    built = build_infotons(spark, sf_dir).schema
+    assert [(f.name, f.dataType) for f in built] == [(f.name, f.dataType) for f in INFOTON_SCHEMA]
+
+
+def test_built_rows_unchanged(spark, sf_dir):
+    from cm_well_spark.model.builder import build_infotons
+
+    want = BUILT_ROWS_MD5.get(os.path.basename(os.path.normpath(sf_dir)))
+    if want is None:
+        pytest.skip(f"no recorded row hash for {sf_dir}")
+    df = build_infotons(spark, sf_dir)
+    rows = sorted(r[0] for r in df.select(F.md5(F.to_json(F.struct(*df.columns)))).collect())
+    assert hashlib.md5("\n".join(rows).encode()).hexdigest() == want
+
+
+def test_build_is_a_few_jvm_calls(spark, sf_dir, monkeypatch):
+    """The projection is SQL text the JVM parses once per kind; building
+    it from Column calls took about 26,000 py4j round trips."""
+    from py4j.clientserver import ClientServerConnection
+
+    from cm_well_spark.model.builder import build_infotons
+
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(1)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    build_infotons(spark, sf_dir)
+    monkeypatch.undo()
+    assert len(calls) <= 1000

@@ -1,4 +1,5 @@
-"""Session sizing: the default driver heap must fit the host it runs on."""
+"""Session sizing: the default driver heap must fit the host it runs on;
+session conf that keeps the driver-side build cheap."""
 
 from __future__ import annotations
 
@@ -21,3 +22,9 @@ def test_default_heap_fits_host(monkeypatch):
 def test_driver_mem_override(monkeypatch):
     monkeypatch.setenv("CMW_DRIVER_MEM", "3g")
     assert session.driver_memory() == "3g"
+
+
+def test_call_site_capture_off(spark):
+    # per-call Python call-site capture costs py4j round trips on every
+    # pyspark.sql.functions call (see session.get_spark)
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

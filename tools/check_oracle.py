@@ -3,6 +3,8 @@
 Runs each registry query on Spark AND its DuckDB oracle at sf0.01, compares
 row count, column names, and an order-insensitive value hash (columns sorted
 by name, rows sorted, values stringified with float rounding).
+
+    PYTHONPATH=. python tools/check_oracle.py [SF_DIR] [ENTRY,ENTRY,...]
 """
 
 from __future__ import annotations
@@ -33,10 +35,16 @@ def main():
     import duckdb
 
     from cm_well_spark.registry import oracle_sql, queries
-    from cm_well_spark.session import get_spark
+    from cm_well_spark.session import get_spark, host_memory
 
     spark = get_spark("oracle_check")
-    con = duckdb.connect()
+    # A quarter of the host's memory, beside a Spark driver that holds half:
+    # unbounded, the graph_kcore oracle took 12.5 GiB of a 15 GB host. No
+    # spill directory: past the limit DuckDB would spill to `.tmp/` under
+    # the working directory, where that oracle wrote 19.6 GB and stopped
+    # only when the disk was full (max_temp_directory_size did not bound
+    # it), so the query fails with an out-of-memory error instead.
+    con = duckdb.connect(config={"memory_limit": f"{host_memory() // 4 >> 20}MB", "temp_directory": ""})
     for t in [
         "region",
         "nation",
