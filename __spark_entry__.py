@@ -37,4 +37,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return registry.oracle_sql()
+    """Oracles for the correctness gate, which runs them on sf0.01."""
+    return registry.oracle_sql("/root/testdata/sf0.01")

@@ -67,16 +67,3 @@ def first_num(name: str) -> Column:
 
 def first_ts(name: str) -> Column:
     return F.element_at(field_values(name), 1)["ts"]
-
-
-def first_bool(name: str) -> Column:
-    return F.element_at(field_values(name), 1)["bool"]
-
-
-def all_values(name: str) -> Column:
-    """Array of lexical forms of every value of a field."""
-    return F.transform(field_values(name), lambda v: v["value"])
-
-
-def field_exists(name: str) -> Column:
-    return field_values(name).isNotNull() & (F.size(field_values(name)) > 0)

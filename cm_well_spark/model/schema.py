@@ -84,11 +84,3 @@ INFOTON_SCHEMA = T.StructType(
 )
 
 TRIPLES_COLUMNS = ["s", "p", "o", "g", "vtype", "num", "ts", "bool", "index_time", "current", "kind"]
-
-
-def parent_of(path: str) -> str:
-    """Derived parent path (reference: Infoton.scala:40-64)."""
-    if path == "/":
-        return "$root"
-    cut = path.rstrip("/").rsplit("/", 1)[0]
-    return cut if cut else "/"

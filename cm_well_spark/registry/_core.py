@@ -2,9 +2,12 @@
 
 Every implemented operator from SURVEY.md §2 registers here as a
 (spark, sf_dir) -> DataFrame callable plus (where SQL-expressible) a DuckDB
-oracle SQL string over the raw test tables. The driver hash-compares them
-at sf0.01 (CORRECTNESS_r{N}.json); bench.py times the headline subset at
-sf0.1.
+oracle SQL string over the raw test tables. Where part of an answer is not
+SQL-expressible, the oracle is a callable of sf_dir that inlines values from
+an independent twin in oracle_twins.py, computed from that sf_dir's tables.
+The correctness gate hash-compares them at sf0.01 (CORRECTNESS_r{N}.json);
+tools/check_oracle.py does so at any scale factor; bench.py times the
+headline subset at sf0.1.
 
 Conventions that keep the hash-compare honest:
   - every output column aliased identically in Spark and SQL;
@@ -43,10 +46,16 @@ from cm_well_spark.plans.iterative import iter_checkpoint
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 
-ORACLES: dict[str, str] = {}
+# an oracle is SQL text, or a callable of sf_dir for the oracles whose twin
+# values are computed from the tables at that scale factor
+ORACLES: dict[str, str | Callable[[str], str]] = {}
 
 
-def register(name: str, oracle: str | None = None):
+def _squash(sql: str) -> str:
+    return " ".join(sql.split())
+
+
+def register(name: str, oracle: str | Callable[[str], str] | None = None):
     def deco(fn):
         # a duplicate name would silently SHADOW the earlier entry in
         # queries()/oracle_sql() — fail loudly at import instead
@@ -54,10 +63,19 @@ def register(name: str, oracle: str | None = None):
             raise ValueError(f"registry entry {name!r} already registered")
         QUERIES[name] = fn
         if oracle is not None:
-            ORACLES[name] = " ".join(oracle.split())
+            ORACLES[name] = oracle if callable(oracle) else _squash(oracle)
         return fn
 
     return deco
+
+
+def _twin(name: str, sf_dir: str) -> str:
+    """VALUES text of one oracle twin at sf_dir. The twins are independent
+    reference implementations kept outside the package, in oracle_twins.py
+    at the repository root; only oracle_sql() reaches them."""
+    import oracle_twins
+
+    return getattr(oracle_twins, name)(sf_dir)
 
 
 def _inf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,7 +114,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     internal offset by the round counter, so every round's 50-entry
     window samples across all tranches and shifts membership each
     round. read_point and merge_writer_current stay pinned first as
-    permanent sentinels. tools/check_oracle.py still covers all 226."""
+    permanent sentinels. tools/check_oracle.py covers every entry."""
     sentinels = [n for n in ("read_point", "merge_writer_current") if n in QUERIES]
     rest = [n for n in QUERIES if n not in sentinels]
     fams: dict[str, list[str]] = {}
@@ -117,8 +135,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {n: QUERIES[n] for n in sentinels + ordered}
 
 
-def oracle_sql() -> dict[str, str]:
-    return dict(ORACLES)
+def oracle_sql(sf_dir: str) -> dict[str, str]:
+    """DuckDB oracle SQL per entry over the raw tables in sf_dir. sf_dir is
+    the directory the oracle will run on: the twin-backed oracles inline
+    values computed from its tables."""
+    return {n: o if isinstance(o, str) else _squash(o(sf_dir)) for n, o in ORACLES.items()}
 
 
 def _merge_fixture(spark, sf_dir):
@@ -146,12 +167,6 @@ _FEED_NOW = 1_800_000_000_000  # fixed 'now' so the 10s watermark is determinist
 
 
 _NORM_SQL = "trim(regexp_replace(lower({c}), '[^a-z0-9]+', ' ', 'g'))"
-
-
-def _dedup_twin(name: str) -> str:
-    from cm_well_spark.operators import dedup_twin
-
-    return getattr(dedup_twin, name)
 
 
 def _query_vec(spark, sf_dir):
@@ -259,18 +274,6 @@ def _ann_recall_oracle_sql(k: int = 5, n_queries: int = 8) -> str:
            round(coalesce(h.n_hits, 0) / {k}.0, 6) AS recall
     FROM q LEFT JOIN hits h ON q.qid = h.qid
     """
-
-
-def _bpe_twin(name: str) -> str:
-    from cm_well_spark.operators import bpe_twin
-
-    return getattr(bpe_twin, name)
-
-
-def _ffd_twin_values() -> str:
-    from cm_well_spark.operators.ffd_twin import FFD_TWIN_VALUES
-
-    return FFD_TWIN_VALUES
 
 
 def _srp_oracle_sql() -> str:
@@ -428,12 +431,6 @@ def _span_sql(where: str, salt: str, stride: int, span_len: int, thr: str, denoi
     )"""
 
 
-def _zlib_twin() -> str:
-    from cm_well_spark.operators.zlib_twin import ZLIB_TWIN_VALUES
-
-    return ZLIB_TWIN_VALUES
-
-
 def _clf_weights(dim: int = 256) -> list[float]:
     x, out = 123456789, []
     for _ in range(dim):
@@ -446,18 +443,6 @@ _CLF_W = _clf_weights()
 
 
 _CLF_VALUES = ", ".join(f"({i}, {w})" for i, w in enumerate(_CLF_W))
-
-
-def _pca_twin() -> str:
-    from cm_well_spark.operators import pca_twin
-
-    return pca_twin.PCA_TWIN_VALUES
-
-
-def _unigram_twin(name: str) -> str:
-    from cm_well_spark.operators import unigram_twin
-
-    return getattr(unigram_twin, name)
 
 
 def _script_oracle_sql() -> str:
@@ -519,17 +504,13 @@ def _op_edges(spark, sf_dir):
     )
 
 
-def _cc_twin_values() -> str:
-    from cm_well_spark.operators.graph_twins import CC_TWIN_VALUES
-
-    return CC_TWIN_VALUES
-
-
 def _kcore_oracle(rounds: int = 11, k: int = 2) -> str:
+    # every peel round reads the previous one twice: without MATERIALIZED,
+    # DuckDB inlines the chain into ~2^rounds copies of the plan
     steps = []
     for i in range(1, rounds + 1):
         steps.append(f"""
-    s{i} AS (
+    s{i} AS MATERIALIZED (
       SELECT s.src AS node, CAST(count(*) AS BIGINT) AS degree
       FROM sym s JOIN s{i - 1} a ON s.src = a.node JOIN s{i - 1} b ON s.dst = b.node
       GROUP BY s.src HAVING count(*) >= {k}
@@ -537,8 +518,8 @@ def _kcore_oracle(rounds: int = 11, k: int = 2) -> str:
     return (
         _OP_EDGE_SQL
         + f""",
-    sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-    s0 AS (
+    sym AS MATERIALIZED (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
+    s0 AS MATERIALIZED (
       SELECT src AS node, CAST(count(*) AS BIGINT) AS degree
       FROM sym GROUP BY src HAVING count(*) >= {k}
     ),"""
@@ -586,12 +567,6 @@ def _knn_oracle_sql(k: int = 3) -> str:
       FROM p
     ) WHERE rank <= {k}
     """
-
-
-def _knn_cluster_twin() -> str:
-    from cm_well_spark.operators.knn_cluster_twin import KNN_CLUSTER_TWIN_VALUES
-
-    return KNN_CLUSTER_TWIN_VALUES
 
 
 def _sp_weighted_oracle() -> str:
@@ -651,12 +626,6 @@ _PPR_STEP_SQL = """
       GROUP BY 1
     ) c ON c.path = n.path
 """
-
-
-def _fuzzy_twin() -> str:
-    from cm_well_spark.operators.fuzzy_twin import FUZZY_CLUSTER_TWIN_VALUES
-
-    return FUZZY_CLUSTER_TWIN_VALUES
 
 
 _LANGID_PRED_SQL = """

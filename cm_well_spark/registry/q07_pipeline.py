@@ -170,7 +170,7 @@ def dedup_jaccard_pairs(spark, sf_dir):
 
 @register(
     "dedup_minhash_lsh",
-    oracle=f"""
+    oracle=lambda sf_dir: f"""
     WITH d AS (
       SELECT doc_id, string_split({_NORM_SQL.format(c='text')}, ' ') AS w
       FROM documents WHERE doc_id < 300
@@ -180,7 +180,7 @@ def dedup_jaccard_pairs(spark, sf_dir):
       FROM d, LATERAL (SELECT unnest(range(greatest(len(w) - 3, 0) + 1)) AS i) u
     ),
     sz AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-    cand(id_a, id_b) AS (VALUES {_dedup_twin("MINHASH_CAND_VALUES")}),
+    cand(id_a, id_b) AS (VALUES {_twin("minhash_cand_values", sf_dir)}),
     inter AS (
       SELECT c.id_a, c.id_b, count(*) AS n_common
       FROM cand c
@@ -199,10 +199,9 @@ def dedup_jaccard_pairs(spark, sf_dir):
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup: shingle -> 64 seeded min-hashes -> 16 bands
     -> bucket join -> exact-jaccard verify. Hash-matched (r9): every
-    hash is deterministic xxhash64, so tools/gen_dedup_oracle.py
-    re-derives the banded CANDIDATE pairs with an independent
-    pure-Python XXH64 (banding is probabilistic in recall, not in
-    value), and the oracle recomputes the exact-jaccard VERIFY from the
+    hash is deterministic xxhash64, so oracle_twins.py re-derives the
+    banded CANDIDATE pairs with an independent pure-Python XXH64
+    (banding is probabilistic in recall, not in value), and the oracle recomputes the exact-jaccard VERIFY from the
     documents table in SQL. Recall-vs-exact stays pytest-pinned."""
     from cm_well_spark.operators.dedup import minhash_dedup_pairs
 
@@ -214,8 +213,8 @@ def dedup_minhash_lsh(spark, sf_dir):
 
 @register(
     "dedup_simhash",
-    oracle=f"""
-    WITH sig(doc_id, sh) AS (VALUES {_dedup_twin("SIMHASH_SIG_VALUES")})
+    oracle=lambda sf_dir: f"""
+    WITH sig(doc_id, sh) AS (VALUES {_twin("simhash_sig_values", sf_dir)})
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -226,7 +225,7 @@ def dedup_simhash(spark, sf_dir):
     """SimHash near-dup: 64-bit sign-sum signature, 16-bit block pigeonhole
     buckets, hamming <= 3 verify. Hash-matched (r9, multimodal-dHash
     precedent): the signatures are deterministic xxhash64 sign-sums, so
-    tools/gen_dedup_oracle.py re-derives them with an independent
+    oracle_twins.py re-derives them with an independent
     pure-Python XXH64 and the oracle replays BRUTE-FORCE all-pairs
     hamming — a match also proves the pigeonhole banding dropped no
     pair."""

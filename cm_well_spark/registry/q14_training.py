@@ -665,8 +665,8 @@ def similarity_ivfpq_topk(spark, sf_dir):
 
 @register(
     "text_bpe_merges",
-    oracle=f"""
-    SELECT * FROM (VALUES {_bpe_twin("BPE_MERGES_VALUES")})
+    oracle=lambda sf_dir: f"""
+    SELECT * FROM (VALUES {_twin("bpe_merges_values", sf_dir)})
     AS t(rank, "left", "right")
     """,
 )
@@ -675,7 +675,7 @@ def text_bpe_merges(spark, sf_dir):
     table: one columnar pair-count aggregation + deterministic top-pair
     per round, merges applied as a per-round literal fold. Hash-matched
     (r9, FFD-twin precedent): integer counts + lexicographic tie-breaks
-    make the merge list fully deterministic, so tools/gen_bpe_oracle.py
+    make the merge list fully deterministic, so oracle_twins.py
     re-derives it for the pinned slice with an INDEPENDENT pure-Python
     learner and inlines it as a VALUES twin; pytest keeps the
     property-level pins."""
@@ -691,8 +691,8 @@ def text_bpe_merges(spark, sf_dir):
 
 @register(
     "text_bpe_token_counts",
-    oracle=f"""
-    WITH twin(doc_id, bpe_tokens) AS (VALUES {_bpe_twin("BPE_TOKEN_COUNT_VALUES")})
+    oracle=lambda sf_dir: f"""
+    WITH twin(doc_id, bpe_tokens) AS (VALUES {_twin("bpe_token_count_values", sf_dir)})
     SELECT d.doc_id, CAST(t.bpe_tokens AS BIGINT) AS bpe_tokens
     FROM documents d JOIN twin t USING (doc_id)
     WHERE d.doc_id < 100
@@ -702,7 +702,7 @@ def text_bpe_token_counts(spark, sf_dir):
     """Token counts under the learned BPE vocabulary: the merge loop
     runs once per DISTINCT word (Arrow-batched), counts broadcast-join
     back to the corpus. Hash-matched (r9): the independent pure-Python
-    twin (tools/gen_bpe_oracle.py) re-learns the merges AND re-encodes
+    twin (oracle_twins.py) re-learns the merges AND re-encodes
     every doc; the oracle joins its counts back against the documents
     table for the pinned slice."""
     from cm_well_spark.operators.bpe import bpe_encode, learn_bpe
@@ -914,14 +914,14 @@ def similarity_mmr_select(spark, sf_dir):
 
 @register(
     "pack_bins_ffd",
-    oracle=f"""
+    oracle=lambda sf_dir: f"""
     WITH d AS (
       SELECT doc_id,
              len(regexp_split_to_array(trim(text), '\\s+')) AS n_tok,
              ('0x' || substring(md5('ffd:' || doc_id), 1, 8))::BIGINT % 8 AS bkt
       FROM documents WHERE doc_id < 400
     ),
-    twin(doc_id, bin_id) AS (VALUES {_ffd_twin_values()})
+    twin(doc_id, bin_id) AS (VALUES {_twin("ffd_values", sf_dir)})
     SELECT d.doc_id,
            CAST(CASE WHEN d.n_tok > 64 THEN -1 ELSE d.bkt END AS BIGINT) AS bucket,
            CAST(t.bin_id AS BIGINT) AS bin_id,
@@ -934,7 +934,7 @@ def pack_bins_ffd_entry(spark, sf_dir):
     salted-bucket parallel FFD, docs never split across sequences.
     Hash-matched (r9, VERDICT r8 item 3) via the multimodal-dHash
     precedent: the salted buckets and md5-tiebroken FFD order are fully
-    deterministic, so tools/gen_ffd_oracle.py re-derives the bin
+    deterministic, so oracle_twins.py re-derives the bin
     assignments for the pinned slice (doc_id < 400) with an INDEPENDENT
     pure-Python FFD and inlines them as a VALUES twin; n_tok and the
     bucket key are recomputed from the documents table in SQL, so only

@@ -472,8 +472,8 @@ def text_memorization_risk(spark, sf_dir):
 
 @register(
     "text_compression_ratio",
-    oracle=f"""
-    WITH twin(doc_id, zip_len, ratio) AS (VALUES {_zlib_twin()})
+    oracle=lambda sf_dir: f"""
+    WITH twin(doc_id, zip_len, ratio) AS (VALUES {_twin("zlib_values", sf_dir)})
     SELECT d.doc_id,
            CAST(octet_length(encode(d.text)) AS BIGINT) AS raw_len,
            CAST(t.zip_len AS BIGINT) AS zip_len,
@@ -486,7 +486,7 @@ def text_compression_ratio(spark, sf_dir):
     """zlib compressibility per doc (text.py:compression_ratio) — the
     entropy-rate proxy filter. Hash-matched (r9) via the twin
     precedent: DEFLATE isn't SQL-expressible but IS deterministic at a
-    fixed level, so tools/gen_zlib_twin.py re-derives (zip_len, ratio)
+    fixed level, so oracle_twins.py re-derives (zip_len, ratio)
     for the pinned slice with a direct stdlib-zlib pass and inlines
     them as VALUES; raw_len is recomputed from the documents table in
     SQL (octet_length of the UTF-8 encoding), so text mangling still
@@ -855,9 +855,9 @@ def curation_train_val_test(spark, sf_dir):
 
 @register(
     "embedding_pca_project",
-    oracle=f"""
+    oracle=lambda sf_dir: f"""
     SELECT vec_id, pos, coord + 0.0 AS coord
-    FROM (VALUES {_pca_twin()}) AS t(vec_id, pos, coord)
+    FROM (VALUES {_twin("pca_values", sf_dir)}) AS t(vec_id, pos, coord)
     """,
 )
 def embedding_pca_project(spark, sf_dir):
@@ -867,7 +867,7 @@ def embedding_pca_project(spark, sf_dir):
     (CORRECTNESS_r09's one red row). Hash-matched (r10, the r9
     FFD/LSH/BPE promotion pattern): the eigendecomposition is
     deterministic given the fixed input (sign-fixed eigenvectors,
-    descending-eigenvalue order), so tools/gen_pca_oracle.py re-derives
+    descending-eigenvalue order), so oracle_twins.py re-derives
     the projection with an INDEPENDENT single-pass numpy twin and
     inlines it as a VALUES literal; numpy parity, orthonormality and
     captured-variance ordering stay pytest-pinned. +0.0 on both sides
@@ -885,8 +885,8 @@ def embedding_pca_project(spark, sf_dir):
 
 @register(
     "text_unigram_lm_vocab",
-    oracle=f"""
-    SELECT * FROM (VALUES {_unigram_twin("UNIGRAM_VOCAB_VALUES")})
+    oracle=lambda sf_dir: f"""
+    SELECT * FROM (VALUES {_twin("unigram_vocab_values", sf_dir)})
     AS t(rank, piece, logprob)
     """,
 )
@@ -897,7 +897,7 @@ def text_unigram_lm_vocab(spark, sf_dir):
     driver M-step over bounded integer counts, char-preserving prune.
     Hash-matched (r9, BPE-twin precedent): integer counts + total-order
     tie-breaks make the whole EM deterministic, so
-    tools/gen_unigram_oracle.py re-derives the vocabulary with an
+    oracle_twins.py re-derives the vocabulary with an
     INDEPENDENT pure-Python learner and inlines it as a VALUES twin;
     tests/test_unigram_lm.py keeps the property pins."""
     from cm_well_spark.operators.unigram_lm import learn_unigram
@@ -913,8 +913,8 @@ def text_unigram_lm_vocab(spark, sf_dir):
 
 @register(
     "text_unigram_token_counts",
-    oracle=f"""
-    WITH twin(doc_id, unigram_tokens) AS (VALUES {_unigram_twin("UNIGRAM_TOKEN_COUNT_VALUES")})
+    oracle=lambda sf_dir: f"""
+    WITH twin(doc_id, unigram_tokens) AS (VALUES {_twin("unigram_token_count_values", sf_dir)})
     SELECT d.doc_id, CAST(t.unigram_tokens AS BIGINT) AS unigram_tokens
     FROM documents d JOIN twin t USING (doc_id)
     WHERE d.doc_id < 100
@@ -925,7 +925,7 @@ def text_unigram_token_counts(spark, sf_dir):
     runs once per DISTINCT word (Arrow-batched mapInPandas), counts join
     back to the exploded corpus (AQE broadcast-vs-shuffle, bpe.py:143
     contract). Hash-matched (r9): the independent pure-Python twin
-    (tools/gen_unigram_oracle.py) re-learns the vocabulary AND
+    (oracle_twins.py) re-learns the vocabulary AND
     re-segments every doc; the oracle joins its counts back against the
     documents table for the pinned slice."""
     from cm_well_spark.operators.unigram_lm import learn_unigram, unigram_encode

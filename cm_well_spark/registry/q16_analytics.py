@@ -9,10 +9,10 @@ from cm_well_spark.registry._core import *  # noqa: F401,F403
 
 @register(
     "graph_connected_components",
-    oracle=_OP_EDGE_SQL
+    oracle=lambda sf_dir: _OP_EDGE_SQL
     + f""",
     nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-    twin(node, component) AS (VALUES {_cc_twin_values()})
+    twin(node, component) AS (VALUES {_twin("cc_values", sf_dir)})
     SELECT n.node, t.component FROM nodes n JOIN twin t USING (node)
     """,
 )
@@ -23,7 +23,7 @@ def graph_connected_components(spark, sf_dir):
     primitive. The
     min-node component labeling is canonical (algorithm-independent),
     so the oracle is an INDEPENDENT pure-Python union-find
-    (tools/gen_graph_twins.py, union-by-min — no label propagation)
+    (oracle_twins.py, union-by-min — no label propagation)
     inlined as a VALUES twin; the node set is recomputed from lineitem
     in SQL and joined against the twin, so lost or invented nodes still
     break the row-count match."""
@@ -318,8 +318,8 @@ def agg_quantiles_approx(spark, sf_dir):
 
 @register(
     "dedup_knn_components",
-    oracle=f"""
-    WITH twin(vec_id, cluster) AS (VALUES {_knn_cluster_twin()})
+    oracle=lambda sf_dir: f"""
+    WITH twin(vec_id, cluster) AS (VALUES {_twin("knn_cluster_values", sf_dir)})
     SELECT e.vec_id, CAST(t.cluster AS BIGINT) AS cluster
     FROM embeddings e JOIN twin t USING (vec_id)
     """,
@@ -329,7 +329,7 @@ def dedup_knn_components(spark, sf_dir):
     SRP-bucketed kNN graph -> cosine >= 0.3 edges -> star-contraction
     connected components -> total (vec_id, cluster) partition with
     min-id labels. The oracle is an INDEPENDENT pure-Python twin
-    (tools/gen_knn_cluster_twin.py: dict-bucketed brute-force kNN +
+    (oracle_twins.py: dict-bucketed brute-force kNN +
     union-find-by-min) joined against the embeddings table's ids, so
     the hash compare covers bucketing, the top-k cut, the threshold,
     AND the component fixpoint."""
@@ -1278,8 +1278,8 @@ def events_funnel_windowed(spark, sf_dir):
 
 @register(
     "er_name_clusters",
-    oracle=f"""
-    WITH twin(w, cluster) AS (VALUES {_fuzzy_twin()}),
+    oracle=lambda sf_dir: f"""
+    WITH twin(w, cluster) AS (VALUES {_twin("fuzzy_cluster_values", sf_dir)}),
     v AS (SELECT DISTINCT p_name AS w FROM part WHERE length(p_name) >= 2),
     j AS (SELECT v.w, t.cluster FROM v JOIN twin t USING (w)),
     s AS (SELECT cluster, CAST(count(*) AS BIGINT) AS cluster_size FROM j GROUP BY 1)
@@ -1292,7 +1292,7 @@ def er_name_clusters(spark, sf_dir):
     neighborhood pairs -> star-contraction connected components ->
     min-name cluster labels, singletons kept — the ER normalization
     table. The oracle is an INDEPENDENT pure-Python twin
-    (tools/gen_fuzzy_twin.py: brute-force banded DP + union-find-by-min)
+    (oracle_twins.py: brute-force banded DP + union-find-by-min)
     joined against the name set recomputed in SQL, with cluster sizes
     derived in SQL — so lost names, wrong components, AND wrong sizes
     all break the hash."""
@@ -1850,7 +1850,7 @@ def events_near_duplicates(spark, sf_dir):
     oracle="""
     SELECT '/tpch/nation/' || n_nationkey AS path FROM nation
     UNION ALL
-    SELECT '/tpch/supplier/10' AS path
+    SELECT '/tpch/supplier/' || s_suppkey AS path FROM supplier WHERE s_suppkey = 10
     """,
 )
 def auth_visibility_filter(spark, sf_dir):
@@ -1863,7 +1863,8 @@ def auth_visibility_filter(spark, sf_dir):
     user-deny fall-through, :88-99), and carries a +r on /tpch/supp —
     the isSubfolderOf boundary decoy that must NOT leak /tpch/supplier
     (:37-41). The oracle replays the decided set: all nations plus the
-    role-granted supplier."""
+    role-granted supplier, where that supplier exists (supplier keys at
+    sf0.001 stop at 9)."""
     from cm_well_spark.operators.auth import visible
 
     user = {
