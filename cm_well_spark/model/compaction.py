@@ -24,6 +24,14 @@ between compactions:
     Affected-path sets are batch-sized, so the reconciliation overhead
     is bounded by write volume since the last compaction — the standard
     Hudi-MoR / Iceberg-equality-delete read shape.
+  - Building either view runs no Spark job. Every store read is given
+    the table's stored schema (lakehouse.stored_schema), so none infers
+    one. The affected paths are the deltas' `path` column, proven from
+    the batch files' parquet footers (_delta_paths): their row count
+    bounds the paths and their `path` min/max is the key range, which
+    is all keyset.restrict needs to pick the broadcast route and the
+    sargable envelope. A file without `path` statistics leaves the
+    column unproven, and restrict counts it in one job instead.
   - `compact` folds the deltas into the base for good: ONE clustering
     shuffle (repartitionByRange) rewrites each table with globally
     disjoint file ranges — path-range files in the doc table, (p, o)
@@ -49,11 +57,14 @@ from pyspark.sql import functions as F
 
 from cm_well_spark.model.lakehouse import (
     collect_predicate_stats,
+    forget,
     merge_predicate_stats,
+    read_stored,
+    stored_schema,
     triples_of,
 )
 from cm_well_spark.plans import keyset
-from cm_well_spark.plans.keyset import restrict
+from cm_well_spark.plans.keyset import export_path_bound, restrict
 
 _INF_DELTA = "infotons_delta"
 _TRI_DELTA = "triples_delta"
@@ -67,20 +78,28 @@ def _delta_batches(out: str, name: str) -> list[str]:
     )
 
 
-def _read_base_infotons(spark: SparkSession, out: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out, "infotons"))
+def _delta_paths(deltas: DataFrame, batches: list[str]) -> DataFrame:
+    """The deltas' path column as a key frame carrying the proof its
+    batch footers give: their row count bounds its distinct paths, and
+    their `path` min/max is its key range. A semi or anti join needs no
+    distinct keys, so no job runs. A non-empty file without `path`
+    statistics (parquet drops min/max past 4 KB of value) leaves the
+    frame unproven: restrict then counts it."""
+    files = [(lo, hi, n) for b in batches for _f, lo, hi, n in _file_col_ranges(b, "path")[""] if n]
+    if any(lo is None for lo, _hi, _n in files):
+        return deltas.select("path")
+    envelope = (min(lo for lo, _, _ in files), max(hi for _, hi, _ in files)) if files else None
+    return export_path_bound(deltas.select("path"), sum(n for _, _, n in files), envelope)
 
 
 def _reconciled(spark: SparkSession, out: str) -> tuple[DataFrame, DataFrame | None]:
     """(merge-on-read doc table, delta-affected path frame or None)."""
-    base = _read_base_infotons(spark, out)
+    base = read_stored(spark, "infotons", os.path.join(out, "infotons"))
     batches = _delta_batches(out, _INF_DELTA)
     if not batches:
         return base, None
-    deltas = spark.read.parquet(*batches).select(*base.columns)
-    affected = deltas.select("path").distinct()
-    # semi first: its counted bound also brings the key-range envelope;
-    # every later restriction by `affected` reuses the one checkpoint
+    deltas = read_stored(spark, "infotons", *batches)
+    affected = _delta_paths(deltas, batches)
     touched = restrict(base, "path", affected).unionByName(deltas)
     untouched = restrict(base, "path", affected, anti=True)
     w = Window.partitionBy("path").orderBy(F.desc("index_time"))
@@ -102,7 +121,7 @@ def reconciled_triples(spark: SparkSession, out: str) -> DataFrame:
     flags are still true) + re-derived rows for delta-affected subjects
     (index_time/current changed, so their EAV rows are re-exploded from
     the reconciled doc slice — batch-sized work)."""
-    base = spark.read.parquet(os.path.join(out, "triples"))
+    base = read_stored(spark, "triples", os.path.join(out, "triples"))
     inf, affected = _reconciled(spark, out)
     if affected is None:
         return base
@@ -177,10 +196,10 @@ def _written_max_index_time(spark: SparkSession, target: str, default: int) -> i
     (no data read, no job); the aggregate runs only when some file has
     no statistics. `default` for a delta with no rows."""
     files = _file_col_ranges(target, "index_time")[""]
-    if any(hi is None for _f, _lo, hi in files):
-        m = spark.read.parquet(target).agg(F.max("index_time").alias("m")).first()["m"]
+    if any(hi is None for _f, _lo, hi, _n in files):
+        m = read_stored(spark, "infotons", target).agg(F.max("index_time").alias("m")).first()["m"]
         return default if m is None else m
-    return max((hi for _f, _lo, hi in files), default=default)
+    return max((hi for _f, _lo, hi, _n in files), default=default)
 
 
 def compact(
@@ -259,7 +278,7 @@ def compact(
     # the swap/removal invalidates listings Spark's FileStatusCache may
     # hold for these paths; a later write_batch recreates batch=0 under
     # the same name, and a stale cached listing would FILE_NOT_EXIST
-    spark.catalog.refreshByPath(out)
+    forget(spark, out)
     # rebuild the per-file subject bloom sidecars from scratch: every
     # triples file is fresh after the clustering shuffle (one extra pass
     # over written data, riding the maintenance job like the stats scan)
@@ -271,7 +290,7 @@ def compact(
     # seed/refresh the write_batch watermark (maintenance-job cost: one
     # column scan of the fresh files)
     m = (
-        spark.read.parquet(os.path.join(out, "infotons"))
+        read_stored(spark, "infotons", os.path.join(out, "infotons"))
         .agg(F.max("index_time").alias("m"))
         .first()["m"]
     )
@@ -314,10 +333,11 @@ def compact_deltas(spark: SparkSession, out: str) -> dict:
     batches = _delta_batches(out, _INF_DELTA)
     if len(batches) <= 1:
         return {"folded_batches": 0, "rows": 0}
-    deltas = spark.read.parquet(*batches)
+    deltas = read_stored(spark, "infotons", *batches)
     w = Window.partitionBy("path").orderBy(F.desc("index_time"))
     merged = deltas.withColumn("current", F.row_number().over(w) == 1)
-    n_rows = merged.count()
+    # the window keeps every row, so the footers' row counts are exact
+    n_rows = sum(n for b in batches for _f, _lo, _hi, n in _file_col_ranges(b, "path")[""])
     tmp_root = os.path.join(out, f"{_INF_DELTA}__compacting")
     if os.path.exists(tmp_root):
         shutil.rmtree(tmp_root)
@@ -331,6 +351,7 @@ def compact_deltas(spark: SparkSession, out: str) -> dict:
     os.rename(old_root, retired)
     os.rename(tmp_root, old_root)
     shutil.rmtree(retired)
+    forget(spark, out)
     return {"folded_batches": len(batches), "rows": int(n_rows)}
 
 
@@ -349,13 +370,14 @@ def _succ(s: str) -> str:
     return s + "\x00"
 
 
-def _file_col_ranges(table_dir: str, col: str) -> dict[str, list[tuple[str, str, str]]]:
+def _file_col_ranges(table_dir: str, col: str) -> dict[str, list[tuple[str, str, str, int]]]:
     """Per partition subdir ("kind=..."/"p=..." or "" for flat), each
-    parquet file's (fname, min, max) for `col` from the parquet footer —
-    no data read. Files with no stats map to (fname, None, None)."""
+    parquet file's (fname, min, max, rows) for `col` from the parquet
+    footer — no data read. Files with no stats map to (fname, None, None,
+    rows)."""
     import pyarrow.parquet as pq
 
-    out: dict[str, list[tuple[str, str, str]]] = {}
+    out: dict[str, list[tuple[str, str, str, int]]] = {}
     subdirs = [d for d in os.listdir(table_dir) if "=" in d and os.path.isdir(os.path.join(table_dir, d))]
     if not subdirs:
         subdirs = [""]
@@ -378,24 +400,24 @@ def _file_col_ranges(table_dir: str, col: str) -> dict[str, list[tuple[str, str,
                     v_lo, v_hi = v_lo.decode("utf-8", "replace"), v_hi.decode("utf-8", "replace")
                 lo = v_lo if lo is None else min(lo, v_lo)
                 hi = v_hi if hi is None else max(hi, v_hi)
-            entries.append((f, lo, hi))
+            entries.append((f, lo, hi, md.num_rows))
         out[sub] = sorted(entries, key=lambda e: (e[1] is None, e[1] or ""))
     return out
 
 
-def _ranges_disjoint(entries: list[tuple[str, str, str]]) -> bool:
+def _ranges_disjoint(entries: list[tuple[str, str, str, int]]) -> bool:
     """True when the files' [lo, hi] key ranges never interleave (adjacent
     files MAY share one boundary value — repartitionByRange on a composite
     key splits mid-value). An uncompacted store (shuffle-free ingest)
     fails this and must take the full clustering shuffle first."""
-    spans = [(lo, hi) for _f, lo, hi in entries]
+    spans = [(lo, hi) for _f, lo, hi, _n in entries]
     if any(lo is None for lo, _ in spans):
         return False
     spans.sort()
     return all(h1 <= l2 for (_l1, h1), (l2, _h2) in zip(spans, spans[1:]))
 
 
-def _intervals(entries: list[tuple[str, str, str]], affected: set[str], next_bid: int):
+def _intervals(entries: list[tuple[str, str, str, int]], affected: set[str], next_bid: int):
     """Carve the key space of one partition subdir into half-open
     intervals [start, end) — one per base file plus the gaps between
     them — so every rewritten row lands in exactly one bucket and every
@@ -405,7 +427,7 @@ def _intervals(entries: list[tuple[str, str, str]], affected: set[str], next_bid
     rows: list[tuple[int, str, str | None]] = []
     file_bid: dict[str, int] = {}
     cursor = ""
-    for fname, lo, hi in sorted(entries, key=lambda e: e[1]):
+    for fname, lo, hi, _n in sorted(entries, key=lambda e: e[1]):
         start = max(cursor, lo)
         if cursor < start:  # gap before this file
             rows.append((next_bid, cursor, start))
@@ -559,10 +581,10 @@ def write_subject_blooms(
     if rel_files is not None and not rel_files:
         return 0
     src = (
-        spark.read.parquet(tri_dir)
+        read_stored(spark, "triples", tri_dir)
         if rel_files is None
-        else spark.read.option("basePath", tri_dir).parquet(
-            *[os.path.join(tri_dir, f) for f in rel_files]
+        else read_stored(
+            spark, "triples", *[os.path.join(tri_dir, f) for f in rel_files], base_path=tri_dir
         )
     )
     hashed = src.select(
@@ -690,7 +712,7 @@ def compact_incremental(
     if not batches:
         return None
 
-    deltas = spark.read.parquet(*batches)
+    deltas = read_stored(spark, "infotons", *batches)
     # delta watermark NOW: deltas is lazy, and its files are gone by the
     # bookkeeping step at the end
     delta_max = deltas.agg(F.max("index_time").alias("m")).first()["m"]
@@ -740,9 +762,9 @@ def compact_incremental(
         d = os.path.join(out, name)
         if os.path.isdir(d):
             shutil.rmtree(d)
-    # drop stale FileStatusCache listings for the removed delta dirs
-    # (same hazard as in the full path: batch=0 gets recreated later)
-    spark.catalog.refreshByPath(out)
+    # drop stale listings for the removed delta dirs (same hazard as in
+    # the full path: batch=0 gets recreated later)
+    forget(spark, out)
     _write_watermark(out, max(_read_watermark(out) or 0, delta_max or 0))
     r["mode"] = "incremental"
     r["folded_batches"] = len(batches)
@@ -781,7 +803,7 @@ def _surgical_fold(
         if not _ranges_disjoint(entries):
             return None
         aff = set()
-        for fname, lo, hi in entries:
+        for fname, lo, hi, _n in entries:
             i = bisect.bisect_left(aff_paths, lo)
             if i < len(aff_paths) and aff_paths[i] <= hi:
                 aff.add(fname)
@@ -801,13 +823,13 @@ def _surgical_fold(
     # "could this file hold any affected subject?" in O(files x paths)
     # mmap bit tests with NO store scan; only files lacking a sidecar
     # (pre-sidecar layout) pay a columnar scan restricted to themselves.
-    tri_base = spark.read.parquet(tri_dir)
+    tri_base = read_stored(spark, "triples", tri_dir)
     tri_ranges = _file_col_ranges(tri_dir, "o")
     probes = _subject_probes(spark, aff_paths)
     hit_files: set[str] = set()
     no_sidecar: list[str] = []
     for sub, entries in tri_ranges.items():
-        for fname, _lo, _hi in entries:
+        for fname, _lo, _hi, _n in entries:
             rel = os.path.join(sub, fname) if sub else fname
             hit = _subject_bloom_probe(out, rel, probes)
             if hit is None:
@@ -815,8 +837,8 @@ def _surgical_fold(
             elif hit:
                 hit_files.add(rel)
     if no_sidecar:
-        scan = spark.read.option("basePath", tri_dir).parquet(
-            *[os.path.join(tri_dir, f) for f in no_sidecar]
+        scan = read_stored(
+            spark, "triples", *[os.path.join(tri_dir, f) for f in no_sidecar], base_path=tri_dir
         )
         hit_files |= {
             _rel_under(r["__f"], tri_dir)
@@ -833,9 +855,9 @@ def _surgical_fold(
         os.path.join(inf_dir, sub, f) for sub, aff in inf_affected.items() for f in aff
     ]
     base_slice = (
-        spark.read.option("basePath", inf_dir).parquet(*inf_base_slice_files)
+        read_stored(spark, "infotons", *inf_base_slice_files, base_path=inf_dir)
         if inf_base_slice_files
-        else spark.createDataFrame([], spark.read.parquet(inf_dir).schema)
+        else spark.createDataFrame([], stored_schema(spark, "infotons"))
     )
     rewritten_inf = rewrite_inf(base_slice, aff_paths_df)
     touched_docs = restrict(rewritten_inf, "path", aff_paths)
@@ -859,7 +881,7 @@ def _surgical_fold(
         pval = _unescape_partition(sub)
         os_new = new_po.get(pval, [])
         aff = set()
-        for fname, lo, hi in entries:
+        for fname, lo, hi, _n in entries:
             rel = os.path.join(sub, fname) if sub else fname
             if rel in hit_files or fname in hit_files:
                 aff.add(fname)
@@ -906,12 +928,11 @@ def _surgical_fold(
     _write_buckets(tagged_inf, "kind", inf_tmp, target_rows_per_file, ["path", "index_time"])
 
     tri_slice = (
-        spark.read.option("basePath", tri_dir).parquet(
-            *[
-                os.path.join(tri_dir, sub, f)
-                for sub, aff in tri_affected.items()
-                for f in aff
-            ]
+        read_stored(
+            spark,
+            "triples",
+            *[os.path.join(tri_dir, sub, f) for sub, aff in tri_affected.items() for f in aff],
+            base_path=tri_dir,
         )
         if any(tri_affected.values())
         else spark.createDataFrame([], tri_base.schema)
@@ -954,11 +975,11 @@ def _surgical_fold(
 
     # ---- assemble + swap + bookkeeping --------------------------------
     keep_inf = {
-        sub: [f for f, _lo, _hi in entries if f not in inf_affected[sub]]
+        sub: [f for f, _lo, _hi, _n in entries if f not in inf_affected[sub]]
         for sub, entries in inf_ranges.items()
     }
     keep_tri = {
-        sub: [f for f, _lo, _hi in entries if f not in tri_affected[sub]]
+        sub: [f for f, _lo, _hi, _n in entries if f not in tri_affected[sub]]
         for sub, entries in tri_ranges.items()
     }
     n_inf_files = _assemble(inf_dir, inf_tmp, os.path.join(out, "infotons__staging"), keep_inf)
@@ -966,8 +987,8 @@ def _surgical_fold(
     for tmp in (inf_tmp, tri_tmp):
         if os.path.isdir(tmp):
             shutil.rmtree(tmp)
-    # drop stale FileStatusCache listings for the swapped dirs
-    spark.catalog.refreshByPath(out)
+    # drop stale listings for the swapped dirs
+    forget(spark, out)
     # sidecar maintenance: replaced files' blooms die with them, kept
     # (hardlinked) files keep theirs, fresh bucket files get new blooms
     # — one read over O(new data) only

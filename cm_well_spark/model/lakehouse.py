@@ -25,8 +25,10 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cm_well_spark.model.builder import build_infotons
+from cm_well_spark.model.schema import INFOTON_SCHEMA, stored
 
 #: the checkout holding the package; default home of the store and of
 #: registry checkpoint dirs
@@ -85,6 +87,37 @@ def triples_of(infotons: DataFrame) -> DataFrame:
     )
 
 
+#: each store table's stored schema, derived once per process from
+#: INFOTON_SCHEMA through the functions that write the tables
+_STORED: dict[str, StructType] = {}
+
+
+def stored_schema(spark: SparkSession, table: str) -> StructType:
+    """The schema a parquet read of store table `table` ("infotons",
+    "triples" or "predicate_stats") returns. The triples and stats
+    layouts are the analyzed output of `triples_of` and the stats
+    aggregation over an empty doc table: no job, and no copy to drift."""
+    if not _STORED:
+        tri = triples_of(spark.createDataFrame([], INFOTON_SCHEMA))
+        _STORED.update(
+            infotons=stored(INFOTON_SCHEMA, "kind"),
+            triples=stored(tri.schema, "p"),
+            predicate_stats=stored(_predicate_stats_frame(tri, spark).schema),
+        )
+    return _STORED[table]
+
+
+def read_stored(spark: SparkSession, table: str, *paths: str, base_path: str | None = None) -> DataFrame:
+    """Store table `table` read from `paths` (its directory, some of its
+    files under `base_path`, or delta batch directories of the doc
+    table) with its stored schema, so the read runs no schema-inference
+    job."""
+    reader = spark.read.schema(stored_schema(spark, table))
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    return reader.parquet(*paths)
+
+
 def collect_predicate_stats(spark: SparkSession, out: str) -> None:
     """(Re)collect per-predicate stats over the store's triples table: the
     BGP reorderer's cardinality source — the Spark analog of the
@@ -92,7 +125,7 @@ def collect_predicate_stats(spark: SparkSession, out: str) -> None:
     (JenaArqExtensionsUtils.sortTriplePatternsByAmount:187-225). Called by
     the initial materialization AND by compaction, so stats stay honest
     after incremental merge batches fold in."""
-    t = spark.read.parquet(os.path.join(out, "triples"))
+    t = read_stored(spark, "triples", os.path.join(out, "triples"))
     _predicate_stats_frame(t, spark).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out, "predicate_stats")
     )
@@ -222,7 +255,7 @@ def merge_predicate_stats(
         auto-ANALYZE staleness contract.
     Returns "full" or "merged"."""
     stats_path = os.path.join(out, "predicate_stats")
-    st = spark.read.parquet(stats_path)
+    st = read_stored(spark, "predicate_stats", stats_path)
     rows = st.collect()  # bounded: one row per predicate
     churn = sum(per_p_added.values()) + sum(per_p_removed.values())
     total = sum(r["n_triples"] for r in rows) or 1
@@ -241,7 +274,7 @@ def merge_predicate_stats(
     merged = spark.createDataFrame(adjusted, st.schema)
     new_ps = sorted((set(per_p_added) | set(per_p_removed)) - known)
     if new_ps:
-        t = spark.read.parquet(os.path.join(out, "triples")).where(
+        t = read_stored(spark, "triples", os.path.join(out, "triples")).where(
             F.col("p").isin(new_ps)  # partition-pruned: reads only the new p dirs
         )
         merged = merged.unionByName(
@@ -270,6 +303,7 @@ def materialize(spark: SparkSession, sf_dir: str, root: str | None = None, force
         with open(stamp) as fh:
             if fh.read() == fp:
                 return out
+    forget(spark, out)
     # NOTE: do NOT persist() the build — caching the wide fields-map table
     # measured 114s at sf0.1 (memory-store serialization) vs 45s to just
     # write it; triples derive from the cheap re-read of the written files.
@@ -298,7 +332,7 @@ def materialize(spark: SparkSession, sf_dir: str, root: str | None = None, force
         .partitionBy("kind")
         .parquet(os.path.join(out, "infotons"))
     )
-    infotons = spark.read.parquet(os.path.join(out, "infotons"))
+    infotons = read_stored(spark, "infotons", os.path.join(out, "infotons"))
     (
         triples_of(infotons)
         .sortWithinPartitions("p", "o")
@@ -343,7 +377,7 @@ def _load(spark: SparkSession, out: str, table: str) -> DataFrame:
 
             df = reconciled_triples(spark, out)
         else:
-            df = spark.read.parquet(os.path.join(out, table))
+            df = read_stored(spark, table, os.path.join(out, table))
         if os.environ.get("CMW_CACHE") == "1" and _table_bytes(
             os.path.join(out, table)
         ) <= int(os.environ.get("CMW_CACHE_MAX_BYTES", str(1 << 30))):
@@ -359,6 +393,22 @@ def _load(spark: SparkSession, out: str, table: str) -> DataFrame:
             df = df.persist()
         _DF_CACHE[key] = df
     return _DF_CACHE[key]
+
+
+def forget(spark: SparkSession, out: str) -> None:
+    """Drop every memoized frame and stats dict of store `out`
+    (unpersisting cached frames) and Spark's cached file listings under
+    it. Whatever rewrites or removes store files calls it: a frame
+    memoized over the old files lists part files that are gone, and the
+    memo key (delta count) comes back to its old value after a
+    compaction."""
+    for key in [k for k in _DF_CACHE if k[1] == out]:
+        df = _DF_CACHE.pop(key)
+        if df.is_cached:
+            df.unpersist()
+    for key in [k for k in _STATS_CACHE if k[1] == out]:
+        del _STATS_CACHE[key]
+    spark.catalog.refreshByPath(out)
 
 
 def _table_bytes(path: str) -> int:
@@ -419,7 +469,7 @@ def load_predicate_stats(
     cached = _STATS_CACHE.get(key)
     if cached is not None:
         return cached
-    rows = spark.read.parquet(stats_path).collect()
+    rows = read_stored(spark, "predicate_stats", stats_path).collect()
     _STATS_CACHE[key] = {
         r["p"]: {
             "n": r["n_triples"],

@@ -83,4 +83,24 @@ INFOTON_SCHEMA = T.StructType(
     ]
 )
 
-TRIPLES_COLUMNS = ["s", "p", "o", "g", "vtype", "num", "ts", "bool", "index_time", "current", "kind"]
+
+def _nullable(t: T.DataType) -> T.DataType:
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType)) for f in t.fields])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType))
+    if isinstance(t, T.MapType):
+        return T.MapType(t.keyType, _nullable(t.valueType))
+    return t
+
+
+def stored(schema: T.StructType, partition: str | None = None) -> T.StructType:
+    """The schema a parquet read returns for a table written from
+    `schema` (partitioned by `partition`): the data columns in write
+    order, the partition column last, every column and nested value
+    nullable. A reader given it runs no schema-inference job, and files
+    holding the same columns in another order still match, since parquet
+    columns resolve by name."""
+    data = [f for f in schema.fields if f.name != partition]
+    last = [f for f in schema.fields if f.name == partition]
+    return T.StructType([T.StructField(f.name, _nullable(f.dataType)) for f in data + last])

@@ -98,8 +98,9 @@ def _stats_dst_bound(selectors, reverse: bool, stats: dict | None) -> int | None
 
 def _bounded(df: DataFrame, bound: int | None) -> DataFrame:
     """Checkpoint a path set and carry its bound for keyset.restrict: the
-    stats proof when there is one (lazy, no job), else the counted
-    checkpoint (one job)."""
+    stats proof when there is one (lazy checkpoint, no counting job),
+    else the counted checkpoint (one job). Either way the checkpoint runs
+    the plan's shuffle and broadcast stages when it is taken (AQE)."""
     if bound is None:
         df, bound = iter_checkpoint_count(df)
     else:
@@ -152,8 +153,10 @@ def expand_out(
     # this the accumulated plan re-evaluates the whole chain 2^levels
     # times (measured 10x wall on a 2-level xg). Seed-bound elision (r11):
     # search() exports its proven row bound (plans/keyset.py), so bounded
-    # seed sets skip the counted checkpoint; the lazy checkpoint's blocks
-    # ride the first consuming action. Per level, the new frontier is a
+    # seed sets skip the counted checkpoint. An unproven frontier's
+    # checkpoint runs its hop's shuffle and broadcast stages when it is
+    # taken (AQE), during this build; only the blocks ride the first
+    # consuming action. Per level, the new frontier is a
     # subset of the hop's targets, so a predicate-stats bound on the hop
     # proves the next level's key set with zero extra jobs; unproven hops
     # pay the counted checkpoint.

@@ -48,18 +48,23 @@ def iter_checkpoint(df: DataFrame) -> DataFrame:
 
 
 def iter_checkpoint_lazy(df: DataFrame) -> DataFrame:
-    """Round state whose block materialization rides the NEXT action
-    instead of a dedicated eager job (r11, guide §5: in the convergence
-    loops — closure/CC/BFS/k-core/peel — rounds run on near-empty frames
-    where scheduler round-trips, not data, are the round cost).
+    """Round state whose BLOCKS are saved by the next action instead of
+    a dedicated eager job (r11, guide §5: in the convergence loops —
+    closure/CC/BFS/k-core/peel — rounds run on near-empty frames where
+    scheduler round-trips, not data, are the round cost).
 
     `localCheckpoint(eager=False)` truncates the SQL plan to a
     LogicalRDD at CALL time (same analyzer-depth bounding as the eager
-    form) but saves the blocks inside whichever job first computes the
-    RDD — typically the round's own termination count/signature action,
-    or the next round's. After that first consumer, every later reader
-    hits blocks exactly like the eager form, so multi-consumer state
-    (BFS visited, CC edges at convergence) never recomputes lineage.
+    form). To do so it builds the plan's RDD, and under AQE that runs
+    every shuffle and broadcast stage of the plan at once, each as a job
+    of its own: a plan with an exchange is NOT lazy, only its last,
+    narrow stage is. A narrow plan (scans, filters, projections) fires no
+    job here. The blocks are saved inside whichever job first computes
+    the RDD — typically the round's own termination count/signature
+    action, or the next round's. After that first consumer, every later
+    reader hits blocks exactly like the eager form, so multi-consumer
+    state (BFS visited, CC edges at convergence) never recomputes
+    lineage.
 
     The reliable tier keeps the eager durable checkpoint: on a cluster
     the up-front materialization is the executor-loss recovery point."""

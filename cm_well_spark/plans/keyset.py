@@ -13,10 +13,13 @@ table, in two steps.
 Bound. A driver list is bounded by its length. A key frame is bounded by
 its proof (export_path_bound, below) or, without one, by one counted
 checkpoint: the keys are lazily checkpointed and a single job saves them
-while it observes their count and their key range. The count is
-exported on the caller's frame as its proof, and the checkpoint, count
-and range stay on it, so every later restriction by the same frame pays
-no second job and its plan shares one broadcast exchange with the first.
+while it observes their count and their key range. Under AQE taking the
+checkpoint already runs the key plan's shuffle and broadcast stages
+(plans/iterative.iter_checkpoint_lazy), so a distinct key frame costs
+its shuffle there too. The count is exported on the caller's frame as
+its proof, and the checkpoint, count and range stay on it, so every
+later restriction by the same frame pays no second job and its plan
+shares one broadcast exchange with the first.
 
 Route.
   - A list of at most LITERAL_MAX keys becomes `between(min, max) &
@@ -75,30 +78,49 @@ Proofs. A producer that can PROVE an upper bound on its row count
 (search()'s index-route predicate-stats algebra or paging limit, a
 traversal's stats-bounded hop, a contract size such as a top-k) exports
 it with export_path_bound, and `restrict` reuses it instead of paying
-the counted checkpoint. The carrier is an instance attribute on the
-DataFrame object, which is fail-safe but fragile: ANY transformation
-returns a new DataFrame and drops it, and consumers then fall back to
-the counted route. So the protocol is explicit:
+the counted checkpoint. A producer that can also prove the (min, max)
+range of its keys exports it as the envelope, which `restrict` applies
+as the sargable `between` filter of a semi join. Parquet footers prove
+both without reading data: the merge-on-read views take the deltas'
+`path` column as the key frame, bounded by the sum of the batch files'
+row counts (a semi or anti join needs no distinct keys) and enveloped
+by their `path` min/max (model/compaction._delta_paths). Unlike the
+bound, the envelope filters rows, so it must hold every key: a file
+without statistics leaves the frame unproven.
+
+A driver list past LITERAL_MAX becomes its key frame through Arrow: a
+LocalRelation built in the JVM, whose scans start no Python worker
+(_literal_frame).
+
+The carriers are instance attributes on the DataFrame object, which is
+fail-safe but fragile: ANY transformation returns a new DataFrame and
+drops them, and consumers then fall back to the counted route. So the
+protocol is explicit:
 
 - the reader looks ONLY in the instance __dict__, never through
   DataFrame.__getattr__: a dataset with a column literally named
   `_cmw_path_bound` must not resolve to a Column (which would make
   `bound <= cap` raise inside the consumer);
-- the reader type-checks, so nothing but an int ever escapes;
+- the reader type-checks, so nothing but an int bound and a pair
+  envelope ever escapes;
 - the bound is STRATEGY-ONLY: consumers may pick a join route with it,
-  but must never derive rows from it.
+  but must never derive rows from it; the envelope, which does filter
+  rows, is exported only with a proof that covers every key.
 
 Pinned by tests/test_r12_optimizations.py: the registry's xg/yg seed
 searches export a bound and their traversals skip the seed count job;
 a refactor that drops the attribute degrades to the counted route with
-identical rows.
+identical rows. tests/test_compaction.py pins the footer proofs: both
+merge-on-read views build with no job and hash the same as the counted
+route.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, Observation
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -110,14 +132,19 @@ BROADCAST_MAX = 1_000_000
 _KEY = "__keyset_key"
 #: instance attribute a proven key frame carries: its row upper bound
 _BOUND_ATTR = "_cmw_path_bound"
+#: instance attribute a proven key frame may carry: (min, max) of its keys
+_ENVELOPE_ATTR = "_cmw_path_envelope"
 #: instance attribute a counted key frame carries: (checkpointed keys,
 #: count, range), so every later restriction by that frame reuses them
 _COUNTED_ATTR = "_cmw_keyset_counted"
 
 
-def export_path_bound(df: DataFrame, bound: int) -> DataFrame:
-    """Attach a PROVEN row upper bound to `df` (mutates and returns it)."""
+def export_path_bound(df: DataFrame, bound: int, envelope: tuple | None = None) -> DataFrame:
+    """Attach a PROVEN row upper bound to `df`, and optionally the PROVEN
+    (min, max) range of its keys (mutates and returns it)."""
     df.__dict__[_BOUND_ATTR] = int(bound)
+    if envelope is not None:
+        df.__dict__[_ENVELOPE_ATTR] = tuple(envelope)
     return df
 
 
@@ -135,10 +162,14 @@ def _key_frame(keys: DataFrame) -> tuple[DataFrame, int, tuple | None]:
     frame = keys.select(F.col(keys.columns[0]).alias(_KEY))
     bound = proven_path_bound(keys)
     if bound is not None:
-        return frame, bound, None
+        envelope = keys.__dict__.get(_ENVELOPE_ATTR)
+        return frame, bound, envelope if isinstance(envelope, tuple) and len(envelope) == 2 else None
+    # the checkpoint truncates the plan at once; under AQE that call
+    # already runs every shuffle and broadcast stage of it (see
+    # iter_checkpoint_lazy), so a distinct's shuffle runs here. One more
+    # job saves the blocks while it observes the count and range; an
+    # aggregate action would cost AQE a second job for its exchange.
     frame = iter_checkpoint_lazy(frame)
-    # one job saves the checkpoint and observes the count and range; an
-    # aggregate action would cost AQE a second job for its exchange
     seen = Observation()
     observed = frame.observe(seen, F.count(F.lit(1)), F.min(_KEY), F.max(_KEY))
     observed.write.format("noop").mode("overwrite").save()
@@ -146,6 +177,16 @@ def _key_frame(keys: DataFrame) -> tuple[DataFrame, int, tuple | None]:
     export_path_bound(keys, bound)
     counted = keys.__dict__[_COUNTED_ATTR] = (frame, bound, None if lo is None else (lo, hi))
     return counted
+
+
+def _literal_frame(spark: SparkSession, literals: list, dtype: T.DataType) -> DataFrame:
+    """One-column key frame of a driver list. Built through Arrow, the
+    keys become a LocalRelation in the JVM; a list of tuples would be a
+    Python RDD, and every scan of it would start Python-worker tasks
+    (a `noop` scan of 384 keys on 4 cores: 0.31-0.42 s against
+    43-70 ms)."""
+    schema = T.StructType([T.StructField(_KEY, dtype)])
+    return spark.createDataFrame(pa.table({_KEY: literals}), schema)
 
 
 def restrict(
@@ -166,8 +207,7 @@ def restrict(
             hit = F.col(col).between(*envelope) & F.col(col).isin(literals)
             return df.where(~F.coalesce(hit, F.lit(False))) if anti else df.where(hit)
         bound = len(literals)
-        schema = T.StructType([T.StructField(_KEY, df.schema[col].dataType)])
-        frame = df.sparkSession.createDataFrame([(k,) for k in literals], schema)
+        frame = _literal_frame(df.sparkSession, literals, df.schema[col].dataType)
     if bound <= BROADCAST_MAX:
         frame = F.broadcast(frame)
     if envelope is not None and not anti:

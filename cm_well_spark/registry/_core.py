@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -135,11 +135,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {n: QUERIES[n] for n in sentinels + ordered}
 
 
-def oracle_sql(sf_dir: str) -> dict[str, str]:
-    """DuckDB oracle SQL per entry over the raw tables in sf_dir. sf_dir is
-    the directory the oracle will run on: the twin-backed oracles inline
-    values computed from its tables."""
-    return {n: o if isinstance(o, str) else _squash(o(sf_dir)) for n, o in ORACLES.items()}
+def oracle_sql(sf_dir: str, names: Iterable[str] | None = None) -> dict[str, str]:
+    """DuckDB oracle SQL per entry (every entry, or those in `names`) over
+    the raw tables in sf_dir. sf_dir is the directory the oracle will run
+    on: the twin-backed oracles inline values computed from its tables,
+    so resolving only the entries a caller runs skips the other twins."""
+    wanted = ORACLES if names is None else {n: ORACLES[n] for n in names if n in ORACLES}
+    return {n: o if isinstance(o, str) else _squash(o(sf_dir)) for n, o in wanted.items()}
 
 
 def _merge_fixture(spark, sf_dir):

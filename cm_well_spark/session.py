@@ -69,7 +69,9 @@ def get_spark(app_name: str = "cm_well_spark", shuffle_partitions: int | None = 
         # lose the Python file:line in their DataFrame context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # test tables store TIMESTAMP(NANOS); read as long, loaders convert
+        # a parquet TIMESTAMP(NANOS) column reads as long instead of
+        # failing the read (the test tables store microseconds, and
+        # sources/tables.py declares their schemas)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # literal key lists (plans/keyset, up to LITERAL_MAX = 256
         # values) exceed the default threshold (10), which silently
@@ -77,6 +79,11 @@ def get_spark(app_name: str = "cm_well_spark", shuffle_partitions: int | None = 
         # Evaluating a few hundred min/max containment checks per row
         # group is nanoseconds against the MBs of decode it skips.
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
+        # past 32 directories Spark lists a table's partitions in a job
+        # of its own, on every read: the triples table has one directory
+        # per predicate (46 at sf0.001). In this local-mode session the
+        # driver lists a few hundred directories in milliseconds.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # single-JVM local mode: a long full-GC pause during a heavy
         # clustering shuffle can starve the in-process heartbeat thread —
         # observed killing an sf1 compact with "unable to send heartbeats

@@ -772,3 +772,171 @@ def test_subject_bloom_sidecars_make_fold_scan_free(spark, tmp_path_factory):
             (F.col("s") == "/tpch/region/1") & (F.col("p") == "extra") & F.col("current")
         ).collect()
     } == {"bloomed", "rescanned"}
+
+
+# ---------------------------------------------------------------------------
+# Merge-on-read views from delta footers: the affected-path bound and key
+# range come from the batch files' parquet footers, so building a view
+# runs no Spark job; a footer without `path` statistics falls back to the
+# counted route.
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def pristine(spark, tmp_path):
+    """A private copy of the materialized store with no deltas."""
+    from cm_well_spark.model.lakehouse import materialize
+
+    dst = str(tmp_path / "pristine")
+    shutil.copytree(materialize(spark, SF_DIR), dst)
+    return dst
+
+
+def _jobs_in(spark, fn):
+    """(fn's result, ids of the Spark jobs it fired)."""
+    sc = spark.sparkContext
+    group = f"jobs_in_{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+        return result, sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _row_hashes(df):
+    return sorted(r[0] for r in df.select(F.md5(F.to_json(F.struct(*df.columns)))).collect())
+
+
+def _counted_views(spark, out, monkeypatch):
+    """Both views through the counted route: the deltas' distinct paths
+    without a proof, so restrict counts them."""
+    from cm_well_spark.model import compaction
+
+    with monkeypatch.context() as m:
+        m.setattr(compaction, "_delta_paths", lambda deltas, _batches: deltas.select("path").distinct())
+        return compaction.reconciled_infotons(spark, out), compaction.reconciled_triples(spark, out)
+
+
+def test_footer_proven_views_match_the_counted_route(spark, pristine, monkeypatch):
+    from cm_well_spark.model import compaction
+
+    lm = datetime(2024, 8, 1)
+    steps = [
+        ("no delta", None),
+        ("one batch", [
+            ("/tpch/region/0", 1, "write", {"extra": [_sfv("f1")]}, None, lm, "https"),
+            ("/tpch/nation/3", 1, "delete_attributes", None, {"name": []}, lm, "https"),
+        ]),
+        ("several batches", [
+            ("/tpch/region/0", 1, "write", {"extra": [_sfv("f2")]}, None, lm, "https"),
+            ("/tpch/region/95", 1, "write", {"name": [_sfv("R95")]}, None, lm, "https"),
+        ]),
+        ("a batch deleting a path", [("/tpch/region/1", 1, "delete_path", None, None, lm, "https")]),
+        ("after compact_deltas", "fold"),
+    ]
+    for label, step in steps:
+        if step == "fold":
+            compaction.compact_deltas(spark, pristine)
+        elif step:
+            compaction.write_batch(spark, pristine, _cmds(spark, step))
+        counted = _counted_views(spark, pristine, monkeypatch)
+        proven = compaction.reconciled_infotons(spark, pristine), compaction.reconciled_triples(spark, pristine)
+        for c, p in zip(counted, proven):
+            assert _row_hashes(p) == _row_hashes(c), label
+    deleted = compaction.reconciled_infotons(spark, pristine).where(F.col("current") & (F.col("path") == "/tpch/region/1"))
+    assert [r["kind"] for r in deleted.collect()] == ["DeletedInfoton"]
+
+
+def test_building_a_view_with_pending_deltas_fires_no_job(spark, pristine):
+    from cm_well_spark.model import compaction
+    from cm_well_spark.model.lakehouse import read_stored
+    from cm_well_spark.plans.keyset import proven_path_bound
+
+    lm = datetime(2024, 8, 2)
+    for i in range(2):
+        compaction.write_batch(spark, pristine, _cmds(spark, [
+            (f"/tpch/region/{i}", 1, "write", {"extra": [_sfv(f"j{i}")]}, None, lm, "https"),
+            ("/tpch/nation/7", 1, "write", {"extra": [_sfv(f"j{i}")]}, None, lm, "https"),
+        ]))
+    batches = compaction._delta_batches(pristine, compaction._INF_DELTA)
+    # the footers prove 4 delta rows, the bound on the distinct paths
+    paths = compaction._delta_paths(read_stored(spark, "infotons", *batches), batches)
+    assert proven_path_bound(paths) == 4
+
+    (inf, tri), jobs = _jobs_in(
+        spark, lambda: (compaction.reconciled_infotons(spark, pristine), compaction.reconciled_triples(spark, pristine))
+    )
+    assert jobs == []
+    assert "strategy=broadcast" in inf._jdf.queryExecution().analyzed().toString()
+    cur = tri.where(F.col("current") & (F.col("s") == "/tpch/nation/7") & (F.col("p") == "extra"))
+    assert sorted(r["o"] for r in cur.collect()) == ["j0", "j1"]  # a write adds values
+
+
+def test_delta_without_path_statistics_takes_the_counted_route(spark, pristine, monkeypatch):
+    from cm_well_spark.model import compaction
+    from cm_well_spark.model.lakehouse import read_stored
+    from cm_well_spark.plans.keyset import proven_path_bound
+
+    lm = datetime(2024, 8, 3)
+    compaction.write_batch(spark, pristine, _cmds(spark, [
+        ("/tpch/region/0", 1, "write", {"extra": [_sfv("s0")]}, None, lm, "https"),
+    ]))
+    # parquet writes no min/max for a column chunk whose values pass 4 KB
+    long_path = "/tpch/region/" + "x" * 5000
+    compaction.write_batch(spark, pristine, _cmds(spark, [
+        (long_path, 1, "write", {"name": [_sfv("LONG")]}, None, lm, "https"),
+    ]))
+    batches = compaction._delta_batches(pristine, compaction._INF_DELTA)
+    stats = [(lo, n) for _f, lo, _hi, n in compaction._file_col_ranges(batches[-1], "path")[""]]
+    assert stats and all(lo is None for lo, n in stats if n)
+    deltas = read_stored(spark, "infotons", *batches)
+    # the delta files hold the stored columns in another order
+    assert sorted(deltas.columns) == sorted(spark.read.parquet(*batches).columns)
+    assert proven_path_bound(compaction._delta_paths(deltas, batches)) is None
+
+    (inf, tri), jobs = _jobs_in(
+        spark, lambda: (compaction.reconciled_infotons(spark, pristine), compaction.reconciled_triples(spark, pristine))
+    )
+    assert jobs  # the affected paths were counted
+    counted = _counted_views(spark, pristine, monkeypatch)
+    assert _row_hashes(inf) == _row_hashes(counted[0])
+    assert _row_hashes(tri) == _row_hashes(counted[1])
+    row = inf.where(F.col("current") & (F.col("path") == long_path)).first()
+    assert row["fields"]["name"][0]["value"] == "LONG"
+
+
+def test_loader_serves_the_store_a_compaction_leaves(spark, pristine):
+    """The loader memoizes a frame per delta count, and a compaction
+    brings the count back to an earlier value: compact_deltas and
+    compact drop the memoized frames, whose files they removed."""
+    from cm_well_spark.model import compaction
+    from cm_well_spark.model.lakehouse import _load
+
+    lm = datetime(2024, 8, 5)
+    n = _load(spark, pristine, "infotons").count()
+    for i in range(2):
+        compaction.write_batch(spark, pristine, _cmds(spark, [
+            (f"/tpch/region/{i}", 1, "write", {"extra": [_sfv(f"l{i}")]}, None, lm, "https"),
+        ]))
+        assert _load(spark, pristine, "infotons").count() == n + i + 1
+    compaction.compact_deltas(spark, pristine)
+    assert _load(spark, pristine, "infotons").count() == n + 2
+    compaction.compact(spark, pristine)
+    assert _load(spark, pristine, "infotons").count() == n + 2
+
+
+def test_compact_deltas_takes_its_row_count_from_footers(spark, pristine):
+    from cm_well_spark.model import compaction
+    from cm_well_spark.model.lakehouse import read_stored
+
+    lm = datetime(2024, 8, 4)
+    for i in range(3):
+        compaction.write_batch(spark, pristine, _cmds(spark, [
+            (f"/tpch/region/{i}", 1, "write", {"extra": [_sfv(f"c{i}")]}, None, lm, "https"),
+            ("/tpch/region/4", 1, "write", {"extra": [_sfv(f"c{i}")]}, None, lm, "https"),
+        ]))
+    rows = read_stored(spark, "infotons", *compaction._delta_batches(pristine, compaction._INF_DELTA)).count()
+    res, jobs = _jobs_in(spark, lambda: compaction.compact_deltas(spark, pristine))
+    assert res == {"folded_batches": 3, "rows": rows}
+    assert len(jobs) <= 2

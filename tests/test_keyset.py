@@ -334,3 +334,29 @@ def test_no_hand_hinted_key_set_joins():
             if (rel, right) not in _HINT_ALLOWED:
                 offenders.append(f"{rel}:{line} {right}")
     assert not offenders, offenders
+
+
+@pytest.mark.parametrize("n", [keyset.LITERAL_MAX + 1, 1000])
+def test_driver_list_above_literal_max_builds_its_key_frame_in_the_jvm(spark, infotons, n):
+    """Past LITERAL_MAX a driver list becomes a key frame built through
+    Arrow: its lineage holds no PythonRDD (a list of tuples would, and
+    every scan of it would start Python workers), and the rows are the
+    ones the keys select."""
+    from pyspark.sql import types as T
+
+    rows = {(r["path"], r["uuid"]) for r in infotons.select("path", "uuid").collect()}
+    live = sorted({p for p, _u in rows})
+    keys = live[: n - 10] + [f"/keyset/missing/{i}" for i in range(10)]
+    semi = restrict(infotons, "path", keys)
+    anti = restrict(infotons, "path", keys, anti=True)
+    assert "strategy=broadcast" in _analyzed(semi)
+    assert {tuple(r) for r in semi.select("path", "uuid").collect()} == {r for r in rows if r[0] in set(keys)}
+    assert {tuple(r) for r in anti.select("path", "uuid").collect()} == {r for r in rows if r[0] not in set(keys)}
+
+    def lineage(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    assert "PythonRDD" not in lineage(keyset._literal_frame(spark, sorted(keys), T.StringType()))
+    # the probe sees a Python-built frame
+    listed = spark.createDataFrame([(k,) for k in keys], "k string")
+    assert "PythonRDD" in lineage(listed)

@@ -99,3 +99,52 @@ def test_build_is_a_few_jvm_calls(spark, sf_dir, monkeypatch):
     build_infotons(spark, sf_dir)
     monkeypatch.undo()
     assert len(calls) <= 1000
+
+
+def _jobs_fired(spark, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup("model_jobs_test", "model jobs")
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup("model_jobs_test"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_raw_tables_read_with_their_declared_schemas(spark, sf_dir):
+    from cm_well_spark.sources import tables as tbl
+
+    assert _jobs_fired(spark, lambda: tbl.load(spark, sf_dir)) == 0
+    for name in tbl.TABLES:
+        inferred = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+        assert tbl.load_table(spark, sf_dir, name).schema == inferred, name
+
+
+def test_stored_schemas_are_what_the_store_reads_back(spark, sf_dir):
+    from cm_well_spark.model.lakehouse import materialize, read_stored, stored_schema
+
+    out = materialize(spark, sf_dir)
+    for table in ("infotons", "triples", "predicate_stats"):
+        path = os.path.join(out, table)
+        assert stored_schema(spark, table) == spark.read.parquet(path).schema, table
+        assert _jobs_fired(spark, lambda p=path, t=table: read_stored(spark, t, p)) == 0, table
+
+
+def test_rebuilt_store_serves_fresh_frames(spark, sf_dir, tmp_path, monkeypatch):
+    """A rebuild drops the memoized (and cached) frames of the store it
+    rewrites: they list part files the rebuild deletes."""
+    import shutil
+
+    from cm_well_spark.model.lakehouse import load_infotons, load_predicate_stats, materialize
+
+    monkeypatch.setenv("CMW_CACHE", "1")
+    src = materialize(spark, sf_dir)
+    root = str(tmp_path / "lake")
+    shutil.copytree(src, os.path.join(root, os.path.basename(src)))
+    before = load_infotons(spark, sf_dir, root=root)
+    n = before.count()
+    assert before.is_cached and load_predicate_stats(spark, sf_dir, root=root)
+    materialize(spark, sf_dir, root=root, force=True)
+    assert not before.is_cached
+    assert load_infotons(spark, sf_dir, root=root).count() == n
+    assert load_predicate_stats(spark, sf_dir, root=root)

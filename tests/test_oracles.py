@@ -75,3 +75,22 @@ def test_oracle_matches_spark(spark, sf_dir, oracles, name):
     con, sql = oracles
     diff = compare(QUERIES[name](spark, sf_dir).toPandas(), con.execute(sql[name]).df())
     assert diff is None, diff
+
+
+def test_oracle_sql_resolves_only_the_named_entries(sf_dir, monkeypatch):
+    """A caller naming entries pays only for their twins; the SQL is the
+    same as in the full resolution."""
+    from cm_well_spark.registry import _core
+
+    twin, plain = TWIN_ENTRIES[0], "graph_kcore"
+    resolved = []
+    for name in TWIN_ENTRIES:
+        monkeypatch.setitem(
+            _core.ORACLES, name, lambda d, f=ORACLES[name], n=name: resolved.append(n) or f(d)
+        )
+    got = oracle_sql(sf_dir, names=[twin, plain, "no_such_entry"])
+    assert resolved == [twin] and set(got) == {twin, plain}
+    resolved.clear()
+    full = oracle_sql(sf_dir)
+    assert sorted(resolved) == sorted(TWIN_ENTRIES)
+    assert got == {n: full[n] for n in got}

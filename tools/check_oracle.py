@@ -92,7 +92,7 @@ def main():
 
     spark = get_spark("oracle_check")
     con = connect(sf_dir)
-    qs, osql = queries(), oracle_sql(sf_dir)
+    qs, osql = queries(), oracle_sql(sf_dir, names=only)
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
