@@ -64,7 +64,7 @@ from cm_well_spark.model.lakehouse import (
     triples_of,
 )
 from cm_well_spark.plans import keyset
-from cm_well_spark.plans.keyset import export_path_bound, restrict
+from cm_well_spark.plans.keyset import export_path_bound, local_frame, restrict
 
 _INF_DELTA = "infotons_delta"
 _TRI_DELTA = "triples_delta"
@@ -363,6 +363,8 @@ def compact_deltas(spark: SparkSession, out: str) -> dict:
 # base; above this fraction of affected base files the single clustering
 # shuffle of a full compact is cheaper than per-file surgery
 _INCR_MAX_AFFECTED_FRACTION = 0.5
+# one row per (partition value, bucket id, [lo, hi) key interval)
+_INTERVALS = "__pv STRING, __bid INT, __lo STRING, __hi STRING"
 
 
 def _succ(s: str) -> str:
@@ -659,7 +661,7 @@ def _subject_probes(spark: SparkSession, paths: list[str]) -> list[tuple[int, in
     """(h1, h2) per path through the SAME JVM xxhash64 expressions the
     bloom build uses — build/probe hash agreement by construction."""
     rows = (
-        spark.createDataFrame([(p,) for p in paths], "s STRING")
+        local_frame(spark, [(p,) for p in paths], "s STRING")
         .select(
             F.xxhash64("s").alias("h1"),
             F.xxhash64("s", F.lit(_BLOOM_SEED2)).alias("h2"),
@@ -793,7 +795,7 @@ def _surgical_fold(
 
     inf_dir = os.path.join(out, "infotons")
     tri_dir = os.path.join(out, "triples")
-    aff_paths_df = spark.createDataFrame([(p,) for p in aff_paths], "__ap STRING")
+    aff_paths_df = local_frame(spark, [(p,) for p in aff_paths], "__ap STRING")
 
     # ---- infotons: footer-stat overlap on the leading sort key --------
     inf_ranges = _file_col_ranges(inf_dir, "path")
@@ -857,7 +859,7 @@ def _surgical_fold(
     base_slice = (
         read_stored(spark, "infotons", *inf_base_slice_files, base_path=inf_dir)
         if inf_base_slice_files
-        else spark.createDataFrame([], stored_schema(spark, "infotons"))
+        else local_frame(spark, [], stored_schema(spark, "infotons"))
     )
     rewritten_inf = rewrite_inf(base_slice, aff_paths_df)
     touched_docs = restrict(rewritten_inf, "path", aff_paths)
@@ -913,9 +915,7 @@ def _surgical_fold(
         iv_rows_inf.append((k, bid, "", None))
         bid += 1
 
-    iv_inf = spark.createDataFrame(
-        iv_rows_inf, "__pv STRING, __bid INT, __lo STRING, __hi STRING"
-    )
+    iv_inf = local_frame(spark, iv_rows_inf, _INTERVALS)
     tagged_inf = rewritten_inf.join(
         F.broadcast(iv_inf),
         (F.col("kind") == F.col("__pv"))
@@ -935,7 +935,7 @@ def _surgical_fold(
             base_path=tri_dir,
         )
         if any(tri_affected.values())
-        else spark.createDataFrame([], tri_base.schema)
+        else local_frame(spark, [], tri_base.schema)
     )
     # per-predicate row churn for the threshold-ANALYZE stats merge —
     # computed NOW, while the old files are still readable
@@ -959,9 +959,7 @@ def _surgical_fold(
     for p in sorted(set(new_po) - {_unescape_partition(s) for s in tri_ranges}):
         iv_rows_tri.append((p, bid, "", None))
         bid += 1
-    iv_tri = spark.createDataFrame(
-        iv_rows_tri, "__pv STRING, __bid INT, __lo STRING, __hi STRING"
-    )
+    iv_tri = local_frame(spark, iv_rows_tri, _INTERVALS)
     tagged_tri = rewritten_tri.join(
         F.broadcast(iv_tri),
         (F.col("p") == F.col("__pv"))

@@ -29,6 +29,7 @@ from pyspark.sql.types import StructType
 
 from cm_well_spark.model.builder import build_infotons
 from cm_well_spark.model.schema import INFOTON_SCHEMA, stored
+from cm_well_spark.plans.keyset import local_frame
 
 #: the checkout holding the package; default home of the store and of
 #: registry checkpoint dirs
@@ -270,8 +271,8 @@ def merge_predicate_stats(
         d["n_triples"] = (
             d["n_triples"] + per_p_added.get(d["p"], 0) - per_p_removed.get(d["p"], 0)
         )
-        adjusted.append(d)
-    merged = spark.createDataFrame(adjusted, st.schema)
+        adjusted.append(tuple(d[c] for c in st.columns))
+    merged = local_frame(spark, adjusted, st.schema)
     new_ps = sorted((set(per_p_added) | set(per_p_removed)) - known)
     if new_ps:
         t = read_stored(spark, "triples", os.path.join(out, "triples")).where(

@@ -28,7 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from cm_well_spark.plans.iterative import iter_checkpoint, iter_checkpoint_lazy
-from cm_well_spark.plans.keyset import restrict
+from cm_well_spark.plans.keyset import local_frame, restrict
 
 _LBL = "__as_"  # label-column prefix: internal, never user-visible
 
@@ -107,7 +107,7 @@ class GraphTraversal:
 
     def V(self, *paths: str) -> "GraphTraversal":
         if paths:
-            f = self.infotons.sparkSession.createDataFrame([(p,) for p in paths], ["path"])
+            f = local_frame(self.infotons.sparkSession, [(p,) for p in paths], "path string")
             return self._with(f, bounded=True)
         return self._with(self.infotons.select("path"), bounded=False)
 

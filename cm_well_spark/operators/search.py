@@ -151,10 +151,8 @@ def search(
                 # AQE would convert the SMJ only AFTER the doc side has
                 # shuffled its wide fields-map rows (measured 10+s at sf1
                 # for 8.9M docs vs ~2s broadcast).
-                if bound is not None:
-                    export_path_bound(paths, bound)
                 df = restrict(df, "path", paths)
-                proven_bound = proven_path_bound(paths)
+                proven_bound = bound if bound is not None else proven_path_bound(paths)
                 if residual is not None:
                     df = df.where(residual)
             else:

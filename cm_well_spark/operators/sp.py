@@ -42,6 +42,7 @@ from urllib.parse import parse_qs, unquote
 from pyspark.sql import DataFrame, functions as F
 
 from cm_well_spark.operators import search as S
+from cm_well_spark.plans.keyset import local_frame
 
 _PLACEHOLDER = re.compile(r"%([A-Za-z]+)%")
 
@@ -119,7 +120,7 @@ def _source_paths(infotons: DataFrame, triples: DataFrame, source: str) -> DataF
 
     op = params.get("op", ["read"])[0] or "read"
     if op == "read":
-        return infotons.sparkSession.createDataFrame([(unquote(base),)], ["path"])
+        return local_frame(infotons.sparkSession, [(unquote(base),)], "path string")
     if op != "search":
         raise SpParseError(f"populate supports op=search or a bare read path, got op={op}")
     qp = params.get("qp", [None])[0]

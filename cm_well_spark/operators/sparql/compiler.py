@@ -30,7 +30,9 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from cm_well_spark.plans.keyset import local_frame
 from cm_well_spark.plans.iterative import (
     iter_checkpoint,
     iter_checkpoint_count,
@@ -344,9 +346,9 @@ def _zero_length_frame(triples: DataFrame, s, o) -> DataFrame:
         nodes = t.select(F.col("s").alias("n")).union(t.select(F.col("o").alias("n"))).distinct()
         return nodes.select(F.col("n").alias(s.name), F.col("n").alias(o.name))
     if isinstance(s, Var):
-        return spark.createDataFrame([(_term_str(o),)], [s.name])
+        return local_frame(spark, [(_term_str(o),)], T.StructType([T.StructField(s.name, T.StringType())]))
     if isinstance(o, Var):
-        return spark.createDataFrame([(_term_str(s),)], [o.name])
+        return local_frame(spark, [(_term_str(s),)], T.StructType([T.StructField(o.name, T.StringType())]))
     uid = next(_fresh)
     if _term_str(s) == _term_str(o):
         return spark.range(1).select(F.lit(1).alias(f"__exists__path{uid}"))
@@ -618,8 +620,7 @@ def _compile_group(
     for vars_, rows in g.values:
         spark = triples.sparkSession
         names = [v.name for v in vars_]
-        schema = ", ".join(f"`{n}` string" for n in names)
-        vdf = spark.createDataFrame(rows, schema)
+        vdf = local_frame(spark, rows, T.StructType([T.StructField(n, T.StringType()) for n in names]))
         # inline data is small by construction: broadcast
         if df is None:
             if any(cell is None for row in rows for cell in row):

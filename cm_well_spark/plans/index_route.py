@@ -10,16 +10,22 @@ the difference between a full-table scan per query and touching only the
 filtered predicates' data.
 
 Compilation: the FieldFilter tree becomes set algebra over path sets —
-  Must single(field op value) -> pruned triples scan -> distinct s
-  field existence            -> pruned scan, distinct s
+  Must single(field op value) -> pruned triples scan -> s
+  field existence            -> pruned scan -> s
   Must group                 -> intersection (chained semi joins)
   Should group (no musts)    -> union
   MustNot / system fields / quad filters -> NOT set-expressible alone;
       returned as a RESIDUAL Column applied after hydration (doc side).
 
-`index_search_paths` returns (path_set_df | None, residual Column | None).
-If no positive set-expressible clause exists, path_set is None and the
-caller falls back to the doc-side scan.
+The sets are bags: a multi-valued predicate repeats its subject, and
+overlapping Should branches repeat theirs. Their only consumer is the
+hydrating semi join, which ignores duplicates, so a set is deduplicated
+only when its exact row bound (predicate_stats' n_triples) is unknown or
+above the broadcast cap (keyset.semi_keys).
+
+`index_search_paths` returns (path_set_df | None, residual Column | None,
+bound). If no positive set-expressible clause exists, path_set is None and
+the caller falls back to the doc-side scan.
 """
 
 from __future__ import annotations
@@ -51,6 +57,7 @@ from cm_well_spark.plans.compile import (
     analyze_expr,
     compile_filter,
 )
+from cm_well_spark.plans.keyset import semi_keys
 
 
 def _triple_pred(ff: SingleFieldFilter) -> Column | None:
@@ -89,7 +96,7 @@ def _single_path_set(triples: DataFrame, ff: SingleFieldFilter) -> DataFrame | N
         return None  # doc-side residual
     pred = _triple_pred(ff)
     t = triples.where(F.col("current")).where(F.col("p") == name)
-    return t.where(pred).select("s").distinct()
+    return t.where(pred).select("s")
 
 
 def _pred_name(ff: SingleFieldFilter) -> str | None:
@@ -104,10 +111,11 @@ def _pred_name(ff: SingleFieldFilter) -> str | None:
 
 
 def _single_bound(ff: SingleFieldFilter, stats: dict | None) -> int | None:
-    """PROVEN upper bound on a single filter's candidate-path count, from
+    """EXACT upper bound on a single filter's candidate rows, from
     predicate_stats: whatever the value predicate keeps, candidates are a
-    subset of the predicate's subjects, and distinct s <= n_triples(p).
-    None = no proof (stats absent or predicate unknown/stale)."""
+    subset of the predicate's triples, n_triples(p) (a count, so it also
+    bounds the distinct paths). None = no proof (stats absent or
+    predicate unknown/stale)."""
     name = _pred_name(ff)
     if stats is None or name is None or name not in stats:
         return None
@@ -116,9 +124,10 @@ def _single_bound(ff: SingleFieldFilter, stats: dict | None) -> int | None:
 
 def _set_for(
     triples: DataFrame, group: MultiFieldFilter, stats: dict | None = None
-) -> tuple[DataFrame | None, list[FieldFilter], int | None]:
-    """One bool level -> (candidate path set or None, residual filters,
-    proven upper bound on the set's size or None).
+) -> tuple[DataFrame | None, list[FieldFilter], int | None, int | None]:
+    """One bool level -> (candidate path bag or None, residual filters,
+    upper bound on its rows or None, upper bound on its distinct paths or
+    None).
 
     Soundness rules (candidates must be a SUPERSET of the true result so
     the residual only narrows):
@@ -131,12 +140,17 @@ def _set_for(
         so the union would wrongly exclude docs);
       - MustNot always goes residual (set complement needs the universe).
 
-    The bound mirrors the same algebra over predicate_stats row counts:
-    intersection <= min of member bounds; union <= sum (None member =
-    unproven -> whole level unproven for unions, skipped for mins)."""
+    The bounds mirror the same algebra over predicate_stats row counts.
+    A chain of semi joins keeps the rows of its first set, so the
+    intersection's rows are bounded by the first member's rows and its
+    paths by the min of the member bounds; a union's rows and paths by
+    the sums (None member = unproven -> whole level unproven for unions,
+    skipped for mins)."""
     must_sets: list[DataFrame] = []
+    must_rows: list[int | None] = []
     must_bounds: list[int | None] = []
     should_sets: list[DataFrame] = []
+    should_rows: list[int | None] = []
     should_bounds: list[int | None] = []
     should_bad = False
     residual: list[FieldFilter] = []
@@ -146,52 +160,54 @@ def _set_for(
             continue
         if isinstance(f, SingleFieldFilter):
             s = _single_path_set(triples, f)
-            b = _single_bound(f, stats)
+            r = b = _single_bound(f, stats)
             sub_res: list[FieldFilter] = []
         else:
-            s, sub_res, b = _set_for(triples, f, stats)
+            s, sub_res, r, b = _set_for(triples, f, stats)
         if f.field_op == SHOULD:
             if s is None or sub_res:
                 should_bad = True
             else:
                 should_sets.append(s)
+                should_rows.append(r)
                 should_bounds.append(b)
         else:  # Must
             if s is None:
                 residual.append(f)
             else:
                 must_sets.append(s)
+                must_rows.append(r)
                 must_bounds.append(b)
                 residual.extend(sub_res)
     if must_sets:
         out = reduce(lambda a, b: a.join(b, "s", "left_semi"), must_sets)
         known = [b for b in must_bounds if b is not None]
-        return out, residual, (min(known) if known else None)
+        return out, residual, must_rows[0], (min(known) if known else None)
     has_unexpressible_must = any(r.field_op != MUSTNOT for r in residual)
     if should_sets and not should_bad and not has_unexpressible_must:
-        out = reduce(lambda a, b: a.unionByName(b), should_sets).distinct()
-        bound = (
-            sum(should_bounds)
-            if all(b is not None for b in should_bounds)
-            else None
-        )
-        return out, residual, bound
-    return None, [group], None
+        out = reduce(lambda a, b: a.unionByName(b), should_sets)
+        return out, residual, _sum(should_rows), _sum(should_bounds)
+    return None, [group], None, None
+
+
+def _sum(bounds: list[int | None]) -> int | None:
+    return None if None in bounds else sum(bounds)
 
 
 def index_search_paths(
     triples: DataFrame, ff: FieldFilter, stats: dict | None = None
 ) -> tuple[DataFrame | None, Column | None, int | None]:
-    """Compile the filter into (candidate path set, residual doc filter,
-    proven upper bound on the candidate count or None).
+    """Compile the filter into (candidate path key frame, residual doc
+    filter, upper bound on the distinct candidates or None). The key frame
+    carries its own bound for keyset.restrict (keyset.semi_keys).
     Correctness contract: docs(candidates) ∩ residual == docs(filter) —
     the residual re-applies every clause the set algebra under-constrains
     (MustNot, system fields, quad filters, pure-should optionality)."""
     top = ff if isinstance(ff, MultiFieldFilter) else MultiFieldFilter(MUST, (ff,))
-    path_set, residual, bound = _set_for(triples, top, stats)
+    path_set, residual, rows, bound = _set_for(triples, top, stats)
     if path_set is None:
         return None, compile_filter(ff), None
     res_col = None
     if residual:
         res_col = compile_filter(MultiFieldFilter(MUST, tuple(residual)))
-    return path_set.withColumnRenamed("s", "path"), res_col, bound
+    return semi_keys(path_set.withColumnRenamed("s", "path"), rows, bound), res_col, bound

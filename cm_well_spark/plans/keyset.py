@@ -74,23 +74,41 @@ IN/FROM); Gremlin's `V(paths)` seed frontiers, whose hint keeps the
 later hops' joins broadcast (without it they plan a sort-merge join);
 and plain unhinted semi joins, which already leave the route to Spark.
 
-Proofs. A producer that can PROVE an upper bound on its row count
-(search()'s index-route predicate-stats algebra or paging limit, a
-traversal's stats-bounded hop, a contract size such as a top-k) exports
+Bounds. A producer that knows an upper bound on its row count exports
 it with export_path_bound, and `restrict` reuses it instead of paying
-the counted checkpoint. A producer that can also prove the (min, max)
-range of its keys exports it as the envelope, which `restrict` applies
-as the sargable `between` filter of a semi join. Parquet footers prove
-both without reading data: the merge-on-read views take the deltas'
-`path` column as the key frame, bounded by the sum of the batch files'
-row counts (a semi or anti join needs no distinct keys) and enveloped
+the counted checkpoint. Some bounds are exact, and only these are
+proofs:
+
+  - predicate_stats' n_triples, a count per predicate (index-route
+    candidates, traversal hop edges, gqp suffix sets);
+  - a paging length or a contract size such as a top-k;
+  - parquet footer row counts (the merge-on-read views' delta keys);
+  - the length of a driver list;
+  - a counted checkpoint's count.
+
+predicate_stats' dobj and dsubj are approx_count_distinct estimates
+(about 5% error), not proofs. An estimate may choose a route, but it
+may never remove an operator that changes rows: traversal's hydration
+takes a limit on its key union only when the bounds fit the limit, and
+still applies the limit to the rows it returns.
+
+A semi or anti join ignores duplicate keys, so a key frame needs no
+distinct (semi_keys): it keeps its duplicates when an exact row bound
+keeps it within BROADCAST_MAX, where it broadcasts as its distinct keys
+would, and is deduplicated otherwise.
+
+A producer that can also prove the (min, max) range of its keys exports
+it as the envelope, which `restrict` applies as the sargable `between`
+filter of a semi join. Parquet footers prove both without reading data:
+the merge-on-read views take the deltas' `path` column as the key
+frame, bounded by the sum of the batch files' row counts and enveloped
 by their `path` min/max (model/compaction._delta_paths). Unlike the
 bound, the envelope filters rows, so it must hold every key: a file
 without statistics leaves the frame unproven.
 
 A driver list past LITERAL_MAX becomes its key frame through Arrow: a
 LocalRelation built in the JVM, whose scans start no Python worker
-(_literal_frame).
+(local_frame, which builds every frame of driver rows in the package).
 
 The carriers are instance attributes on the DataFrame object, which is
 fail-safe but fragile: ANY transformation returns a new DataFrame and
@@ -123,6 +141,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from cm_well_spark.plans.iterative import iter_checkpoint_lazy
 
@@ -140,8 +159,9 @@ _COUNTED_ATTR = "_cmw_keyset_counted"
 
 
 def export_path_bound(df: DataFrame, bound: int, envelope: tuple | None = None) -> DataFrame:
-    """Attach a PROVEN row upper bound to `df`, and optionally the PROVEN
-    (min, max) range of its keys (mutates and returns it)."""
+    """Attach a row upper bound to `df` (see Bounds in the module
+    docstring), and optionally the PROVEN (min, max) range of its keys
+    (mutates and returns it)."""
     df.__dict__[_BOUND_ATTR] = int(bound)
     if envelope is not None:
         df.__dict__[_ENVELOPE_ATTR] = tuple(envelope)
@@ -149,7 +169,7 @@ def export_path_bound(df: DataFrame, bound: int, envelope: tuple | None = None) 
 
 
 def proven_path_bound(df: DataFrame) -> int | None:
-    """The proven row bound carried by `df`, or None when absent."""
+    """The row bound carried by `df`, or None when absent."""
     bound = df.__dict__.get(_BOUND_ATTR)
     return bound if isinstance(bound, int) else None
 
@@ -179,14 +199,35 @@ def _key_frame(keys: DataFrame) -> tuple[DataFrame, int, tuple | None]:
     return counted
 
 
-def _literal_frame(spark: SparkSession, literals: list, dtype: T.DataType) -> DataFrame:
-    """One-column key frame of a driver list. Built through Arrow, the
-    keys become a LocalRelation in the JVM; a list of tuples would be a
-    Python RDD, and every scan of it would start Python-worker tasks
-    (a `noop` scan of 384 keys on 4 cores: 0.31-0.42 s against
-    43-70 ms)."""
-    schema = T.StructType([T.StructField(_KEY, dtype)])
-    return spark.createDataFrame(pa.table({_KEY: literals}), schema)
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType | str) -> DataFrame:
+    """A frame of driver rows built through Arrow: the rows become a
+    LocalRelation in the JVM. `createDataFrame(list)` would make a Python
+    RDD, and every scan of it would start Python-worker tasks (a `noop`
+    scan of 384 keys on 4 cores: 0.31-0.42 s against 43-70 ms).
+    `schema` is a StructType or a DDL string."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    columns = zip(*rows) if rows else ([] for _ in arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def semi_keys(keys: DataFrame, rows: int | None, distinct: int | None = None) -> DataFrame:
+    """The key frame of a semi or anti join, which ignores duplicate keys.
+
+    With an exact row bound `rows` of at most BROADCAST_MAX, `keys` keeps
+    its duplicates and carries `rows`: it broadcasts exactly as its
+    distinct keys would, and no distinct shuffle (one Spark job under AQE)
+    runs. Otherwise the keys are deduplicated and carry `distinct`, a
+    bound on the distinct keys (an estimate is fine: it only picks the
+    route), or nothing, and `restrict` counts them."""
+    if rows is not None and rows <= BROADCAST_MAX:
+        return export_path_bound(keys, rows)
+    keys = keys.distinct()
+    return keys if distinct is None else export_path_bound(keys, distinct)
 
 
 def restrict(
@@ -207,7 +248,8 @@ def restrict(
             hit = F.col(col).between(*envelope) & F.col(col).isin(literals)
             return df.where(~F.coalesce(hit, F.lit(False))) if anti else df.where(hit)
         bound = len(literals)
-        frame = _literal_frame(df.sparkSession, literals, df.schema[col].dataType)
+        schema = T.StructType([T.StructField(_KEY, df.schema[col].dataType)])
+        frame = local_frame(df.sparkSession, [(k,) for k in literals], schema)
     if bound <= BROADCAST_MAX:
         frame = F.broadcast(frame)
     if envelope is not None and not anti:

@@ -342,8 +342,6 @@ def test_driver_list_above_literal_max_builds_its_key_frame_in_the_jvm(spark, in
     Arrow: its lineage holds no PythonRDD (a list of tuples would, and
     every scan of it would start Python workers), and the rows are the
     ones the keys select."""
-    from pyspark.sql import types as T
-
     rows = {(r["path"], r["uuid"]) for r in infotons.select("path", "uuid").collect()}
     live = sorted({p for p, _u in rows})
     keys = live[: n - 10] + [f"/keyset/missing/{i}" for i in range(10)]
@@ -356,7 +354,7 @@ def test_driver_list_above_literal_max_builds_its_key_frame_in_the_jvm(spark, in
     def lineage(df):
         return df._jdf.queryExecution().toRdd().toDebugString()
 
-    assert "PythonRDD" not in lineage(keyset._literal_frame(spark, sorted(keys), T.StringType()))
+    assert "PythonRDD" not in lineage(keyset.local_frame(spark, [(k,) for k in sorted(keys)], "k string"))
     # the probe sees a Python-built frame
     listed = spark.createDataFrame([(k,) for k in keys], "k string")
     assert "PythonRDD" in lineage(listed)

@@ -14,8 +14,11 @@ Each entry also reports, without gating, `n_exchanges`,
 `python_nodes`: how many of Spark's Python operators the plan runs
 (grouped, cogrouped and map-in-Arrow/pandas nodes, ArrowEvalPython and
 BatchEvalPython) — each one a round trip across the Arrow boundary —
-and `single_partition`: how many times the plan gathers rows into one
-partition (`SinglePartition`, e.g. a global limit or an unkeyed window).
+`single_partition`: how many times the plan gathers rows into one
+partition (`SinglePartition`, e.g. a global limit or an unkeyed window);
+and `redundant_distinct`: how many key-only HashAggregates (a distinct)
+feed the key side of a left semi or left anti join, which ignores
+duplicate keys anyway.
 
 Emits one JSON object to stdout and exits non-zero if any non-whitelisted
 flag fires — the automated form of the per-round plan audit. Run:
@@ -72,6 +75,51 @@ NLJ_WHITELIST = {
 }
 
 
+# nodes that may sit between a distinct and the semi or anti join it feeds
+_PASS_THROUGH = {
+    "Project", "Filter", "BroadcastExchange", "ShuffleExchange", "Sort",
+    "InputAdapter", "WholeStageCodegen", "AQEShuffleRead", "ColumnarToRow",
+}
+
+
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _name(node) -> str:
+    return node.getClass().getSimpleName().removesuffix("Exec").split("$")[0]
+
+
+def _distinct_below(node) -> bool:
+    """Whether `node` is, through pass-through nodes, a key-only
+    HashAggregate."""
+    while True:
+        name = _name(node)
+        if name == "HashAggregate":
+            return node.aggregateExpressions().isEmpty()
+        kids = _children(node)
+        if name not in _PASS_THROUGH or len(kids) != 1:
+            return False
+        node = kids[0]
+
+
+def redundant_distincts(plan) -> int:
+    """Key-only HashAggregates that are the key side of a left semi or
+    left anti join, in a physical plan (the input plan of an adaptive
+    one)."""
+    if _name(plan) == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    n, stack = 0, [plan]
+    while stack:
+        node = stack.pop()
+        kids = _children(node)
+        if node.nodeName().endswith("Join") and str(node.joinType()) in ("LeftSemi", "LeftAnti"):
+            n += _distinct_below(kids[1])
+        stack.extend(kids)
+    return n
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from cm_well_spark.registry import queries
@@ -83,7 +131,8 @@ def main() -> None:
     for name, fn in queries().items():
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            executed = df._jdf.queryExecution().executedPlan()
+            plan = executed.toString()
         except Exception as e:  # noqa: BLE001 — audit must not die on one entry
             report[name] = {"error": str(e)[:200]}
             bad += 1
@@ -94,6 +143,7 @@ def main() -> None:
             "n_exchanges": plan.count("Exchange"),
             "python_nodes": len(PYTHON_NODE.findall(plan)),
             "single_partition": plan.count("SinglePartition"),
+            "redundant_distinct": redundant_distincts(executed),
             "whole_stage_codegen": "WholeStageCodegen" in plan,
         }
         if hits:
