@@ -21,6 +21,11 @@ between compactions:
     `system.current` in ES in place, IndexerStream.scala:100-137), so
     the read recomputes `current` for the affected paths ONLY; the
     untouched bulk passes through a broadcast anti-join, shuffle-free.
+    That recompute is operators/merge.fold_versions, the one version
+    fold every writer shares (apply_commands, admin.overwrite, the
+    incremental compact); write_batch, compact_deltas and x-fix set the
+    flag through the same merge.mark_current window, so every site
+    breaks an index_time tie the same way, on the higher uuid.
     Affected-path sets are batch-sized, so the reconciliation overhead
     is bounded by write volume since the last compaction — the standard
     Hudi-MoR / Iceberg-equality-delete read shape.
@@ -52,7 +57,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cm_well_spark.model.lakehouse import (
@@ -60,9 +65,12 @@ from cm_well_spark.model.lakehouse import (
     forget,
     merge_predicate_stats,
     read_stored,
+    rederive_triples,
     stored_schema,
+    swap_in,
     triples_of,
 )
+from cm_well_spark.operators.merge import decorate_versions, fold_versions, mark_current, merge_versions
 from cm_well_spark.plans import keyset
 from cm_well_spark.plans.keyset import export_path_bound, local_frame, restrict
 
@@ -99,20 +107,17 @@ def _reconciled(spark: SparkSession, out: str) -> tuple[DataFrame, DataFrame | N
     if not batches:
         return base, None
     deltas = read_stored(spark, "infotons", *batches)
+    # the footer-proven frame itself goes in: its bound rides on the
+    # instance, and fold_versions hands that one object to restrict
     affected = _delta_paths(deltas, batches)
-    touched = restrict(base, "path", affected).unionByName(deltas)
-    untouched = restrict(base, "path", affected, anti=True)
-    w = Window.partitionBy("path").orderBy(F.desc("index_time"))
-    touched = touched.withColumn("current", F.row_number().over(w) == 1)
-    return untouched.unionByName(touched), affected
+    return fold_versions(base, deltas, affected), affected
 
 
 def reconciled_infotons(spark: SparkSession, out: str) -> DataFrame:
     """Merge-on-read doc table: base + all delta batches, `current`
-    recomputed per path for delta-affected paths only (window over the
-    affected slice; the untouched bulk passes through an anti
-    restriction — a broadcast anti-join, zero shuffle, for a bounded
-    affected set)."""
+    recomputed for delta-affected paths only (merge.fold_versions; the
+    untouched bulk passes through an anti restriction — a broadcast
+    anti-join, zero shuffle, for a bounded affected set)."""
     return _reconciled(spark, out)[0]
 
 
@@ -125,9 +130,7 @@ def reconciled_triples(spark: SparkSession, out: str) -> DataFrame:
     inf, affected = _reconciled(spark, out)
     if affected is None:
         return base
-    touched_docs = restrict(inf, "path", affected)
-    untouched = restrict(base, "s", affected, anti=True)
-    return untouched.unionByName(triples_of(touched_docs).select(*base.columns))
+    return rederive_triples(base, inf, affected)
 
 
 _WATERMARK = "_WATERMARK.json"
@@ -170,20 +173,16 @@ def write_batch(spark: SparkSession, out: str, commands: DataFrame) -> int:
         apply_commands) and appended; no untouched row is ever read,
         rewritten, or flag-flipped (read-side reconciliation recomputes
         `current`, compaction makes it durable)."""
-    from cm_well_spark.operators.merge import decorate_versions, merge_versions
-
     inf = reconciled_infotons(spark, out)
     base_max = _read_watermark(out)
     if base_max is None:
         base_max = inf.agg(F.max("index_time").alias("m")).first()["m"] or 0
     versions = merge_versions(inf, commands)
-    new_rows = decorate_versions(versions, base_max + 1)
     # writer's best-known `current`: the last version per path IN THIS
     # BATCH (an O(batch) window). Read-side reconciliation recomputes it
     # against the whole store anyway; carrying the flag keeps the delta
     # files directly usable as a change feed (qstream tails them).
-    w = Window.partitionBy("path").orderBy(F.desc("index_time"))
-    new_rows = new_rows.withColumn("current", F.row_number().over(w) == 1)
+    new_rows = mark_current(decorate_versions(versions, base_max + 1))
     n = len(_delta_batches(out, _INF_DELTA))
     target = os.path.join(out, _INF_DELTA, f"batch={n}")
     new_rows.write.mode("overwrite").parquet(target)
@@ -249,9 +248,10 @@ def compact(
 
     inf_tmp = os.path.join(out, "infotons__compacting")
     tri_tmp = os.path.join(out, "triples__compacting")
+    # each sort leads with the partition column (lakehouse.materialize)
     (
         inf.repartitionByRange(n_inf, "path", "index_time")
-        .sortWithinPartitions("path", "index_time")
+        .sortWithinPartitions("kind", "path", "index_time")
         .write.mode("overwrite")
         .partitionBy("kind")
         .parquet(inf_tmp)
@@ -263,14 +263,8 @@ def compact(
         .partitionBy("p")
         .parquet(tri_tmp)
     )
-    for name, tmp in (("infotons", inf_tmp), ("triples", tri_tmp)):
-        final = os.path.join(out, name)
-        old = os.path.join(out, f"{name}__old")
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(final, old)
-        os.rename(tmp, final)
-        shutil.rmtree(old)
+    swap_in(inf_tmp, os.path.join(out, "infotons"))
+    swap_in(tri_tmp, os.path.join(out, "triples"))
     for name in (_INF_DELTA, _TRI_DELTA):
         d = os.path.join(out, name)
         if os.path.isdir(d):
@@ -298,16 +292,9 @@ def compact(
     # stamp the range-clustered layout: the gate that lets the NEXT
     # compact take the incremental file-level path
     _write_compacted_marker(out)
-
-    def _n_files(table: str) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(os.path.join(out, table)):
-            total += sum(1 for f in files if f.endswith(".parquet"))
-        return total
-
     return {
-        "infoton_files": _n_files("infotons"),
-        "triple_files": _n_files("triples"),
+        "infoton_files": len(_table_rel_files(os.path.join(out, "infotons"))),
+        "triple_files": len(_table_rel_files(os.path.join(out, "triples"))),
         "folded_batches": len(batches),
         "mode": "full",
     }
@@ -323,8 +310,8 @@ def compact_deltas(spark: SparkSession, out: str) -> dict:
 
     Rows are preserved exactly (a qstream tail consumer sees the same
     change rows, renumbered into batch=0); the writer-side `current`
-    hint is recomputed across the merged rows with the same window
-    write_batch uses, so the combined batch keeps the
+    hint is recomputed across the merged rows with the same
+    mark_current write_batch uses, so the combined batch keeps the
     one-current-per-path invariant within itself. The fold lands in a
     fresh directory and swaps in by atomic rename — readers see the old
     delta set or the new, never a mix.
@@ -333,10 +320,8 @@ def compact_deltas(spark: SparkSession, out: str) -> dict:
     batches = _delta_batches(out, _INF_DELTA)
     if len(batches) <= 1:
         return {"folded_batches": 0, "rows": 0}
-    deltas = read_stored(spark, "infotons", *batches)
-    w = Window.partitionBy("path").orderBy(F.desc("index_time"))
-    merged = deltas.withColumn("current", F.row_number().over(w) == 1)
-    # the window keeps every row, so the footers' row counts are exact
+    merged = mark_current(read_stored(spark, "infotons", *batches))
+    # mark_current keeps every row, so the footers' row counts are exact
     n_rows = sum(n for b in batches for _f, _lo, _hi, n in _file_col_ranges(b, "path")[""])
     tmp_root = os.path.join(out, f"{_INF_DELTA}__compacting")
     if os.path.exists(tmp_root):
@@ -344,13 +329,7 @@ def compact_deltas(spark: SparkSession, out: str) -> dict:
     merged.sortWithinPartitions("path", "index_time").write.mode("overwrite").parquet(
         os.path.join(tmp_root, "batch=0")
     )
-    old_root = os.path.join(out, _INF_DELTA)
-    retired = os.path.join(out, f"{_INF_DELTA}__old")
-    if os.path.exists(retired):
-        shutil.rmtree(retired)
-    os.rename(old_root, retired)
-    os.rename(tmp_root, old_root)
-    shutil.rmtree(retired)
+    swap_in(tmp_root, os.path.join(out, _INF_DELTA))
     forget(spark, out)
     return {"folded_batches": len(batches), "rows": int(n_rows)}
 
@@ -458,7 +437,9 @@ def _write_buckets(
     part_by = ([part_col] if part_col else []) + ["__bid"]
     (
         df.repartition(max(1, n_bids), "__bid")
-        .sortWithinPartitions("__bid", *sort_keys)
+        # led by the partition columns, or the write's own sort on them
+        # replaces this one (lakehouse.materialize)
+        .sortWithinPartitions(*part_by, *sort_keys)
         .write.mode("overwrite")
         .option("maxRecordsPerFile", target_rows_per_file)
         .partitionBy(*part_by)
@@ -499,12 +480,7 @@ def _assemble(table_dir: str, tmp: str, staging: str, keep: dict[str, list[str]]
                 )
                 os.rename(os.path.join(root, f), os.path.join(d, f"bid{bid}-{f}"))
                 n += 1
-    old = table_dir + "__old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(table_dir, old)
-    os.rename(staging, table_dir)
-    shutil.rmtree(old)
+    swap_in(staging, table_dir)
     return n
 
 
@@ -700,8 +676,6 @@ def compact_incremental(
     makes the `current` recompute exact: ALL versions of a path live in
     the one file whose range contains it, so affected files + deltas
     contain every version of every affected path."""
-    import bisect
-
     inf_dir = os.path.join(out, "infotons")
     tri_dir = os.path.join(out, "triples")
     if not (
@@ -725,35 +699,19 @@ def compact_incremental(
     # kinds that only exist in the deltas need open intervals of their own
     delta_kinds = {r["kind"] for r in deltas.select("kind").distinct().collect()}
 
-    def rewrite(base_slice, aff_paths_df):
-        # `current` recompute is scoped to AFFECTED paths only: their
-        # version closure is provably inside the slice (every file
-        # containing any version of an affected path is itself affected,
-        # checked per kind dir). A non-affected path that merely shares a
-        # file with an affected one may have versions elsewhere — e.g.
-        # its tombstone in the kind=DeletedInfoton dir — so its stored
-        # flags pass through untouched (r10 parity-test catch: the
-        # blanket window flipped a deleted path's old object version
-        # back to current).
-        merged = base_slice.unionByName(
-            deltas.select(*base_slice.columns), allowMissingColumns=False
-        )
-        w = Window.partitionBy("path").orderBy(F.desc("index_time"))
-        return (
-            merged.withColumn("__rc", F.row_number().over(w) == 1)
-            .join(aff_paths_df, F.col("path") == F.col("__ap"), "left")
-            .withColumn(
-                "current",
-                F.when(F.col("__ap").isNotNull(), F.col("__rc")).otherwise(F.col("current")),
-            )
-            .drop("__ap", "__rc")
-        )
-
+    # `current` is recomputed for AFFECTED paths only: their version
+    # closure is provably inside the slice (every file containing any
+    # version of an affected path is itself affected, checked per kind
+    # dir). A non-affected path that merely shares a file with an
+    # affected one may have versions elsewhere — e.g. its tombstone in
+    # the kind=DeletedInfoton dir — so its stored flags pass through (r10
+    # parity-test catch: a blanket window flipped a deleted path's old
+    # object version back to current). Every delta path is affected.
     r = _surgical_fold(
         spark,
         out,
         aff_paths,
-        rewrite,
+        lambda s: fold_versions(s, deltas, aff_paths),
         extra_kinds=delta_kinds,
         target_rows_per_file=target_rows_per_file,
         max_affected_fraction=_INCR_MAX_AFFECTED_FRACTION,
@@ -785,17 +743,17 @@ def _surgical_fold(
 ) -> dict | None:
     """File-level surgery shared by compact_incremental and repair_paths:
     rewrite ONLY the base files whose key ranges the affected paths
-    touch, hardlinking everything else. `rewrite_inf(base_slice,
-    aff_paths_df)` transforms the affected infoton slice (rows of
-    NON-affected paths must pass through unchanged); the affected
-    subjects' triples are re-derived from its output. Returns the result
-    dict, or None when a precondition fails (overlapping file ranges,
-    affected fraction above the gate, oversized (p, o) set)."""
+    touch, hardlinking everything else. `rewrite_inf(base_slice)`
+    transforms the affected infoton slice: rows of NON-affected paths
+    must pass through unchanged, which fold_versions and
+    fix.repair_versions do when given `aff_paths` as their key set. The
+    affected subjects' triples are re-derived from its output. Returns
+    the result dict, or None when a precondition fails (overlapping file
+    ranges, affected fraction above the gate, oversized (p, o) set)."""
     import bisect
 
     inf_dir = os.path.join(out, "infotons")
     tri_dir = os.path.join(out, "triples")
-    aff_paths_df = local_frame(spark, [(p,) for p in aff_paths], "__ap STRING")
 
     # ---- infotons: footer-stat overlap on the leading sort key --------
     inf_ranges = _file_col_ranges(inf_dir, "path")
@@ -861,7 +819,7 @@ def _surgical_fold(
         if inf_base_slice_files
         else local_frame(spark, [], stored_schema(spark, "infotons"))
     )
-    rewritten_inf = rewrite_inf(base_slice, aff_paths_df)
+    rewritten_inf = rewrite_inf(base_slice)
     touched_docs = restrict(rewritten_inf, "path", aff_paths)
     new_tri = triples_of(touched_docs).select(*tri_base.columns)
     po_rows = (
@@ -921,7 +879,7 @@ def _surgical_fold(
         (F.col("kind") == F.col("__pv"))
         & (F.col("path") >= F.col("__lo"))
         & (F.col("__hi").isNull() | (F.col("path") < F.col("__hi"))),
-    ).drop("__pv", "__lo", "__hi", "__ap")
+    ).drop("__pv", "__lo", "__hi")
     inf_tmp = os.path.join(out, "infotons__increment")
     if os.path.exists(inf_tmp):
         shutil.rmtree(inf_tmp)
@@ -1066,35 +1024,13 @@ def repair_paths(
         raise ValueError(f"path set exceeds the {keyset.BROADCAST_MAX}-path surgery cap")
     aff_paths = sorted(set(paths))
 
-    def rewrite(base_slice, aff_paths_df):
-        marked = base_slice.join(
-            aff_paths_df, F.col("path") == F.col("__ap"), "left"
-        )
-        # duplicate-version collapse, AFFECTED paths only (prefer the row
-        # already flagged current, then the deterministic uuid tiebreak)
-        w_dup = Window.partitionBy("path", "uuid").orderBy(
-            F.desc("current"), F.desc("index_time")
-        )
-        deduped = (
-            marked.withColumn("__dn", F.row_number().over(w_dup))
-            .where(F.col("__ap").isNull() | (F.col("__dn") == 1))
-            .drop("__dn")
-        )
-        w_cur = Window.partitionBy("path").orderBy(F.desc("index_time"), F.desc("uuid"))
-        return (
-            deduped.withColumn("__rc", F.row_number().over(w_cur) == 1)
-            .withColumn(
-                "current",
-                F.when(F.col("__ap").isNotNull(), F.col("__rc")).otherwise(F.col("current")),
-            )
-            .drop("__ap", "__rc")
-        )
+    from cm_well_spark.operators.fix import repair_versions  # fix imports this module
 
     r = _surgical_fold(
         spark,
         out,
         aff_paths,
-        rewrite,
+        lambda s: repair_versions(s, aff_paths),
         target_rows_per_file=target_rows_per_file,
         max_affected_fraction=None,  # a repair must run however wide the damage
     )

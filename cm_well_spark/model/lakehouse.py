@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,7 +30,7 @@ from pyspark.sql.types import StructType
 
 from cm_well_spark.model.builder import build_infotons
 from cm_well_spark.model.schema import INFOTON_SCHEMA, stored
-from cm_well_spark.plans.keyset import local_frame
+from cm_well_spark.plans.keyset import local_frame, restrict
 
 #: the checkout holding the package; default home of the store and of
 #: registry checkpoint dirs
@@ -86,6 +87,19 @@ def triples_of(infotons: DataFrame) -> DataFrame:
         "current",
         "kind",
     )
+
+
+def rederive_triples(triples: DataFrame, docs: DataFrame, keys: Iterable | DataFrame) -> DataFrame:
+    """The EAV table after the doc table changed for the subjects in
+    `keys`: their rows are re-exploded from `docs` (new versions and
+    recomputed `current` flags alike), every other subject's rows pass
+    through an anti restriction. `keys` is anything keyset.restrict
+    takes; the triples counterpart of merge.fold_versions. It serves the
+    merge-on-read view and the index half of x-fix, which re-indexes
+    missing rows and purges ghosts in one stroke (the purgeNotFound +
+    reindex arms of fixWith, Operations.scala:200-240)."""
+    kept = restrict(triples, "s", keys, anti=True)
+    return kept.unionByName(triples_of(restrict(docs, "path", keys)).select(*triples.columns))
 
 
 #: each store table's stored schema, derived once per process from
@@ -231,6 +245,18 @@ def _read_stats_fingerprint(out: str) -> str | None:
         return json.load(fh).get("store")
 
 
+def swap_in(tmp: str, final: str) -> None:
+    """Replace directory `final` by `tmp` with two renames, so a reader
+    lists the old directory or the new one, never a mix; the old one is
+    parked at `final__old` in between and then removed."""
+    old = final + "__old"
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    os.rename(final, old)
+    os.rename(tmp, final)
+    shutil.rmtree(old)
+
+
 def merge_predicate_stats(
     spark: SparkSession,
     out: str,
@@ -283,12 +309,7 @@ def merge_predicate_stats(
         )
     tmp = stats_path + "__staging"
     merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    old = stats_path + "__old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(stats_path, old)
-    os.rename(tmp, stats_path)
-    shutil.rmtree(old)
+    swap_in(tmp, stats_path)
     spark.catalog.refreshByPath(stats_path)
     _write_stats_staleness(out, _read_stats_staleness(out) + churn)
     _write_stats_fingerprint(out)
@@ -322,13 +343,18 @@ def materialize(spark: SparkSession, sf_dir: str, root: str | None = None, force
     # skewed ranges; repartitioning the BUILT rows measured ~40 s of
     # pure exchange on the triples side alone.)
     #
+    # Each sort leads with the write's partition column: a partitionBy
+    # write plans its own local sort on that column, and the optimizer
+    # then drops an earlier sortWithinPartitions that does not start with
+    # it — a bare "path" sort left most doc files unsorted.
+    #
     # Driver side, the build is SQL text: one `selectExpr` per kind and
     # one over their union (about 350-550 py4j calls for the whole store);
     # the same projection built from Column calls took about 26,000 and
     # 8-16 s of a cold 4-core driver before the write's first task started.
     inf = build_infotons(spark, sf_dir)
     (
-        inf.sortWithinPartitions("path")
+        inf.sortWithinPartitions("kind", "path")
         .write.mode("overwrite")
         .partitionBy("kind")
         .parquet(os.path.join(out, "infotons"))

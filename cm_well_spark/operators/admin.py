@@ -9,6 +9,7 @@ import uuid as _uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from cm_well_spark.operators.merge import fold_versions
 from cm_well_spark.plans.iterative import iter_checkpoint, iter_checkpoint_lazy
 from cm_well_spark.plans.keyset import restrict
 
@@ -23,14 +24,7 @@ def overwrite(infotons: DataFrame, version_rows: DataFrame) -> DataFrame:
     index_time, histories included), NO merge — the inter-DC sync write
     path (InputHandler.scala:131; CRUDServiceFS.putOverwrites:301). The
     only computed bit is the current-flag flip per affected path."""
-    affected = version_rows.select("path").distinct()
-    untouched = restrict(infotons, "path", affected, anti=True)
-    touched = restrict(infotons, "path", affected).unionByName(
-        version_rows.select(*infotons.columns)
-    )
-    w = Window.partitionBy("path").orderBy(F.desc("index_time"))
-    touched = touched.withColumn("current", F.row_number().over(w) == 1)
-    return untouched.unionByName(touched)
+    return fold_versions(infotons, version_rows, version_rows.select("path").distinct())
 
 
 # ---------------------------------------------------------------------------

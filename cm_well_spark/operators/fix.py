@@ -15,13 +15,14 @@ The checks and repairs translate one-to-one:
   uuid indexed in >1 ES index        | duplicate (path, uuid) version
   (verify:77, purge keeps one)       | rows -> collapse to one
   >1 `current` among versions        | same flag on the doc table
-  (verify:95)                        | -> recompute, latest wins
+  (verify:95)                        | -> merge.mark_current: the
+                                     | highest (index_time, uuid) wins
   ES size != Cas size / uuid missing | triples missing for a version /
   from either side (verify:96-97,    | ghost triples whose version is
   fixWith purge/reindex arms)        | gone -> re-derive from docs
 
-`verify_paths` is the read-only report; `repair_versions` /
-`repair_derived_triples` are the DataFrame-level repair (pure,
+`verify_paths` is the read-only report; `repair_versions` and
+`lakehouse.rederive_triples` are the DataFrame-level repair (pure,
 oracle-checkable); `repair_store_paths` (model/compaction.py:
 repair_paths) applies the same repair to a materialized store by
 file-level surgery — O(affected files), never O(store).
@@ -34,6 +35,7 @@ from pyspark.sql import functions as F
 
 from cm_well_spark.model.compaction import repair_paths as repair_store_paths  # noqa: F401
 from cm_well_spark.model.lakehouse import triples_of
+from cm_well_spark.operators.merge import mark_current
 from cm_well_spark.plans.keyset import restrict
 
 
@@ -100,17 +102,5 @@ def repair_versions(infotons: DataFrame, paths: list[str] | None = None) -> Data
         .where(F.col("__dn") == 1)
         .drop("__dn")
     )
-    w_cur = Window.partitionBy("path").orderBy(F.desc("index_time"), F.desc("uuid"))
-    return deduped.withColumn("current", F.row_number().over(w_cur) == 1)
+    return mark_current(deduped)
 
-
-def repair_derived_triples(
-    repaired_infotons: DataFrame, triples: DataFrame, paths: list[str]
-) -> DataFrame:
-    """The index half of x-fix: the audited subjects' rows are replaced
-    wholesale by re-derivation from the repaired docs — re-indexing
-    missing rows and purging ghosts in one stroke (the purgeNotFound +
-    reindex arms of fixWith, Operations.scala:200-240)."""
-    kept = restrict(triples, "s", paths, anti=True)
-    rederived = triples_of(restrict(repaired_infotons, "path", paths)).select(*triples.columns)
-    return kept.unionByName(rederived)

@@ -44,10 +44,11 @@ writer like the reference assigns it at index time (SURVEY §3.4).
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Iterable
 from datetime import datetime
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -325,10 +326,7 @@ def decorate_versions(versions: DataFrame, index_time_base: int | Column) -> Dat
     constants. Shared by apply_commands (in-memory full-table update) and
     the lakehouse delta writer (model/compaction.write_batch), so the two
     write paths can never drift. `current` is left False — the caller
-    flips it (window for the full table, or read-side reconciliation for
-    deltas)."""
-    from pyspark.sql import Window
-
+    sets it through mark_current or fold_versions."""
     w_seq = F.row_number().over(Window.partitionBy("path").orderBy("seq"))
     base = index_time_base if isinstance(index_time_base, Column) else F.lit(index_time_base)
     return (
@@ -364,6 +362,30 @@ def decorate_versions(versions: DataFrame, index_time_base: int | Column) -> Dat
     )
 
 
+def mark_current(versions: DataFrame) -> DataFrame:
+    """Set `current` on the latest version of each path: the highest
+    (index_time, uuid) row, i.e. the last row of the change feed's total
+    order (operators/consume.next_chunk). Tombstones count as versions;
+    the search visibility filter excludes DeletedInfoton separately
+    (FTSService.scala:850-854). This is the one window that decides the
+    flag — the reference flips `system.current` in ES when it indexes a
+    newer version (IndexerStream.scala:100-137)."""
+    w = Window.partitionBy("path").orderBy(F.desc("index_time"), F.desc("uuid"))
+    return versions.withColumn("current", F.row_number().over(w) == 1)
+
+
+def fold_versions(table: DataFrame, new_rows: DataFrame, keys: Iterable | DataFrame) -> DataFrame:
+    """Append `new_rows` to a versioned doc table and recompute `current`
+    for the paths in `keys` only (every path of `new_rows` must be one of
+    them): their versions are mark_current'ed together, every other row
+    passes through an anti restriction with its stored flag. `keys` is
+    anything keyset.restrict takes, and the same object backs both
+    restrictions, so a bound it carries picks both routes."""
+    untouched = restrict(table, "path", keys, anti=True)
+    touched = restrict(table, "path", keys).unionByName(new_rows.select(*table.columns))
+    return untouched.unionByName(mark_current(touched))
+
+
 def apply_commands(infotons: DataFrame, commands: DataFrame, index_time_base: int | None = None) -> DataFrame:
     """Full write-path batch: returns the UPDATED infoton table (old
     versions kept with current=False, new versions appended; only the last
@@ -393,8 +415,6 @@ def apply_commands(infotons: DataFrame, commands: DataFrame, index_time_base: in
     new_rows = decorate_versions(versions, index_time_base)
     if "__itb" in new_rows.columns:
         new_rows = new_rows.drop("__itb")
-    from pyspark.sql import Window
-
     # Affected paths come from COMMANDS, not from the merged versions:
     # merge_versions' output paths are a subset of the command paths, so
     # this is the same path set for routing purposes — but deriving it
@@ -402,17 +422,6 @@ def apply_commands(infotons: DataFrame, commands: DataFrame, index_time_base: in
     # in the physical plan (anti-join build, semi-join build, new_rows),
     # re-running the whole merge per reference. Commands-derived routing
     # keeps the fold at exactly one evaluation. A no-op command's path
-    # now routes through the current-flip window instead of the untouched
-    # branch; the window recomputes the identical flag (one current =
-    # latest index_time), so the output is row-identical.
-    # Only affected paths pay the current-flip window; the untouched bulk
-    # of the table passes through untouched.
-    untouched = restrict(infotons, "path", paths, anti=True)
-    touched_old = restrict(infotons, "path", paths)
-    touched = touched_old.unionByName(new_rows.select(*infotons.columns))
-    w = Window.partitionBy("path").orderBy(F.desc("index_time"))
-    # current marks the latest version per path — tombstones included; the
-    # search visibility filter excludes DeletedInfoton separately
-    # (FTSService.scala:850-854).
-    touched = touched.withColumn("current", F.row_number().over(w) == 1)
-    return untouched.unionByName(touched)
+    # now routes through mark_current instead of the untouched branch;
+    # it recomputes the identical flag, so the output is row-identical.
+    return fold_versions(infotons, new_rows, paths)

@@ -1,4 +1,5 @@
 import pytest
+from conftest import jobs_in
 from pyspark.sql import functions as F
 
 from cm_well_spark.operators.aggregations import AggregationError, aggregate, card_exact
@@ -221,19 +222,18 @@ def test_guard_text_answers_from_stats_without_job(spark, infotons, triples, sf_
 
     stats = load_predicate_stats(spark, sf_dir)
     assert stats["acctbal"]["vtypes"] == ["w"]
-    sc = spark.sparkContext
-    sc.setJobGroup("guard_probe_test", "stats-only guard")
-    try:
+
+    def probe():
         vt = _guard_text(
             infotons, AggField("acctbal", True), need_numeric=True, triples=triples, stats=stats
         )
         with pytest.raises(AggregationError, match="fielddata disabled"):
             _guard_text(infotons, AggField("name", False), triples=triples, stats=stats)
-        jobs = sc.statusTracker().getJobIdsForGroup("guard_probe_test")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        return vt
+
+    vt, jobs = jobs_in(spark, probe)
     assert vt == "w"
-    assert list(jobs) == []  # both answers came from stats alone
+    assert jobs == []  # both answers came from stats alone
 
 
 def test_hist_extended_bounds_in_plan(infotons, triples, spark, sf_dir):

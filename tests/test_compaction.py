@@ -14,6 +14,7 @@ import shutil
 from datetime import datetime
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import functions as F
 
 SF_DIR = os.environ.get("CMW_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -472,6 +473,49 @@ def _path_spans_disjoint(table_dir):
             assert h1 <= l2, f"overlapping {col} ranges in {sub}: {h1!r} > {l2!r}"
 
 
+def _unsorted_doc_files(inf_dir):
+    """The doc-table files whose rows are not in path order."""
+    import pyarrow.parquet as pq
+
+    bad = []
+    for root, _dirs, files in os.walk(inf_dir):
+        for f in files:
+            if f.endswith(".parquet"):
+                col = pq.read_table(os.path.join(root, f), columns=["path"]).column("path")
+                paths = col.to_pylist()
+                if paths != sorted(paths):
+                    bad.append(os.path.relpath(os.path.join(root, f), inf_dir))
+    return bad
+
+
+def test_every_doc_file_is_path_sorted(spark, tmp_path_factory):
+    """Row groups skip on path min-max only if each file is path-sorted.
+    A partitionBy("kind") write adds its own local sort on kind and drops
+    a sortWithinPartitions that does not lead with it, so every doc-table
+    write leads its sort with the partition columns: ingest, the full
+    compact's range shuffle and the incremental fold's bucket write."""
+    from cm_well_spark.model.compaction import compact, write_batch
+    from cm_well_spark.model.lakehouse import materialize
+
+    dst = str(tmp_path_factory.mktemp("sorted") / "store")
+    shutil.copytree(materialize(spark, SF_DIR), dst)
+    inf_dir = os.path.join(dst, "infotons")
+    assert _unsorted_doc_files(inf_dir) == []
+
+    assert compact(spark, dst, target_rows_per_file=2_000, mode="full")["mode"] == "full"
+    assert _unsorted_doc_files(inf_dir) == []
+
+    lm = datetime(2024, 9, 1)
+    rows = [
+        (p, 1, "write", {"extra": [_sfv("sorted")]}, None, lm, "https")
+        for p in ("/tpch/region/3", "/tpch/nation/12", "/tpch/part/99", "/tpch/zzz/sorted")
+    ]
+    write_batch(spark, dst, _cmds(spark, rows))
+    assert compact(spark, dst, target_rows_per_file=2_000)["mode"] == "incremental"
+    assert _unsorted_doc_files(inf_dir) == []
+    _path_spans_disjoint(inf_dir)
+
+
 def test_incremental_compact_parity_layout_and_bounded_rewrite(spark, tmp_path_factory):
     """VERDICT r9 item 7: after a full compact has stamped the
     range-clustered layout, the next compact takes the FILE-LEVEL
@@ -792,18 +836,6 @@ def pristine(spark, tmp_path):
     return dst
 
 
-def _jobs_in(spark, fn):
-    """(fn's result, ids of the Spark jobs it fired)."""
-    sc = spark.sparkContext
-    group = f"jobs_in_{id(fn)}"
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-        return result, sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
 def _row_hashes(df):
     return sorted(r[0] for r in df.select(F.md5(F.to_json(F.struct(*df.columns)))).collect())
 
@@ -864,7 +896,7 @@ def test_building_a_view_with_pending_deltas_fires_no_job(spark, pristine):
     paths = compaction._delta_paths(read_stored(spark, "infotons", *batches), batches)
     assert proven_path_bound(paths) == 4
 
-    (inf, tri), jobs = _jobs_in(
+    (inf, tri), jobs = jobs_in(
         spark, lambda: (compaction.reconciled_infotons(spark, pristine), compaction.reconciled_triples(spark, pristine))
     )
     assert jobs == []
@@ -895,7 +927,7 @@ def test_delta_without_path_statistics_takes_the_counted_route(spark, pristine, 
     assert sorted(deltas.columns) == sorted(spark.read.parquet(*batches).columns)
     assert proven_path_bound(compaction._delta_paths(deltas, batches)) is None
 
-    (inf, tri), jobs = _jobs_in(
+    (inf, tri), jobs = jobs_in(
         spark, lambda: (compaction.reconciled_infotons(spark, pristine), compaction.reconciled_triples(spark, pristine))
     )
     assert jobs  # the affected paths were counted
@@ -937,6 +969,6 @@ def test_compact_deltas_takes_its_row_count_from_footers(spark, pristine):
             ("/tpch/region/4", 1, "write", {"extra": [_sfv(f"c{i}")]}, None, lm, "https"),
         ]))
     rows = read_stored(spark, "infotons", *compaction._delta_batches(pristine, compaction._INF_DELTA)).count()
-    res, jobs = _jobs_in(spark, lambda: compaction.compact_deltas(spark, pristine))
+    res, jobs = jobs_in(spark, lambda: compaction.compact_deltas(spark, pristine))
     assert res == {"folded_batches": 3, "rows": rows}
     assert len(jobs) <= 2

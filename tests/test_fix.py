@@ -166,7 +166,7 @@ def test_repair_paths_preconditions(spark, tmp_path_factory):
 
 
 def test_repair_versions_dataframe_level(spark):
-    from cm_well_spark.operators.fix import repair_derived_triples, repair_versions
+    from cm_well_spark.operators.fix import repair_versions
 
     rows = [
         ("/a", "u1", 10, True),   # stale current

@@ -10,6 +10,7 @@ from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import functions as F
 
 from cm_well_spark.plans import keyset
@@ -77,13 +78,7 @@ def test_counted_bound_costs_one_job(spark, table):
     """Counting a key frame is one job: it saves the checkpoint while it
     observes the count and range, and the restriction runs nothing."""
     keys = spark.createDataFrame([("/k/005",), ("/k/007",)], "p string")
-    sc = spark.sparkContext
-    sc.setJobGroup("keyset_count_test", "counted key frame")
-    try:
-        semi = restrict(table, "path", keys)
-        jobs = sc.statusTracker().getJobIdsForGroup("keyset_count_test")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    semi, jobs = jobs_in(spark, lambda: restrict(table, "path", keys))
     assert len(jobs) == 1
     assert proven_path_bound(keys) == 2
     assert [r["v"] for r in semi.orderBy("v").collect()] == [5, 7]

@@ -396,3 +396,117 @@ def test_top_level_path_hierarchy(spark):
     assert out["/toplevel"]["parent"] == "/"
     assert list(out["/toplevel"]["parent_hierarchy"]) == ["/"]
     assert list(out["/a/b/c"]["parent_hierarchy"]) == ["/", "/a", "/a/b"]
+
+
+# ---- the one version fold ------------------------------------------------
+
+
+def test_equal_index_time_marks_the_higher_uuid_current(spark, tmp_path):
+    """Two versions of a path at one index_time: every writer and view
+    marks the higher uuid current, the last row of the change feed's
+    (index_time, uuid) order. /tie/new gains the higher uuid, /tie/old
+    keeps it; /tie/other is outside the key set and keeps its stale
+    flags."""
+    import os
+
+    from cm_well_spark.model.compaction import reconciled_infotons
+    from cm_well_spark.model.lakehouse import stored_schema
+    from cm_well_spark.operators.admin import overwrite
+    from cm_well_spark.operators.fix import repair_versions
+    from cm_well_spark.operators.merge import fold_versions
+
+    schema = stored_schema(spark, "infotons")
+
+    def versions(rows):
+        cols = schema.fieldNames()
+        return spark.createDataFrame(
+            [
+                tuple({"path": p, "uuid": u, "kind": "ObjectInfoton", "index_time": 7, "current": c}.get(f) for f in cols)
+                for p, u, c in rows
+            ],
+            schema,
+        )
+
+    base = versions([("/tie/new", "u1", True), ("/tie/old", "u4", True), ("/tie/other", "u5", True), ("/tie/other", "u6", True)])
+    new = versions([("/tie/new", "u2", False), ("/tie/old", "u3", False)])
+    keys = ["/tie/new", "/tie/old"]
+    want = {
+        ("/tie/new", "u1", False),
+        ("/tie/new", "u2", True),
+        ("/tie/old", "u3", False),
+        ("/tie/old", "u4", True),
+        ("/tie/other", "u5", True),
+        ("/tie/other", "u6", True),
+    }
+
+    def flags(df):
+        return {(r["path"], r["uuid"], r["current"]) for r in df.collect()}
+
+    assert flags(fold_versions(base, new, keys)) == want
+    assert flags(overwrite(base, new)) == want
+    assert flags(repair_versions(base.unionByName(new), keys)) == want
+
+    out = str(tmp_path / "store")
+    base.write.partitionBy("kind").parquet(os.path.join(out, "infotons"))
+    new.write.parquet(os.path.join(out, "infotons_delta", "batch=0"))
+    assert flags(reconciled_infotons(spark, out)) == want
+
+
+def _current_windows(tree):
+    """(line, enclosing function) of every row_number() window over
+    partitionBy("path") whose leading order key is index_time: the
+    shape of a hand-written `current` recompute."""
+    import ast
+
+    def is_current_window(node):
+        calls = [n for n in ast.walk(node) if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)]
+        by_path = any(
+            c.func.attr == "partitionBy" and [ast.unparse(a) for a in c.args] == ["'path'"] for c in calls
+        )
+        by_time = any(c.func.attr == "orderBy" and c.args and "'index_time'" in ast.unparse(c.args[0]) for c in calls)
+        return by_path and by_time
+
+    found = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        bound = {
+            t.id: n.value
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Assign)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in ast.walk(fn):
+            if not (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "over"
+                and ast.unparse(n.func.value) == "F.row_number()"
+                and n.args
+            ):
+                continue
+            w = n.args[0]
+            w = bound.get(w.id, w) if isinstance(w, ast.Name) else w
+            if is_current_window(w):
+                found.add((n.lineno, fn.name))
+    return found
+
+
+def test_current_is_set_by_one_window():
+    """merge.mark_current is the only window that decides `current`;
+    every other site calls it (or fold_versions). Other per-path windows
+    — decorate_versions' seq numbering, snapshot_at's last_modified
+    head — order by something else first and are not flagged."""
+    import ast
+    from pathlib import Path
+
+    import cm_well_spark
+
+    root = Path(cm_well_spark.__file__).parent
+    found = {
+        (path.relative_to(root).as_posix(), fn)
+        for path in sorted(root.rglob("*.py"))
+        for _line, fn in _current_windows(ast.parse(path.read_text()))
+    }
+    assert found == {("operators/merge.py", "mark_current")}

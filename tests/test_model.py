@@ -2,6 +2,7 @@ import hashlib
 import os
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import functions as F
 
 # Order-insensitive hash of every row build_infotons makes: md5 over the
@@ -101,20 +102,10 @@ def test_build_is_a_few_jvm_calls(spark, sf_dir, monkeypatch):
     assert len(calls) <= 1000
 
 
-def _jobs_fired(spark, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup("model_jobs_test", "model jobs")
-    try:
-        fn()
-        return len(sc.statusTracker().getJobIdsForGroup("model_jobs_test"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
 def test_raw_tables_read_with_their_declared_schemas(spark, sf_dir):
     from cm_well_spark.sources import tables as tbl
 
-    assert _jobs_fired(spark, lambda: tbl.load(spark, sf_dir)) == 0
+    assert jobs_in(spark, lambda: tbl.load(spark, sf_dir))[1] == []
     for name in tbl.TABLES:
         inferred = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
         assert tbl.load_table(spark, sf_dir, name).schema == inferred, name
@@ -127,7 +118,7 @@ def test_stored_schemas_are_what_the_store_reads_back(spark, sf_dir):
     for table in ("infotons", "triples", "predicate_stats"):
         path = os.path.join(out, table)
         assert stored_schema(spark, table) == spark.read.parquet(path).schema, table
-        assert _jobs_fired(spark, lambda p=path, t=table: read_stored(spark, t, p)) == 0, table
+        assert jobs_in(spark, lambda p=path, t=table: read_stored(spark, t, p))[1] == [], table
 
 
 def test_rebuilt_store_serves_fresh_frames(spark, sf_dir, tmp_path, monkeypatch):

@@ -7,11 +7,11 @@ compared by hash against a route that deduplicates every key frame."""
 
 from __future__ import annotations
 
-import itertools
 import shutil
 from datetime import datetime
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -31,21 +31,6 @@ def stats(spark, sf_dir):
     st = load_predicate_stats(spark, sf_dir)
     assert st is not None
     return st
-
-
-_groups = itertools.count()
-
-
-def _jobs(spark, fn) -> int:
-    """Number of Spark jobs `fn` fires."""
-    sc = spark.sparkContext
-    group = f"semi_keys_{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def _noop(df) -> None:
@@ -68,7 +53,7 @@ def test_two_predicate_search_fires_at_most_three_jobs(spark, infotons, triples,
         infotons, qp="rdfType::Customer,mktsegment::BUILDING", sort_by="path", length=10_000,
         triples=triples, stats=stats,
     )
-    assert _jobs(spark, lambda: _noop(df)) <= 3
+    assert len(jobs_in(spark, lambda: _noop(df))[1]) <= 3
 
 
 def test_two_level_expand_out_fires_at_most_ten_jobs(spark, infotons, triples, stats):
@@ -76,7 +61,7 @@ def test_two_level_expand_out_fires_at_most_ten_jobs(spark, infotons, triples, s
         seeds = search(infotons, qp="rdfType::Customer,custkey<20", length=None, triples=triples, stats=stats)
         _noop(traversal.expand_out(infotons, seeds, "inNation>ofRegion", triples=triples, stats=stats))
 
-    assert _jobs(spark, run) <= 10
+    assert len(jobs_in(spark, run)[1]) <= 10
 
 
 def test_min_doc_count_one_hist_fires_at_most_four_jobs(spark, infotons, triples, stats):
@@ -86,7 +71,7 @@ def test_min_doc_count_one_hist_fires_at_most_four_jobs(spark, infotons, triples
         res = aggregate(seeds, ap, triples=triples, stats=stats, universe_types=frozenset({"Part"}))
         _noop(res[0].df)
 
-    assert _jobs(spark, run) <= 4
+    assert len(jobs_in(spark, run)[1]) <= 4
 
 
 # ---- (b) rows -------------------------------------------------------------
